@@ -97,30 +97,43 @@ def read_manifest_list(path: str, format_version: int) -> list[ManifestFile]:
     return out
 
 
+def inherit_from_manifest(record: dict, sequence_number: Optional[int], row_id_cursor: Optional[int]) -> Optional[int]:
+    """Fill a raw manifest entry's inherited fields in place; return the
+    advanced row-id cursor.
+
+    A null ``sequence_number`` / ``file_sequence_number`` is the
+    manifest's (the entry was added in the manifest's own commit). v3
+    row lineage: a data file with null ``first_row_id`` is assigned the
+    manifest's first_row_id plus the cumulative record_count of
+    preceding null-first_row_id data files in the manifest (Iceberg spec
+    "Row Lineage" / "First Row ID Inheritance"); ``row_id_cursor``
+    carries that sum, starting at the manifest's first_row_id.
+    Spec-conformant foreign writers leave the per-file field null and
+    only stamp the manifest-list entry; explicit per-file ids (this
+    repo's writer) never consume inherited space."""
+    if sequence_number is not None:
+        if record.get("sequence_number") is None:
+            record["sequence_number"] = sequence_number
+        if record.get("file_sequence_number") is None:
+            record["file_sequence_number"] = sequence_number
+    df = record["data_file"]
+    if row_id_cursor is not None and df.get("first_row_id") is None and not df.get("content"):
+        df["first_row_id"] = row_id_cursor
+        row_id_cursor += df.get("record_count", 0) or 0
+    return row_id_cursor
+
+
 def read_manifest_entries(path: str, format_version: int, manifest: Optional[ManifestFile] = None) -> list[ManifestEntry]:
     _, records = read_avro_file(path)
     out = []
-    # v3 row-lineage inheritance: a data file with null first_row_id is
-    # assigned the manifest's first_row_id plus the cumulative
-    # record_count of preceding null-first_row_id data files in this
-    # manifest (Iceberg spec "Row Lineage" / "First Row ID
-    # Inheritance"). Spec-conformant foreign writers leave the per-file
-    # field null and only stamp the manifest-list entry; explicit
-    # per-file ids (this repo's writer) never consume inherited space.
+    mseq = manifest.sequence_number if manifest is not None else None
     lineage_cursor = manifest.first_row_id if manifest is not None else None
     for r in records:
+        lineage_cursor = inherit_from_manifest(r, mseq, lineage_cursor)
         df = r["data_file"]
         # v1 entries have no per-file content field -> DATA; for v2 delete
         # manifests the data_file carries content 1 (pos) or 2 (eq).
         content = FileContent(df.get("content", 0) or 0)
-        seq = r.get("sequence_number")
-        if seq is None and manifest is not None:
-            # inherited sequence number (entry written in same commit)
-            seq = manifest.sequence_number
-        frid = df.get("first_row_id")
-        if frid is None and lineage_cursor is not None and content == FileContent.DATA:
-            frid = lineage_cursor
-            lineage_cursor += df.get("record_count", 0) or 0
         out.append(
             ManifestEntry(
                 status=EntryStatus(r["status"]),
@@ -128,7 +141,7 @@ def read_manifest_entries(path: str, format_version: int, manifest: Optional[Man
                 file_path=df["file_path"],
                 file_format=str(df.get("file_format", "PARQUET")),
                 record_count=df.get("record_count", 0) or 0,
-                sequence_number=seq,
+                sequence_number=r.get("sequence_number"),
                 partition=df.get("partition") or {},
                 lower_bounds=_kv(df.get("lower_bounds")),
                 upper_bounds=_kv(df.get("upper_bounds")),
@@ -140,7 +153,7 @@ def read_manifest_entries(path: str, format_version: int, manifest: Optional[Man
                 referenced_data_file=df.get("referenced_data_file"),
                 content_offset=df.get("content_offset"),
                 content_size=df.get("content_size_in_bytes"),
-                first_row_id=frid,
+                first_row_id=df.get("first_row_id"),
             )
         )
     return out

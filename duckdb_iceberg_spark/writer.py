@@ -1,14 +1,19 @@
-"""Native Iceberg v2 write surface, Spark-first.
+"""Native Iceberg v2 and v3 write surface, Spark-first.
 
 The reference extension has **no write path** (SURVEY.md §2A "absent:
 writes" — its test generator shells out to Spark+iceberg-runtime,
 reference ``scripts/test_data_generator/generate_iceberg.py:31-52``).
 This module supplies the write surface the north star requires
 (create/append/DML/DDL + compaction via the DataFrame API), producing
-standard Iceberg v2 table layouts that our own reader
+standard Iceberg v2 or v3 table layouts that our own reader
 (:func:`duckdb_iceberg_spark.iceberg_scan`) and any spec-compliant
 reader can scan: ``metadata/vN.metadata.json`` + ``version-hint.text``,
-Avro manifest lists/manifests, parquet data + positional-delete files.
+Avro manifest lists/manifests, parquet data files, and positional-delete
+parquet (v2) or Puffin deletion vectors (v3).
+
+Every snapshot goes through ``IcebergTable._commit`` and every manifest
+through ``IcebergTable._write_manifest``, so the manifest and snapshot
+format is known in one place.
 
 Scale design:
 - Data and delete rows are written BY SPARK EXECUTORS (``df.write``)
@@ -25,6 +30,8 @@ Scale design:
 
 from __future__ import annotations
 
+import copy
+import itertools
 import json
 import math
 import os
@@ -37,7 +44,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .plans.avro import write_avro_file
+from .plans.avro import read_avro_file, write_avro_file
+from .plans.manifests import inherit_from_manifest
 from .plans.table_metadata import (
     IcebergColumn,
     IcebergSchema,
@@ -115,13 +123,14 @@ def _spark_to_iceberg_type(dt: T.DataType, next_id) -> Any:
     raise ValueError(f"cannot map Spark type {dt} to Iceberg")
 
 
+def _field_ids(last: int):
+    """``next_id`` for :func:`_spark_to_iceberg_type`: hands out the
+    field ids after ``last``."""
+    return itertools.count(last + 1).__next__
+
+
 def _schema_to_json(schema: IcebergSchema) -> dict:
-    counter = [max([c.field_id for c in schema.columns], default=0)]
-
-    def next_id() -> int:
-        counter[0] += 1
-        return counter[0]
-
+    next_id = _field_ids(max([c.field_id for c in schema.columns], default=0))
     fields = []
     for c in schema.columns:
         f: dict[str, Any] = {
@@ -139,12 +148,7 @@ def _schema_to_json(schema: IcebergSchema) -> dict:
 
 
 def _schema_from_df(df: DataFrame) -> IcebergSchema:
-    counter = [len(df.schema.fields)]
-
-    def next_id() -> int:
-        counter[0] += 1
-        return counter[0]
-
+    next_id = _field_ids(len(df.schema.fields))
     cols = []
     for i, f in enumerate(df.schema.fields, start=1):
         _spark_to_iceberg_type(f.dataType, next_id)  # validates + reserves nested ids
@@ -417,13 +421,28 @@ def _new_snapshot_id() -> int:
     return uuid.uuid4().int >> 65  # 63-bit positive
 
 
+def _carried_entries(manifest: dict) -> list[dict]:
+    """Entries of the manifest behind manifest-list record ``manifest``,
+    with what they inherit from it made explicit. A rewritten manifest
+    has its own (newer) sequence number and no row-id space, so an
+    entry that still inherited would get a newer sequence number —
+    older deletes stop applying to it — or lose its ``_row_id``s."""
+    _, entries = read_avro_file(manifest["manifest_path"])
+    cursor = manifest.get("first_row_id")
+    for e in entries:
+        cursor = inherit_from_manifest(e, manifest.get("sequence_number") or 0, cursor)
+    return entries
+
+
 class IcebergTable:
-    """Writable Iceberg v2 table at a filesystem path (hadoop layout).
+    """Writable Iceberg v2 or v3 table at a filesystem path (hadoop layout).
 
     ``create`` → CTAS; then ``append`` / ``delete_where`` /
     ``update_where`` (merge-on-read) / ``add_column`` /
     ``alter_column_type`` / ``rewrite_data_files`` (compaction) /
-    ``expire_snapshots`` / ``remove_orphan_files``.
+    ``rewrite_manifests`` / ``expire_snapshots`` / ``remove_orphan_files``.
+    Every operation that makes a snapshot commits it through
+    :meth:`_commit`.
     """
 
     def __init__(self, spark: SparkSession, path: str, metadata_compression_codec: str = "none"):
@@ -433,6 +452,9 @@ class IcebergTable:
         self.path = abspath(path)
         self.codec = metadata_compression_codec
         self.meta: TableMetadata = load_table_metadata(self.path, metadata_compression_codec=self.codec)
+        # v3 deletion vectors superseded by the DVs the next commit adds:
+        # {(file path as stored, content_offset): record_count}
+        self._pending_superseded: Optional[dict] = None
 
     @property
     def partition_fields(self) -> list[PartitionField]:
@@ -544,7 +566,6 @@ class IcebergTable:
         without rescanning the table. Sequence numbers scope the file
         set; deletes newer than the window still apply to it."""
         from .plans.manifests import load_table_scan
-        from .sources.iceberg import iceberg_scan
 
         lo = self.meta.snapshot_by_id(since_snapshot_id).sequence_number
         snap = (
@@ -558,15 +579,7 @@ class IcebergTable:
             for e in scan.data_files()
             if (e.sequence_number or 0) > lo
         }
-        df = iceberg_scan(
-            self.spark,
-            self.path,
-            snapshot_id=snap.snapshot_id,
-            metadata_compression_codec=self.codec,
-            _keep_position_columns=True,
-        )
-        norm = F.regexp_replace(F.col("__file"), r"^file:/+", "/")
-        return df.where(norm.isin([*new_files])).drop("__file", "__pos")
+        return self._scan_files(snap.snapshot_id, new_files)
 
     def scan_changelog(self, from_snapshot_id: int, to_snapshot_id: Optional[int] = None) -> DataFrame:
         """Net row-level changelog between two snapshots: the current
@@ -589,7 +602,6 @@ class IcebergTable:
         rows cancel.
         """
         from .plans.manifests import load_table_scan
-        from .sources.iceberg import iceberg_scan
 
         old_snap = self.meta.snapshot_by_id(from_snapshot_id)
         new_snap = (
@@ -619,20 +631,8 @@ class IcebergTable:
             common = old_files & new_files
             cand_old |= common
             cand_new |= common
-
-        def _read(snap_id: int, files: set[str]) -> DataFrame:
-            df = iceberg_scan(
-                self.spark,
-                self.path,
-                snapshot_id=snap_id,
-                metadata_compression_codec=self.codec,
-                _keep_position_columns=True,
-            )
-            norm = F.regexp_replace(F.col("__file"), r"^file:/+", "/")
-            return df.where(norm.isin([*files])).drop("__file", "__pos")
-
-        rows_old = _read(old_snap.snapshot_id, cand_old)
-        rows_new = _read(new_snap.snapshot_id, cand_new)
+        rows_old = self._scan_files(old_snap.snapshot_id, cand_old)
+        rows_new = self._scan_files(new_snap.snapshot_id, cand_new)
         inserts = rows_new.exceptAll(rows_old)
         deletes = rows_old.exceptAll(rows_new)
         return inserts.select(F.lit("insert").alias("change_type"), "*").unionAll(
@@ -663,11 +663,22 @@ class IcebergTable:
         kwargs.setdefault("metadata_compression_codec", self.codec)
         return iceberg_history(self.spark, self.path, **kwargs)
 
-    def _scan_with_pos(self) -> DataFrame:
-        """Current live rows + (__file, __pos) virtual columns."""
+    def _scan_with_pos(self, snapshot_id: Optional[int] = None) -> DataFrame:
+        """Live rows (default: current snapshot) + (__file, __pos)
+        virtual columns."""
         from .sources.iceberg import iceberg_scan
 
-        return iceberg_scan(self.spark, self.path, metadata_compression_codec=self.codec, _keep_position_columns=True)
+        return iceberg_scan(
+            self.spark, self.path, snapshot_id, metadata_compression_codec=self.codec, _keep_position_columns=True
+        )
+
+    def _scan_files(self, snapshot_id: int, files: set[str]) -> DataFrame:
+        """Live rows of snapshot ``snapshot_id`` that sit in the data
+        files ``files``."""
+        from .sources.iceberg import _norm_path
+
+        df = self._scan_with_pos(snapshot_id)
+        return df.where(_norm_path(F.col("__file")).isin([*files])).drop("__file", "__pos")
 
     @property
     def schema(self) -> IcebergSchema:
@@ -697,10 +708,12 @@ class IcebergTable:
         new snapshot's manifests by _commit — no snapshot ever
         exposes two live DVs for one data file, which strict v3
         readers (Iceberg Java, DuckDB) reject."""
+        from .sources.iceberg import _norm_path
+
         self._pending_superseded = None
         dels = (
             matched.select(
-                F.regexp_replace(F.col("__file"), r"^file:/+", "/").alias("file_path"),
+                _norm_path(F.col("__file")).alias("file_path"),
                 F.col("__pos").cast("long").alias("pos"),
             )
             .dropDuplicates()
@@ -946,18 +959,66 @@ class IcebergTable:
             snap = self.meta.latest_snapshot() if self.meta.snapshots else None
         if snap is None:
             return []
-        from .plans.avro import read_avro_file
-
         _, records = read_avro_file(snap.manifest_list)
         return records
 
-    def _tombstone_delete_entries(
-        self,
-        manifests: list[dict],
-        keys: set[tuple],
-        snap_id: int,
-        meta_dir: str,
-    ) -> list[dict]:
+    def _write_manifest(self, entries: list[dict], content: int, spec_id: int) -> dict:
+        """Write one manifest (``content`` 0 = data, 1 = deletes) of
+        manifest-entry records typed by partition spec ``spec_id``, and
+        return its manifest-list record.
+
+        Entries carry explicit sequence numbers. The record's file and
+        row counts, ``min_sequence_number`` and v3 ``first_row_id`` are
+        derived from the entries; its ``sequence_number`` and
+        ``added_snapshot_id`` are left unassigned (None) for
+        :meth:`_commit` to stamp with the committing snapshot's."""
+        entry_schema = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
+        spec = next((s for s in self.meta.partition_specs if s.get("spec-id", 0) == spec_id), {})
+        if spec.get("fields"):
+            id_to_name = {c.field_id: c.name for c in self.schema.columns}
+            pfields = [PartitionField.from_json(f, id_to_name[f["source-id"]]) for f in spec["fields"]]
+            r102 = next(f for f in entry_schema["fields"] if f["name"] == "data_file")["type"]
+            next(f for f in r102["fields"] if f["name"] == "partition")["type"]["fields"] = _partition_avro_fields(
+                pfields, self.schema
+            )
+        mpath = os.path.join(self.path, "metadata", f"{uuid.uuid4().hex}-m{content}.avro")
+        length = write_avro_file(
+            mpath,
+            entry_schema,
+            entries,
+            metadata={
+                "schema": json.dumps(_schema_to_json(self.schema)),
+                "partition-spec": "[]",
+                "partition-spec-id": str(spec_id),
+                "format-version": str(self.format_version),
+                "content": "data" if content == 0 else "deletes",
+            },
+        )
+        # spec: min over live entries; a fully tombstoned manifest keeps
+        # the min over all of them
+        live = [e for e in entries if e["status"] != 2] or entries
+        # v3: manifest-level first_row_id = start of this manifest's id
+        # space (files carry explicit ids too, so readers of either
+        # convention agree)
+        frids = [e["data_file"].get("first_row_id") for e in entries if content == 0]
+        frids = [f for f in frids if f is not None]
+        record = {
+            "manifest_path": mpath,
+            "manifest_length": length,
+            "partition_spec_id": spec_id,
+            "content": content,
+            "sequence_number": None,
+            "min_sequence_number": min(e["sequence_number"] for e in live),
+            "added_snapshot_id": None,
+            "first_row_id": min(frids) if frids else None,
+        }
+        for status, kind in ((0, "existing"), (1, "added"), (2, "deleted")):
+            rows = [e["data_file"]["record_count"] for e in entries if e["status"] == status]
+            record[f"{kind}_files_count"] = len(rows)
+            record[f"{kind}_rows_count"] = sum(rows)
+        return record
+
+    def _tombstone_delete_entries(self, manifests: list[dict], keys: set[tuple], snap_id: int) -> list[dict]:
         """Rewrite carried delete manifests so entries matching
         ``keys`` — ``(file_path-as-stored, content_offset)`` of
         superseded deletion vectors — are marked status=DELETED in the
@@ -965,97 +1026,26 @@ class IcebergTable:
         file; without this, a merged superset DV would coexist with
         the older DV it replaced and strict readers (Iceberg Java,
         DuckDB) could reject the table. Entries keep their original
-        sequence numbers (coalesced explicit, since the rewritten
-        manifest-list record retains the source manifest's
-        sequence_number); counts are recomputed by status."""
-        import copy
-
-        from .plans.avro import read_avro_file
-        from .plans.transforms import PartitionField
-
-        id_to_name = {c.field_id: c.name for c in self.schema.columns}
-
-        def entry_schema_for(spec_id: int) -> dict:
-            es = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
-            spec = next(
-                (s for s in self.meta.partition_specs if s.get("spec-id", 0) == spec_id),
-                None,
-            )
-            fields = spec.get("fields", []) if spec else []
-            if fields:
-                pfields = [
-                    PartitionField.from_json(f, id_to_name[f["source-id"]]) for f in fields
-                ]
-                r102 = next(f for f in es["fields"] if f["name"] == "data_file")["type"]
-                next(f for f in r102["fields"] if f["name"] == "partition")["type"][
-                    "fields"
-                ] = _partition_avro_fields(pfields, self.schema)
-            return es
-
+        sequence numbers, made explicit; the rewritten manifest keeps
+        its source's sequence number and adding snapshot."""
         out = []
         for m in manifests:
             if (m.get("content", 0) or 0) != 1:
                 out.append(m)
                 continue
-            _, entries = read_avro_file(m["manifest_path"])
-            live_hit = any(
-                e.get("status") != 2
-                and (e["data_file"].get("file_path"), e["data_file"].get("content_offset"))
-                in keys
+            entries = _carried_entries(m)
+            hits = [
+                e
                 for e in entries
-            )
-            if not live_hit:
+                if e["status"] != 2 and (e["data_file"].get("file_path"), e["data_file"].get("content_offset")) in keys
+            ]
+            if not hits:
                 out.append(m)
                 continue
-            mseq = m.get("sequence_number", 0) or 0
-            new_entries = []
-            for e in entries:
-                seq_no = e.get("sequence_number")
-                fseq_no = e.get("file_sequence_number")
-                rec = {
-                    "status": e.get("status", 0),
-                    "snapshot_id": e.get("snapshot_id"),
-                    "sequence_number": mseq if seq_no is None else seq_no,
-                    "file_sequence_number": mseq if fseq_no is None else fseq_no,
-                    "data_file": e["data_file"],
-                }
-                df_ = e["data_file"]
-                if rec["status"] != 2 and (
-                    df_.get("file_path"),
-                    df_.get("content_offset"),
-                ) in keys:
-                    rec["status"] = 2
-                    rec["snapshot_id"] = snap_id
-                new_entries.append(rec)
-            spec_id = m.get("partition_spec_id", 0) or 0
-            mpath = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m1.avro")
-            length = write_avro_file(
-                mpath,
-                entry_schema_for(spec_id),
-                new_entries,
-                metadata={
-                    "schema": json.dumps(_schema_to_json(self.schema)),
-                    "partition-spec": "[]",
-                    "partition-spec-id": str(spec_id),
-                    "format-version": str(self.format_version),
-                    "content": "deletes",
-                },
-            )
-            by_status: dict[int, list[int]] = {0: [], 1: [], 2: []}
-            for rec in new_entries:
-                by_status.setdefault(rec["status"], []).append(
-                    rec["data_file"].get("record_count", 0) or 0
-                )
-            nm = dict(m)
-            nm["manifest_path"] = mpath
-            nm["manifest_length"] = length
-            nm["existing_files_count"] = len(by_status.get(0, []))
-            nm["added_files_count"] = len(by_status.get(1, []))
-            nm["deleted_files_count"] = len(by_status.get(2, []))
-            nm["existing_rows_count"] = sum(by_status.get(0, []))
-            nm["added_rows_count"] = sum(by_status.get(1, []))
-            nm["deleted_rows_count"] = sum(by_status.get(2, []))
-            out.append(nm)
+            for e in hits:
+                e["status"], e["snapshot_id"] = 2, snap_id
+            nm = self._write_manifest(entries, 1, m.get("partition_spec_id", 0) or 0)
+            out.append({**nm, "sequence_number": m["sequence_number"], "added_snapshot_id": m["added_snapshot_id"]})
         return out
 
     def _commit(
@@ -1064,7 +1054,7 @@ class IcebergTable:
         operation: str,
         new_data_files: list[dict] | None = None,
         new_delete_files: list[dict] | None = None,
-        keep_previous: bool = True,
+        carried: Optional[list[dict]] = None,
         schemas_json: Optional[list[dict]] = None,
         current_schema_id: Optional[int] = None,
         last_column_id: Optional[int] = None,
@@ -1072,7 +1062,15 @@ class IcebergTable:
         doc_updates: Optional[dict] = None,
         to_branch: Optional[str] = None,
     ) -> None:
-        """Write manifests + manifest list + next vN metadata json.
+        """Write manifests + manifest list + next vN metadata json: the
+        one path by which every snapshot of this table is made.
+
+        ``carried`` lists the manifest-list records the new snapshot
+        keeps besides the manifests written for ``new_data_files`` /
+        ``new_delete_files``; None carries every manifest of the base
+        snapshot. Records whose ``sequence_number`` is unassigned
+        (written for this commit by :meth:`_write_manifest`) get the
+        new snapshot's sequence number and id.
 
         ``to_branch`` targets a named branch ref instead of the main
         head (Iceberg write-audit-publish): the new snapshot's base is
@@ -1094,23 +1092,10 @@ class IcebergTable:
                 base_snapshot_id = ref["snapshot-id"]
             elif doc.get("current-snapshot-id", -1) != -1:
                 base_snapshot_id = doc["current-snapshot-id"]
-        manifests = self._current_manifests(base_snapshot_id) if keep_previous else []
-        superseded = getattr(self, "_pending_superseded", None)
-        self._pending_superseded = None
+        manifests = self._current_manifests(base_snapshot_id) if carried is None else carried
+        superseded, self._pending_superseded = self._pending_superseded, None
         if superseded and manifests:
-            manifests = self._tombstone_delete_entries(
-                manifests, set(superseded), snap_id, meta_dir
-            )
-
-        import copy
-
-        entry_schema = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
-        pfields = self.partition_fields
-        if pfields:
-            r102 = next(f for f in entry_schema["fields"] if f["name"] == "data_file")["type"]
-            next(f for f in r102["fields"] if f["name"] == "partition")["type"]["fields"] = _partition_avro_fields(
-                pfields, self.schema
-            )
+            manifests = self._tombstone_delete_entries(manifests, set(superseded), snap_id)
 
         from .plans.bounds import serialize_bound
 
@@ -1138,71 +1123,28 @@ class IcebergTable:
                 {"key": int(fid), "value": int(n)} for fid, n in sorted(counts.items())
             ] or None
 
-        spec_id = doc.get("default-spec-id", 0)
-
-        def write_manifest(files: list[dict], content: int) -> dict:
-            mpath = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m{content}.avro")
-            entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": f.get("content", content),
-                        "file_path": f["file_path"],
-                        "file_format": f.get("file_format", "PARQUET"),
-                        "partition": f.get("partition") or {},
-                        "record_count": f["record_count"],
-                        "file_size_in_bytes": f.get("file_size_in_bytes", 0),
-                        "null_value_counts": kv_longs(f.get("null_value_counts")),
-                        "lower_bounds": kv_bounds(f.get("lower_bounds")),
-                        "upper_bounds": kv_bounds(f.get("upper_bounds")),
-                        "equality_ids": f.get("equality_ids"),
-                        "first_row_id": f.get("first_row_id"),
-                        "referenced_data_file": f.get("referenced_data_file"),
-                        "content_offset": f.get("content_offset"),
-                        "content_size_in_bytes": f.get("content_size_in_bytes"),
-                    },
-                }
-                for f in files
-            ]
-            length = write_avro_file(
-                mpath,
-                entry_schema,
-                entries,
-                metadata={
-                    "schema": json.dumps(_schema_to_json(self.schema)),
-                    "partition-spec": "[]",
-                    "partition-spec-id": str(spec_id),
-                    "format-version": str(self.format_version),
-                    "content": "data" if content == 0 else "deletes",
-                },
-            )
-            rows = sum(f["record_count"] for f in files)
-            frids = [
-                f["first_row_id"]
-                for f in files
-                if content == 0 and f.get("first_row_id") is not None
-            ]
+        def added_entry(f: dict, content: int) -> dict:
             return {
-                "manifest_path": mpath,
-                "manifest_length": length,
-                "partition_spec_id": spec_id,
-                "content": 0 if content == 0 else 1,
-                # v3: manifest-level first_row_id = start of this
-                # manifest's assigned id space (files carry explicit
-                # ids too, so readers of either convention agree)
-                "first_row_id": (min(frids) if frids else None),
+                "status": 1,  # ADDED
+                "snapshot_id": snap_id,
                 "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
+                "file_sequence_number": seq,
+                "data_file": {
+                    "content": f.get("content", content),
+                    "file_path": f["file_path"],
+                    "file_format": f.get("file_format", "PARQUET"),
+                    "partition": f.get("partition") or {},
+                    "record_count": f["record_count"],
+                    "file_size_in_bytes": f.get("file_size_in_bytes", 0),
+                    "null_value_counts": kv_longs(f.get("null_value_counts")),
+                    "lower_bounds": kv_bounds(f.get("lower_bounds")),
+                    "upper_bounds": kv_bounds(f.get("upper_bounds")),
+                    "equality_ids": f.get("equality_ids"),
+                    "first_row_id": f.get("first_row_id"),
+                    "referenced_data_file": f.get("referenced_data_file"),
+                    "content_offset": f.get("content_offset"),
+                    "content_size_in_bytes": f.get("content_size_in_bytes"),
+                },
             }
 
         # Iceberg v3 row lineage: every new data file gets the _row_id
@@ -1226,10 +1168,14 @@ class IcebergTable:
                     f["first_row_id"] = cursor
                     cursor += int(f["record_count"])
             doc["next-row-id"] = cursor
-        if new_data_files:
-            manifests = manifests + [write_manifest(new_data_files, 0)]
-        if new_delete_files:
-            manifests = manifests + [write_manifest(new_delete_files, 1)]
+        spec_id = doc.get("default-spec-id", 0)
+        for content, files in ((0, new_data_files), (1, new_delete_files)):
+            if files:
+                manifests = manifests + [self._write_manifest([added_entry(f, content) for f in files], content, spec_id)]
+        manifests = [
+            {**m, "sequence_number": seq, "added_snapshot_id": snap_id} if m["sequence_number"] is None else m
+            for m in manifests
+        ]
 
         ml_path = os.path.join(meta_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro")
         write_avro_file(
@@ -1366,8 +1312,6 @@ class IcebergTable:
                 got = set(of.schema.names)
                 n_rows, lowers, uppers, nullcounts = of.nrows, {}, {}, {}
             elif fmt == "AVRO":
-                from .plans.avro import read_avro_file
-
                 _, records = read_avro_file(p)
                 got = set(records[0]) if records else cols
                 n_rows, lowers, uppers, nullcounts = len(records), {}, {}, {}
@@ -1483,7 +1427,7 @@ class IcebergTable:
         self._commit(
             operation="overwrite",
             new_data_files=kept + new_files,
-            keep_previous=False,
+            carried=[],
             extra_summary={
                 "replaced-partitions": str(len(targets)),
                 "kept-data-files": str(len(kept)),
@@ -1921,7 +1865,7 @@ class IcebergTable:
         self._commit(
             operation="replace",
             new_data_files=files,
-            keep_previous=False,
+            carried=[],
             extra_summary={"total-position-deletes": "0", "rewritten-to-files": str(len(files))},
             doc_updates=doc_updates,
         )
@@ -1947,131 +1891,31 @@ class IcebergTable:
 
         Entry identity is preserved exactly: each carried entry keeps
         its original ``sequence_number`` / ``file_sequence_number`` /
-        ``snapshot_id`` and is re-marked status=EXISTING, so
-        sequence-scoped delete application is unaffected. Manifests
+        ``snapshot_id`` and v3 ``first_row_id`` (inherited values made
+        explicit) and is re-marked status=EXISTING, so sequence-scoped
+        delete application and row lineage are unaffected. Manifests
         are merged per spec-id (never across): an Iceberg manifest's
         partition struct is typed by its spec, and collapsing specs
         would turn "field absent" (old-spec file, must survive
         pruning on the new field) into "field null" (prunable).
         """
-        import copy
-
-        from .plans.avro import read_avro_file
-        from .plans.transforms import PartitionField
-
-        snap = self.meta.latest_snapshot()
         groups: dict[tuple[int, int], list[dict]] = {}
-        _, manifests = read_avro_file(snap.manifest_list)
+        manifests = self._current_manifests()
         for m in manifests:
-            _, entries = read_avro_file(m["manifest_path"])
             key = (m.get("content", 0) or 0, m.get("partition_spec_id", 0) or 0)
-            for e in entries:
-                if e.get("status") == 2:  # DELETED: drop from merged view
-                    continue
-                # v2 inheritance: ADDED entries carry an EXPLICIT null
-                # sequence_number, inheriting the manifest's — coalesce
-                # nulls (not just missing keys) to the SOURCE manifest's
-                # number, mirroring read_manifest_entries; otherwise the
-                # merged manifest's (higher) number would be inherited
-                # and sequence-scoped deletes would stop applying.
-                seq_no = e.get("sequence_number")
-                if seq_no is None:
-                    seq_no = m.get("sequence_number", 0) or 0
-                fseq_no = e.get("file_sequence_number")
-                if fseq_no is None:
-                    fseq_no = m.get("sequence_number", 0) or 0
-                groups.setdefault(key, []).append(
-                    {
-                        "status": 0,  # EXISTING
-                        "snapshot_id": e.get("snapshot_id"),
-                        "sequence_number": seq_no,
-                        "file_sequence_number": fseq_no,
-                        "data_file": e["data_file"],
-                    }
-                )
-
-        id_to_name = {c.field_id: c.name for c in self.schema.columns}
-
-        def entry_schema_for(spec_id: int) -> dict:
-            es = copy.deepcopy(_MANIFEST_ENTRY_SCHEMA)
-            spec = next(
-                (s for s in self.meta.partition_specs if s.get("spec-id", 0) == spec_id), None
-            )
-            fields = spec.get("fields", []) if spec else []
-            if fields:
-                pfields = [PartitionField.from_json(f, id_to_name[f["source-id"]]) for f in fields]
-                r102 = next(f for f in es["fields"] if f["name"] == "data_file")["type"]
-                next(f for f in r102["fields"] if f["name"] == "partition")["type"]["fields"] = (
-                    _partition_avro_fields(pfields, self.schema)
-                )
-            return es
-
-        meta_dir = os.path.join(self.path, "metadata")
-        seq = self.meta.raw.get("last-sequence-number", 0) + 1
-        snap_id = _new_snapshot_id()
-        merged = []
-        for (content, spec_id), entries in sorted(groups.items()):
-            mpath = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m{content}.avro")
-            length = write_avro_file(
-                mpath,
-                entry_schema_for(spec_id),
-                entries,
-                metadata={
-                    "schema": json.dumps(_schema_to_json(self.schema)),
-                    "partition-spec": "[]",
-                    "partition-spec-id": str(spec_id),
-                    "format-version": "2",
-                    "content": "data" if content == 0 else "deletes",
-                },
-            )
-            rows = sum(e["data_file"]["record_count"] for e in entries)
-            merged.append(
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": length,
-                    "partition_spec_id": spec_id,
-                    "content": content,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(e["sequence_number"] for e in entries),
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": 0,
-                    "existing_files_count": len(entries),
-                    "deleted_files_count": 0,
-                    "added_rows_count": 0,
-                    "existing_rows_count": rows,
-                    "deleted_rows_count": 0,
-                }
-            )
-
-        ml_path = os.path.join(meta_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro")
-        write_avro_file(
-            ml_path,
-            _MANIFEST_FILE_SCHEMA,
-            merged,
-            metadata={"format-version": "2", "snapshot-id": str(snap_id), "sequence-number": str(seq)},
+            for e in _carried_entries(m):
+                if e["status"] != 2:  # DELETED: drop from merged view
+                    groups.setdefault(key, []).append({**e, "status": 0})  # EXISTING
+        merged = [self._write_manifest(entries, *key) for key, entries in sorted(groups.items())]
+        self._commit(
+            operation="replace",
+            carried=merged,
+            extra_summary={
+                "manifests-replaced": str(len(manifests)),
+                "manifests-created": str(len(merged)),
+                "total-position-deletes": str(self._total_pos_deletes()),
+            },
         )
-        ts = _now_ms()
-        doc = dict(self.meta.raw)
-        doc["last-sequence-number"] = seq
-        doc["last-updated-ms"] = ts
-        doc["current-snapshot-id"] = snap_id
-        doc["snapshots"] = doc.get("snapshots", []) + [
-            {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": ts,
-                "manifest-list": ml_path,
-                "schema-id": doc.get("current-schema-id", 0),
-                "summary": {
-                    "operation": "replace",
-                    "manifests-replaced": str(len(manifests)),
-                    "manifests-created": str(len(merged)),
-                    "total-position-deletes": str(self._total_pos_deletes()),
-                },
-            }
-        ]
-        doc["snapshot-log"] = doc.get("snapshot-log", []) + [{"timestamp-ms": ts, "snapshot-id": snap_id}]
-        self._write_metadata(doc)
 
     def expire_snapshots(self, keep_last: int = 1, older_than_ms: Optional[int] = None) -> None:
         """Drop expired snapshots from metadata (pair with
@@ -2204,7 +2048,6 @@ class IcebergTable:
         window: a concurrent writer's just-written files are not yet
         referenced by any snapshot and would otherwise be deleted out
         from under its pending commit."""
-        from .plans.avro import read_avro_file
         from .plans.fs import is_local
 
         if not is_local(self.path):
@@ -2245,7 +2088,7 @@ class IcebergTable:
         record_count — subtract them so added-position-deletes counts
         only this commit's deletions (prior positions are disjoint
         from new matches: already-deleted rows never rescan)."""
-        merged = sum((getattr(self, "_pending_superseded", None) or {}).values())
+        merged = sum((self._pending_superseded or {}).values())
         return sum(f["record_count"] for f in files) - merged
 
     def _total_pos_deletes(self) -> int:
@@ -2256,12 +2099,7 @@ class IcebergTable:
 
 
 def _max_field_id(schema: IcebergSchema) -> int:
-    counter = [max([c.field_id for c in schema.columns], default=0)]
-
-    def next_id() -> int:
-        counter[0] += 1
-        return counter[0]
-
+    next_id = _field_ids(max([c.field_id for c in schema.columns], default=0))
     for c in schema.columns:
         _spark_to_iceberg_type(c.spark_type, next_id)
-    return counter[0]
+    return next_id() - 1

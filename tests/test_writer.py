@@ -400,10 +400,17 @@ def test_rewrite_manifests_merges_metadata_only(spark, tmp_path):
     data_paths_before = sorted(e.file_path for e in _live_entries(t))
     _, manifests_before = read_avro_file(t.meta.latest_snapshot().manifest_list)
     assert len(manifests_before) >= 4  # 3 data commits + 1 delete commit
+    head = t.meta.latest_snapshot()
 
     t.rewrite_manifests()
 
-    _, manifests_after = read_avro_file(t.meta.latest_snapshot().manifest_list)
+    # the rewrite is a child of the pre-rewrite head: history stays one line
+    snap = t.meta.latest_snapshot()
+    assert snap.parent_snapshot_id == head.snapshot_id
+    assert snap.sequence_number == head.sequence_number + 1
+    hist = t.history().collect()
+    assert len(hist) == 5 and all(r.is_current_ancestor for r in hist)
+    _, manifests_after = read_avro_file(snap.manifest_list)
     by_content = {}
     for m in manifests_after:
         by_content.setdefault(m.get("content", 0) or 0, []).append(m)
@@ -413,6 +420,13 @@ def test_rewrite_manifests_merges_metadata_only(spark, tmp_path):
     assert {e["status"] for e in entries} == {0}
     assert len({e["sequence_number"] for e in entries}) == 3
     assert by_content[0][0]["min_sequence_number"] == 1
+    # manifest-list counts come from the entries: EXISTING only
+    for m in manifests_after:
+        _, es = read_avro_file(m["manifest_path"])
+        assert (m["sequence_number"], m["added_snapshot_id"]) == (snap.sequence_number, snap.snapshot_id)
+        assert (m["added_files_count"], m["existing_files_count"], m["deleted_files_count"]) == (0, len(es), 0)
+        assert (m["added_rows_count"], m["deleted_rows_count"]) == (0, 0)
+        assert m["existing_rows_count"] == sum(e["data_file"]["record_count"] for e in es)
     # zero data movement: identical data file set, identical rows
     assert sorted(e.file_path for e in _live_entries(t)) == data_paths_before
     after = canon_rows(t.scan().columns, [tuple(r) for r in t.scan().collect()])
@@ -766,6 +780,40 @@ def test_v3_deletion_vector_writes(spark, tmp_path):
 
     assert EntryStatus.DELETED in statuses
 
+    # manifest-list file/row counts are derived from entry statuses, for
+    # every writer: an ADDED-only append manifest, a merged
+    # rewrite_manifests manifest (EXISTING only) and a tombstoned DV
+    # manifest (EXISTING + DELETED)
+    from duckdb_iceberg_spark.plans.avro import read_avro_file
+
+    def counts(m):
+        return tuple(m[f"{k}_{n}_count"] for n in ("files", "rows") for k in ("added", "existing", "deleted"))
+
+    def manifests(t):
+        _, ml = read_avro_file(t.meta.latest_snapshot().manifest_list)
+        return [(m, read_avro_file(m["manifest_path"])[1]) for m in ml]
+
+    t = IcebergTable(spark, path)
+    t.append(n.filter("n_nationkey < 5").withColumn("n_nationkey", F.col("n_nationkey") + 100))
+    appended = manifests(t)[-1]
+    assert counts(appended[0]) == (1, 0, 0, 5, 0, 0)
+    assert {e["status"] for e in appended[1]} == {1}
+    t.delete_where("n_nationkey % 5 = 2")  # one DV per data file
+    t.rewrite_manifests()
+    merged = [(m, es) for m, es in manifests(t) if m["content"] == 1]
+    assert len(merged) == 1 and {e["status"] for e in merged[0][1]} == {0}
+    dv_rows = {e["data_file"]["referenced_data_file"]: e["data_file"]["record_count"] for e in merged[0][1]}
+    assert counts(merged[0][0]) == (0, 2, 0, 0, sum(dv_rows.values()), 0)
+    t.delete_where("n_nationkey = 103")  # supersedes only the new file's DV
+    tomb = [(m, es) for m, es in manifests(t) if m["content"] == 1 and m["deleted_files_count"]]
+    assert len(tomb) == 1 and sorted(e["status"] for e in tomb[0][1]) == [0, 2]
+    gone = next(e for e in tomb[0][1] if e["status"] == 2)["data_file"]["referenced_data_file"]
+    assert counts(tomb[0][0]) == (0, 1, 1, 0, sum(dv_rows.values()) - dv_rows[gone], dv_rows[gone])
+    assert dv_rows[gone] == 1
+    assert sorted(r.n_nationkey for r in iceberg_scan(spark, path).collect()) == sorted(
+        [k for k in got2 if k % 5 != 2] + [100, 101, 104]
+    )
+
 
 def test_v3_row_lineage(spark, tmp_path):
     """v3 row lineage: first_row_id chains across commits off
@@ -868,6 +916,23 @@ def test_v3_lineage_manifest_level_inheritance(spark, tmp_path):
     from duckdb_iceberg_spark.plans.manifests import _SCAN_CACHE
 
     _SCAN_CACHE.clear()  # files rewritten in place
+    got = {
+        r.n_nationkey: r._row_id
+        for r in iceberg_scan(spark, path, row_lineage=True).collect()
+    }
+    assert got == want
+    # rewrite_manifests carries the inherited ids into the merged
+    # manifest (made explicit) and commits a v3 snapshot
+    t = IcebergTable(spark, path)
+    t.rewrite_manifests()
+    snap = next(s for s in t.meta.raw["snapshots"] if s["snapshot-id"] == t.meta.current_snapshot_id)
+    assert snap["first-row-id"] == 25
+    ml_meta, ml_records = read_avro_file(snap["manifest-list"])
+    assert ml_meta["format-version"] == b"3"
+    assert [m["first_row_id"] for m in ml_records] == [0]
+    mmeta, entries = read_avro_file(ml_records[0]["manifest_path"])
+    assert mmeta["format-version"] == b"3"
+    assert len(entries) == 5 and all(e["data_file"]["first_row_id"] is not None for e in entries)
     got = {
         r.n_nationkey: r._row_id
         for r in iceberg_scan(spark, path, row_lineage=True).collect()
