@@ -32,14 +32,24 @@ Scale notes (100 TB design):
 - One task per parquet file is NOT required: `_metadata.row_index` is
   split-safe (computed by the reader per file), unlike
   monotonically_increasing_id tricks.
+- Scan planning makes no filesystem call for the files the manifests
+  describe: every parquet relation (data, positional- and
+  equality-delete files) is built by `_parquet_relation` from the
+  manifests' paths and `file_size_in_bytes`, as Iceberg's own Spark
+  reader plans — no per-file stat on the driver (a HEAD request each
+  on object stores) and no Spark listing job, however many files.
 """
 
 from __future__ import annotations
 
 import datetime
 import json
+import logging
 import math
 import os
+import threading
+from collections import OrderedDict
+from types import SimpleNamespace
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -140,6 +150,121 @@ _DELETE_SCHEMA = T.StructType(
 _READ_CACHE: dict = {}
 _READ_CACHE_MAX = 128
 
+# Files whose manifest FileStatus _parquet_relation has put into the
+# session's FileStatusCache, at most this many per SparkContext.
+_FED_FILES_MAX = 1 << 16
+
+_log = logging.getLogger("duckdb_iceberg_spark")
+
+
+def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
+    """Per-SparkContext state of _parquet_relation: the JVM handles it
+    calls (each package hop of ``spark._jvm.a.b.C`` is a py4j round
+    trip), its FileStatusCache client, and the LRU of manifest path ->
+    qualified JVM Path of the files already fed to that client. Lives
+    on the SparkContext instance, like session.py's JVM function cache,
+    so a restarted context starts empty and never reuses references
+    from a dead gateway."""
+    sc = spark.sparkContext
+    state = sc.__dict__.get("_graft_parquet_relation")
+    if state is None:
+        jvm = spark._jvm
+        ds = jvm.org.apache.spark.sql.execution.datasources
+        fs = jvm.org.apache.hadoop.fs
+        state = sc.__dict__.setdefault(
+            "_graft_parquet_relation",
+            SimpleNamespace(
+                cache=ds.FileStatusCache.getOrCreate(spark._jsparkSession),
+                fed=OrderedDict(),
+                lock=threading.Lock(),
+                Path=fs.Path,
+                FileStatus=fs.FileStatus,
+                InMemoryFileIndex=ds.InMemoryFileIndex,
+                HadoopFsRelation=ds.HadoopFsRelation,
+                parquet=ds.parquet.ParquetFileFormat(),
+                CaseInsensitiveMap=getattr(
+                    getattr(jvm.org.apache.spark.sql.catalyst.util, "CaseInsensitiveMap$"),
+                    "MODULE$",
+                ),
+                Option=jvm.scala.Option,
+                none=jvm.scala.Option.empty(),
+                utils=jvm.PythonUtils,
+            ),
+        )
+    return state
+
+
+def _parquet_relation(
+    spark: SparkSession,
+    entries: list,
+    schema: Optional[T.StructType] = None,
+    options: Optional[dict] = None,
+) -> DataFrame:
+    """The parquet DataFrame over manifest-listed files, planned from
+    the manifests' ``file_size_in_bytes`` without touching storage.
+
+    Builds what ``spark.read.schema(schema).options(**options)
+    .parquet(*paths)`` builds — DataSource.resolveRelation's
+    InMemoryFileIndex -> HadoopFsRelation -> LogicalRelation chain, with
+    the same qualified root paths, partition schema (from the index;
+    empty for file roots), nullable data schema and options — except
+    that each file's FileStatus (qualified path, manifest size; no
+    modification time) is put into the session's FileStatusCache first,
+    once per file. The index then finds every root in the cache, so the
+    build makes no filesystem call and runs no Spark listing job (past
+    ``parallelPartitionDiscovery.threshold`` paths the reader lists
+    with one task per file). Iceberg's own Spark reader plans from the
+    same manifest sizes. Files with a missing or 0 size are not fed:
+    the index lists them itself, as it does any path the cache lacks
+    (a no-op cache, an evicted entry). A file deleted from storage is
+    therefore reported when the query runs, not here.
+
+    ``schema=None`` infers the data schema from the footers, as the
+    reader does without a schema."""
+    js = spark._jsparkSession
+    jvm = _relation_jvm(spark)
+    sizes = {e.file_path: e.file_size_in_bytes for e in entries}
+    with jvm.lock:
+        roots = {p: jvm.fed[p] for p in sizes if p in jvm.fed}
+        for p in roots:
+            jvm.fed.move_to_end(p)
+    new = [p for p in sizes if p not in roots]
+    if new:
+        hconf = js.sessionState().newHadoopConf()
+        for p in new:
+            jp = jvm.Path(p)
+            roots[p] = jp = jp.getFileSystem(hconf).makeQualified(jp)
+            if sizes[p]:
+                leaf = spark.sparkContext._gateway.new_array(jvm.FileStatus, 1)
+                leaf[0] = jvm.FileStatus(sizes[p], False, 1, 0, 0, jp)
+                jvm.cache.putLeafFiles(jp, leaf)
+        with jvm.lock:
+            jvm.fed.update((p, roots[p]) for p in new if sizes[p])
+            while len(jvm.fed) > _FED_FILES_MAX:
+                jvm.fed.popitem(last=False)
+    paths = [e.file_path for e in entries]
+    opts = dict(options or {})
+    if len(paths) == 1:
+        opts["path"] = paths[0]  # the reader's single-path form
+    jopts = jvm.CaseInsensitiveMap.apply(jvm.utils.toScalaMap(opts))
+    jschema = None if schema is None else js.parseDataType(schema.json())
+    index = jvm.InMemoryFileIndex(
+        js, jvm.utils.toSeq([roots[p] for p in paths]), jopts,
+        jvm.Option.apply(jschema), jvm.cache, jvm.none, jvm.none,
+    )
+    if jschema is None:
+        jschema = jvm.parquet.inferSchema(js, jopts, index.allFiles()).get()
+    relation = jvm.HadoopFsRelation(
+        index, index.partitionSchema(), jschema.asNullable(), jvm.none, jvm.parquet, jopts, js
+    )
+    unsized = sum(1 for s in sizes.values() if not s)
+    _log.debug(
+        "parquet relation: %d files, %d from manifest sizes, %d left to listing",
+        len(sizes), len(sizes) - unsized, unsized,
+        extra={"files": len(sizes), "from_manifest": len(sizes) - unsized, "listed": unsized},
+    )
+    return DataFrame(js.baseRelationToDataFrame(relation), spark)
+
 
 def _sniff_footer(path: str) -> tuple[bool, frozenset]:
     """(has_field_ids, column_names) of one parquet footer."""
@@ -150,19 +275,19 @@ def _sniff_footer(path: str) -> tuple[bool, frozenset]:
     return has_ids, frozenset(sch.names)
 
 
-def _split_by_field_ids(files: list) -> tuple[list, list]:
-    """Partition files into (with field ids, without) — concurrent
+def _split_by_field_ids(entries: list) -> tuple[list, list]:
+    """Partition entries into (with field ids, without) — concurrent
     footer reads, same pattern as the manifest decode fan-out."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-        flags = list(ex.map(lambda p: _sniff_footer(p)[0], files))
-    with_ids = [p for p, f in zip(files, flags) if f]
-    without = [p for p, f in zip(files, flags) if not f]
+    with ThreadPoolExecutor(max_workers=min(16, len(entries))) as ex:
+        flags = list(ex.map(lambda e: _sniff_footer(e.file_path)[0], entries))
+    with_ids = [e for e, f in zip(entries, flags) if f]
+    without = [e for e, f in zip(entries, flags) if not f]
     return with_ids, without
 
 
-def _name_mapped_reads(spark, schema: "IcebergSchema", mapping_json: str, files: list):
+def _name_mapped_reads(spark, schema: "IcebergSchema", mapping_json: str, entries: list):
     """Reads for id-less files under schema.name-mapping.default.
 
     Files are grouped by which mapped name each field resolves to in
@@ -172,24 +297,24 @@ def _name_mapped_reads(spark, schema: "IcebergSchema", mapping_json: str, files:
     """
     import json as _json
 
-    if not files:
+    if not entries:
         return
     mp = {e["field-id"]: e.get("names", []) for e in _json.loads(mapping_json)}
     groups: dict = {}
-    for p in files:
-        _, names_in_file = _sniff_footer(p)
+    for e in entries:
+        _, names_in_file = _sniff_footer(e.file_path)
         sig = tuple(
             next((n for n in (mp.get(c.field_id) or [c.name]) if n in names_in_file), None)
             for c in schema.columns
         )
-        groups.setdefault(sig, []).append(p)
+        groups.setdefault(sig, []).append(e)
     for sig, fl in groups.items():
         fields = [
             T.StructField(n, c.spark_type, True)
             for n, c in zip(sig, schema.columns)
             if n is not None
         ]
-        d = spark.read.schema(T.StructType(fields)).parquet(*fl)
+        d = _parquet_relation(spark, fl, T.StructType(fields))
         cols = [
             F.col(n).alias(c.name) if n is not None else F.lit(None).cast(c.spark_type).alias(c.name)
             for n, c in zip(sig, schema.columns)
@@ -322,20 +447,22 @@ def iceberg_scan(
         )
     orc_data = [e.file_path for e in data_entries if _fmt(e) == "ORC"]
     avro_data = [e.file_path for e in data_entries if _fmt(e) == "AVRO"]
-    data_files = [e.file_path for e in data_entries if _fmt(e) == "PARQUET"]
+    parquet_entries = [e for e in data_entries if _fmt(e) == "PARQUET"]
     pos_entries = scan.positional_delete_files()
     # v3 deletion vectors: content=1 entries whose bytes live at an
     # offset inside a Puffin file (content_offset discriminates them
     # from classic positional-delete parquet)
     dv_entries = [e for e in pos_entries if e.content_offset is not None]
-    pos_delete_files = [e.file_path for e in pos_entries if e.content_offset is None]
+    pos_delete_entries = [e for e in pos_entries if e.content_offset is None]
     eq_deletes = scan.equality_delete_files()
 
     if mode == "list_files":
         dv_files = list(dict.fromkeys(e.file_path for e in dv_entries))
         rows = [(e.file_path, "data") for e in data_entries] + [
             (f, "delete")
-            for f in pos_delete_files + dv_files + [e.file_path for e in eq_deletes]
+            for f in [e.file_path for e in pos_delete_entries]
+            + dv_files
+            + [e.file_path for e in eq_deletes]
         ]
         return spark.createDataFrame(rows, "file string, type string")
 
@@ -370,7 +497,7 @@ def iceberg_scan(
             spark,
             schema,
             data_entries,
-            [e for e in pos_entries if e.content_offset is None],
+            pos_delete_entries,
             allow_moved_paths,
             name_mapping=mapping,
             eq_entries=eq_deletes,
@@ -398,14 +525,14 @@ def iceberg_scan(
     if spark.conf.get("spark.sql.parquet.fieldId.read.enabled", "false") != "true":
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     want_pos = bool(
-        pos_delete_files or dv_entries or eq_deletes or _keep_position_columns or row_lineage
+        pos_delete_entries or dv_entries or eq_deletes or _keep_position_columns or row_lineage
     )
     pos_cols = [
         _decode_file_uri(F.col("_metadata.file_path")).alias("__file"),
         F.col("_metadata.row_index").alias("__pos"),
     ]
     name_mapping = meta.properties.get("schema.name-mapping.default")
-    if not data_files:
+    if not parquet_entries:
         df = None  # ORC/AVRO-only table: parts assembled below
     elif name_mapping and not skip_schema_inference:
         # Some files were imported without parquet field ids
@@ -416,10 +543,10 @@ def iceberg_scan(
         # footer sniff — only for tables carrying the property) and
         # read id-less files by mapped NAME, aliased back to the
         # current schema.
-        with_ids, without_ids = _split_by_field_ids(data_files)
+        with_ids, without_ids = _split_by_field_ids(parquet_entries)
         parts = []
         if with_ids:
-            d = spark.read.schema(schema.to_struct_type()).parquet(*with_ids)
+            d = _parquet_relation(spark, with_ids, schema.to_struct_type())
             parts.append(d.select("*", *pos_cols) if want_pos else d)
         for d, cols in _name_mapped_reads(spark, schema, name_mapping, without_ids):
             parts.append(d.select(*cols, *pos_cols) if want_pos else d.select(*cols))
@@ -427,7 +554,6 @@ def iceberg_scan(
         for p in parts[1:]:
             df = df.unionByName(p)
     else:
-        reader = spark.read
         if skip_schema_inference:
             # Deliberately NOT the fast path: mergeSchema=true pays a
             # footer merge across every file. This branch exists only
@@ -435,23 +561,25 @@ def iceberg_scan(
             # quirk (schema from the files, not the metadata); the
             # default branch pins the metadata schema so no footer
             # merging ever happens.
-            reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(*data_files)
+            df = _parquet_relation(spark, parquet_entries, options={"mergeSchema": "true"})
         else:
             # Memoize the base relation per (session, file set, schema):
             # Iceberg data files are immutable, so the list + pinned
             # schema fully identify the relation, and repeated scans of
-            # the same snapshot skip the JVM DataSource resolution +
-            # InMemoryFileIndex build (~0.17 s per call on a 224-file
-            # table — the dominant plan-time cost for warm queries).
+            # the same snapshot skip the relation build. With no
+            # listing left in it, the build still costs one py4j round
+            # trip per file plus the index's JVM work: on a 75-file
+            # table, a whole iceberg_scan() construction took 23-37 ms
+            # and 101 round trips rebuilt against 3-5 ms and 11 round
+            # trips from the memo (4-core x86 VM).
             ck = (
                 spark.sparkContext.applicationId,
                 schema.to_struct_type().json(),
-                tuple(data_files),
+                tuple(e.file_path for e in parquet_entries),
             )
             df = _READ_CACHE.pop(ck, None)
             if df is None:
-                df = reader.schema(schema.to_struct_type()).parquet(*data_files)
+                df = _parquet_relation(spark, parquet_entries, schema.to_struct_type())
             _READ_CACHE[ck] = df  # (re-)insert: LRU recency
             while len(_READ_CACHE) > _READ_CACHE_MAX:
                 _READ_CACHE.pop(next(iter(_READ_CACHE)))
@@ -476,10 +604,10 @@ def iceberg_scan(
         part = _avro_data_df(spark, schema, avro_data, want_pos)
         df = part if df is None else df.unionByName(part)
 
-    if pos_delete_files or dv_entries:
+    if pos_delete_entries or dv_entries:
         parts = []
-        if pos_delete_files:
-            parts.append(spark.read.schema(_DELETE_SCHEMA).parquet(*pos_delete_files))
+        if pos_delete_entries:
+            parts.append(_parquet_relation(spark, pos_delete_entries, _DELETE_SCHEMA))
         if dv_entries:
             # v3 deletion vectors decode executor-side into the SAME
             # (file_path, pos) shape, so both delete kinds share one
@@ -1023,7 +1151,7 @@ def _apply_equality_deletes(
         # _metadata URI (raw-vs-raw, same rule as the positional path)
         dseq_rows = [(e.file_path, e.sequence_number or 0) for e in entries]
         dseq_df = spark.createDataFrame(dseq_rows, "___del_path string, ___del_seq long")
-        dels = spark.read.parquet(*[e.file_path for e in entries]).select(
+        dels = _parquet_relation(spark, entries).select(
             *cols, _decode_file_uri(F.col("_metadata.file_path")).alias("___dfile")
         )
         dels = dels.join(

@@ -518,3 +518,146 @@ def test_mixed_format_data_files(spark, tmp_path):
     t2.delete_where("n_nationkey IN (3, 20)")  # one per format
     got2 = sorted(r.n_nationkey for r in iceberg_scan(spark, p2).collect())
     assert got2 == sorted(k for k in range(25) if k not in (3, 20))
+
+
+def _jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_construction_runs_no_spark_job(spark, tmp_path):
+    """iceberg_scan plans its parquet relation from the manifests'
+    file_size_in_bytes: building it makes no filesystem listing, so
+    construction runs no Spark job even past the 32 paths at which
+    spark.read.parquet lists files with a job of one task per file.
+    Checked at the latest snapshot (positional deletes applied) and at
+    the pre-delete snapshot, with rows, where= pruning and position
+    columns checked against DuckDB over the same files."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_iceberg_spark.sources import iceberg as SRC
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(spark, path, spark.createDataFrame([], "k long, v string"))
+    ids = {c.name: c.field_id for c in t.schema.columns}
+    schema = pa.schema(
+        [
+            pa.field(n, ty, metadata={b"PARQUET:field_id": str(ids[n]).encode()})
+            for n, ty in (("k", pa.int64()), ("v", pa.string()))
+        ]
+    )
+    files = []
+    for i in range(40):
+        p = str(tmp_path / f"part-{i:02d}.parquet")
+        ks = list(range(i * 10, i * 10 + 10))
+        pq.write_table(pa.table({"k": ks, "v": [f"v{k}" for k in ks]}, schema=schema), p)
+        files.append(p)
+    t.add_files(files)
+    t = IcebergTable(spark, path)
+    before = t.meta.current_snapshot_id
+    t.delete_where("k % 7 = 0")
+
+    def want(where):
+        return sorted(
+            duckdb.sql(
+                f"SELECT k, v, filename, file_row_number FROM read_parquet({files!r}, "
+                f"filename = true, file_row_number = true) WHERE {where}"
+            ).fetchall()
+        )
+
+    for snap, live in ((None, "k % 7 <> 0"), (before, "true")):
+        SRC._READ_CACHE.clear()  # measure the build, not the relation memo
+        df, jobs = _jobs_during(spark, lambda: iceberg_scan(spark, path, snapshot_id=snap))
+        assert jobs == []
+        assert sorted(map(tuple, df.collect())) == [r[:2] for r in want(live)]
+        pruned = iceberg_scan(spark, path, snapshot_id=snap, where="k BETWEEN 100 AND 149")
+        assert sorted(map(tuple, pruned.collect())) == [
+            r[:2] for r in want(f"{live} AND k BETWEEN 100 AND 149")
+        ]
+        pos = iceberg_scan(spark, path, snapshot_id=snap, _keep_position_columns=True)
+        got = sorted((k, v, f.removeprefix("file:"), p) for k, v, f, p in pos.collect())
+        assert got == want(live)
+
+
+def test_scan_unsized_entry_and_missing_file(spark, tmp_path, caplog):
+    """A data-file entry whose file_size_in_bytes is 0 is not planned
+    from the manifest: Spark's own file listing resolves it, and the
+    rows still read correctly. The relation build logs one DEBUG event
+    with its file counts. A data file deleted from storage fails with
+    an error naming its path when the query runs: construction no
+    longer lists files, so, as with Iceberg's own Spark reader, the
+    error surfaces at the action instead of at iceberg_scan()."""
+    import json
+    import logging
+
+    from py4j.protocol import Py4JJavaError
+
+    from duckdb_iceberg_spark.plans import foreign_fixture as FF
+    from duckdb_iceberg_spark.plans.avro import write_avro_file
+
+    meta_dir = tmp_path / "t" / "metadata"
+    meta_dir.mkdir(parents=True)
+    parts = [
+        {"p_partkey": [1, 2], "p_brand": ["a", "b"], "p_size": [10, 20], "p_retailprice": [1.5, 2.5]},
+        {"p_partkey": [3], "p_brand": ["c"], "p_size": [30], "p_retailprice": [3.5]},
+    ]
+    files, entries = [], []
+    for i, cols in enumerate(parts):
+        fp = str(tmp_path / "t" / f"f{i}.parquet")
+        _, size = FF._write_parquet(fp, cols)
+        files.append(fp)
+        entries.append(FF._data_entry(cols, fp, size if i == 0 else 0, seq=1, snap_id=1))
+    manifest = str(meta_dir / "m0.avro")
+    length = write_avro_file(
+        manifest, FF._entry_schema([]), entries,
+        metadata={"schema": json.dumps(FF._schema_json()), "partition-spec": "[]",
+                  "partition-spec-id": "0", "format-version": "2", "content": "data"},
+    )
+    manifest_list = str(meta_dir / "snap-1.avro")
+    write_avro_file(
+        manifest_list, FF._MANIFEST_FILE_SCHEMA,
+        [{"manifest_path": manifest, "manifest_length": length, "partition_spec_id": 0,
+          "content": 0, "sequence_number": 1, "min_sequence_number": 1, "added_snapshot_id": 1,
+          "added_files_count": 2, "existing_files_count": 0, "deleted_files_count": 0,
+          "added_rows_count": 3, "existing_rows_count": 0, "deleted_rows_count": 0,
+          "key_metadata": None}],
+        metadata={"format-version": "2"},
+    )
+    metadata = str(meta_dir / "v1.metadata.json")
+    with open(metadata, "w") as fh:
+        json.dump(
+            {"format-version": 2, "table-uuid": "00000000-0000-0000-0000-000000000001",
+             "location": str(tmp_path / "t"), "last-sequence-number": 1,
+             "last-updated-ms": 1700000000000, "last-column-id": 4, "current-schema-id": 0,
+             "schemas": [FF._schema_json()], "default-spec-id": 0,
+             "partition-specs": [{"spec-id": 0, "fields": []}], "last-partition-id": 999,
+             "default-sort-order-id": 0, "sort-orders": [{"order-id": 0, "fields": []}],
+             "properties": {}, "current-snapshot-id": 1,
+             "snapshots": [{"snapshot-id": 1, "sequence-number": 1, "timestamp-ms": 1700000000000,
+                            "manifest-list": manifest_list, "schema-id": 0,
+                            "summary": {"operation": "append"}}]},
+            fh,
+        )
+
+    caplog.set_level(logging.DEBUG, logger="duckdb_iceberg_spark")
+    rows = sorted(map(tuple, iceberg_scan(spark, metadata).collect()))
+    assert rows == [(1, "a", 10, 1.5), (2, "b", 20, 2.5), (3, "c", 30, 3.5)]
+    events = [r for r in caplog.records if r.name == "duckdb_iceberg_spark" and hasattr(r, "listed")]
+    assert [(r.files, r.from_manifest, r.listed) for r in events] == [(2, 1, 1)]
+
+    os.remove(files[0])
+    df = iceberg_scan(spark, metadata)
+    with pytest.raises(Py4JJavaError, match="f0.parquet"):
+        df.collect()

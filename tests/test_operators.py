@@ -2,6 +2,8 @@
 planted duplicates, ANN recall vs brute force, streaming==batch
 equivalence, multimodal plumbing."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1127,7 +1129,12 @@ def test_salt_autotuning(spark):
     dim = spark.range(n).selectExpr("id AS k", "id * 10 AS w")
     assert tune_n_salts(uniform, "k") == 1
     wide = tune_n_salts(skewed, "k")
-    assert wide >= 4  # ~50% share x 32 shuffle partitions, capped at 64
+    # tune_n_salts fans out to ceil(share x shuffle.partitions), capped
+    # at 64; its 1% sample (~200 rows) estimates the planted 50% share
+    # to within 3 standard errors
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tol = 3 * math.sqrt(0.5 * 0.5 / (n * 0.01))
+    assert wide >= min(64, math.ceil((0.5 - tol) * parts))
     got = salted_join(skewed, dim, on="k").agg(
         F.count("*").alias("n"), F.sum("w").alias("s")
     ).first()
