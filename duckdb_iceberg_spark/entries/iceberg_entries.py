@@ -19,6 +19,7 @@ from duckdb_iceberg_spark.operators import multimodal as MM
 from duckdb_iceberg_spark.operators import packing as PK
 from duckdb_iceberg_spark.operators import sampling as SA
 from duckdb_iceberg_spark.operators import similarity as SIM
+from duckdb_iceberg_spark.sources.iceberg import _local_df
 
 from duckdb_iceberg_spark.entries.pipeline import *  # noqa: F401,F403
 
@@ -446,7 +447,7 @@ def _rest_catalog_listing(spark, sf):
     finally:
         srv.stop()
     return (
-        spark.createDataFrame(rows, "namespace string, table_name string")
+        _local_df(spark, rows, "namespace string, table_name string")
         .orderBy("namespace", "table_name")
     )
 
@@ -1212,7 +1213,7 @@ def _iceberg_refs(spark, sf):
         (name, t.refs()[name]["type"], iceberg_scan(spark, path, ref=name).count())
         for name in ("v1", "dev")
     ]
-    return spark.createDataFrame(rows, "ref_name string, ref_type string, row_count long")
+    return _local_df(spark, rows, "ref_name string, ref_type string, row_count long")
 
 
 _ICEBERG_REFS_SQL = """

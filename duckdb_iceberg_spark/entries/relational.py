@@ -19,6 +19,7 @@ from duckdb_iceberg_spark.operators import multimodal as MM
 from duckdb_iceberg_spark.operators import packing as PK
 from duckdb_iceberg_spark.operators import sampling as SA
 from duckdb_iceberg_spark.operators import similarity as SIM
+from duckdb_iceberg_spark.sources.iceberg import _local_df
 
 from duckdb_iceberg_spark.entries.layout import *  # noqa: F401,F403
 
@@ -1035,7 +1036,11 @@ def _avro_roundtrip(spark, sf):
     path = tempfile.mkdtemp(prefix="avro_rt_") + "/region.avro"
     write_avro_file(path, schema, [r.asDict() for r in rows])
     _, records = read_avro_file(path)
-    return spark.createDataFrame(records, "r_regionkey int, r_name string")
+    return _local_df(
+        spark,
+        [(r["r_regionkey"], r["r_name"]) for r in records],
+        "r_regionkey int, r_name string",
+    )
 
 
 _AVRO_RT_SQL = "SELECT r_regionkey, r_name FROM region"

@@ -38,11 +38,16 @@ Scale notes (100 TB design):
   manifests' paths and `file_size_in_bytes`, as Iceberg's own Spark
   reader plans — no per-file stat on the driver (a HEAD request each
   on object stores) and no Spark listing job, however many files.
+- Metadata tables (snapshots, history, partitions, metadata, table
+  statistics, ``mode="list_files"``) are Arrow-backed local relations
+  built by `_local_df`: collecting, filtering or projecting them runs
+  no Spark job, like the reference's in-process DataChunk listings.
 """
 
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import logging
 import math
@@ -135,6 +140,39 @@ def _tail(col):
     """Last '/'-segment — the reference's moved-path filename match
     (iceberg_scan.cpp:39-62, string_split + list_extract(-1))."""
     return F.substring_index(col, "/", -1)
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_struct(ddl: str) -> T.StructType:
+    """A DDL schema string parsed once per process (each parse is a
+    py4j round trip; the result is a plain Python StructType)."""
+    return T._parse_datatype_string(ddl)
+
+
+def _local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """The one builder of driver-side DataFrames in this package.
+
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a StructType
+    or a DDL string. The rows go to the JVM as one Arrow table typed by
+    ``to_arrow_schema(schema)`` and become a ``LocalRelation`` — no
+    RDD, no Python worker — so Catalyst folds projections, filters and
+    limits into it and ``collect()`` runs no Spark job, as the
+    reference's in-process DataChunk listings do
+    (iceberg_snapshots.cpp:100-124). ``TimestampType`` maps to Arrow
+    ``timestamp[us, UTC]``, so a naive datetime is taken as a UTC
+    instant whatever the process's ``TZ``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _ddl_struct(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 _DELETE_SCHEMA = T.StructType(
@@ -464,13 +502,13 @@ def iceberg_scan(
             + dv_files
             + [e.file_path for e in eq_deletes]
         ]
-        return spark.createDataFrame(rows, "file string, type string")
+        return _local_df(spark, rows, "file string, type string")
 
     schema = meta.schema_for_snapshot(snap)
 
     if not data_entries:
-        st = None if skip_schema_inference else schema.to_struct_type()
-        return spark.createDataFrame([], st if st is not None else T.StructType([]))
+        st = T.StructType([]) if skip_schema_inference else schema.to_struct_type()
+        return _local_df(spark, [], st)
 
     if io == "arrow":
         if orc_data or avro_data:
@@ -643,7 +681,7 @@ def iceberg_scan(
             )
             for e in data_entries
         ]
-        ldf = spark.createDataFrame(lrows, "lfile string, lfirst long, lseq long")
+        ldf = _local_df(spark, lrows, "lfile string, lfirst long, lseq long")
         if allow_moved_paths:
             lcond = _tail(df["__file"]) == _tail(ldf["lfile"])
         else:
@@ -1029,7 +1067,7 @@ def _avro_data_df(spark: SparkSession, schema, files: list[str], want_pos: bool)
                     d["__pos"] = range(len(records))
                 yield d
 
-    flist = spark.createDataFrame([(f,) for f in files], "path string").repartition(
+    flist = _local_df(spark, [(f,) for f in files], "path string").repartition(
         max(1, len(files))
     )
     return flist.mapInPandas(_read, out)
@@ -1079,7 +1117,7 @@ def _dv_deletes_df(spark: SparkSession, entries) -> DataFrame:
         if any(scheme_of(p) in ("s3", "s3a") for p, *_ in rows)
         else None
     )
-    src = spark.createDataFrame(rows, "puffin string, off long, size long, ref string")
+    src = _local_df(spark, rows, "puffin string, off long, size long, ref string")
 
     def _decode(batches):
         import pandas as pd
@@ -1133,7 +1171,7 @@ def _apply_equality_deletes(
     id_to_name = {c.field_id: c.name for c in schema.columns}
     # data-file -> sequence number lookup (tiny; broadcast)
     seq_rows = [(e.file_path, e.sequence_number or 0) for e in scan.data_files()]
-    seq_df = spark.createDataFrame(seq_rows, "___df_path string, ___data_seq long")
+    seq_df = _local_df(spark, seq_rows, "___df_path string, ___data_seq long")
     key = _tail(df["__file"]) if allow_moved_paths else _norm_path(df["__file"])
     skey = _tail(seq_df["___df_path"]) if allow_moved_paths else _norm_path(seq_df["___df_path"])
     df = df.join(F.broadcast(seq_df), key == skey, "left").drop("___df_path")
@@ -1150,7 +1188,7 @@ def _apply_equality_deletes(
         # one union read; per-file seq rejoined on the decoded
         # _metadata URI (raw-vs-raw, same rule as the positional path)
         dseq_rows = [(e.file_path, e.sequence_number or 0) for e in entries]
-        dseq_df = spark.createDataFrame(dseq_rows, "___del_path string, ___del_seq long")
+        dseq_df = _local_df(spark, dseq_rows, "___del_path string, ___del_seq long")
         dels = _parquet_relation(spark, entries).select(
             *cols, _decode_file_uri(F.col("_metadata.file_path")).alias("___dfile")
         )
@@ -1212,7 +1250,7 @@ def iceberg_snapshots(
         )
         for s in meta.snapshots
     ]
-    return spark.createDataFrame(rows, _SNAPSHOTS_SCHEMA)
+    return _local_df(spark, rows, _SNAPSHOTS_SCHEMA)
 
 
 _HISTORY_SCHEMA = "made_current_at timestamp, snapshot_id long, parent_id long, is_current_ancestor boolean"
@@ -1261,7 +1299,7 @@ def iceberg_history(
         )
         for e in meta.raw.get("snapshot-log", [])
     ]
-    return spark.createDataFrame(rows, _HISTORY_SCHEMA)
+    return _local_df(spark, rows, _HISTORY_SCHEMA)
 
 
 _PARTITIONS_SCHEMA = (
@@ -1304,7 +1342,7 @@ def iceberg_partitions(
         slot[1] += 1
         slot[2] += e.file_size_in_bytes
     rows = [(dict(k), rc, fc, sz) for k, (rc, fc, sz) in sorted(agg.items())]
-    return spark.createDataFrame(rows, _PARTITIONS_SCHEMA)
+    return _local_df(spark, rows, _PARTITIONS_SCHEMA)
 
 
 _METADATA_SCHEMA = (
@@ -1361,7 +1399,7 @@ def iceberg_metadata(
                     e.record_count,
                 )
             )
-    return spark.createDataFrame(rows, _METADATA_SCHEMA)
+    return _local_df(spark, rows, _METADATA_SCHEMA)
 
 
 def iceberg_table_statistics(
@@ -1408,8 +1446,8 @@ def iceberg_table_statistics(
                         f"{payload_ndv} != {ndv}"
                     )
             rows.append((s.get("snapshot-id"), col, b.get("type"), ndv))
-    return spark.createDataFrame(
-        rows, "snapshot_id long, column string, blob_type string, ndv long"
+    return _local_df(
+        spark, rows, "snapshot_id long, column string, blob_type string, ndv long"
     )
 
 

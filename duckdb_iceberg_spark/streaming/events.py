@@ -16,6 +16,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.iceberg import _local_df
+
+
 def read_events_files(spark: SparkSession, sf_dir: str, names: tuple = ("events.parquet",)) -> DataFrame:
     """File-source stream over the events parquet, delivered as one
     micro-batch per entry in ``names`` (the same file symlinked twice
@@ -274,7 +277,7 @@ def run_stream_to_parquet(stream_df: DataFrame, name: str, output_mode: str = "a
         )
         q.awaitTermination()
     if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], stream_df.schema)
+        return _local_df(spark, [], stream_df.schema)
     return spark.read.schema(stream_df.schema).parquet(out_dir)
 
 

@@ -661,3 +661,171 @@ def test_scan_unsized_entry_and_missing_file(spark, tmp_path, caplog):
     df = iceberg_scan(spark, metadata)
     with pytest.raises(Py4JJavaError, match="f0.parquet"):
         df.collect()
+
+
+def test_metadata_tables_collect_with_no_spark_job(spark, tmp_path):
+    """Metadata tables and iceberg_scan(mode="list_files") are built as
+    Arrow-backed local relations: collecting them, projected or
+    filtered, runs no Spark job. Rows and schemas are checked against
+    the table's metadata JSON and its Avro manifest list and manifests,
+    read directly. Timestamps are compared as Python-side collect()
+    shows them: naive, in the process's zone."""
+    import datetime
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from duckdb_iceberg_spark.plans.avro import read_avro_file
+    from duckdb_iceberg_spark.plans.table_metadata import load_table_metadata
+    from duckdb_iceberg_spark.sources.iceberg import (
+        iceberg_history,
+        iceberg_partitions,
+        iceberg_table_statistics,
+    )
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(
+        spark, path, spark.range(6).selectExpr("id AS k", "CAST(id % 2 AS STRING) AS p"),
+        partition_by=["p"],
+    )
+    t.append(spark.range(6, 10).selectExpr("id AS k", "CAST(id % 2 AS STRING) AS p"))
+    t.delete_where("k % 3 = 0")
+    t.compute_statistics(["k"])
+    raw = load_table_metadata(path).raw
+
+    def local_ts(ms):
+        return datetime.datetime.fromtimestamp(ms // 1000).replace(microsecond=ms % 1000 * 1000)
+
+    snapshots = raw["snapshots"]
+    parents = {s["snapshot-id"]: s.get("parent-snapshot-id") for s in snapshots}
+    ancestors, cur = set(), raw["current-snapshot-id"]
+    while cur is not None:
+        ancestors.add(cur)
+        cur = parents[cur]
+    current = next(s for s in snapshots if s["snapshot-id"] == raw["current-snapshot-id"])
+    manifests = read_avro_file(current["manifest-list"])[1]
+    entries = [(m, e) for m in manifests for e in read_avro_file(m["manifest_path"])[1]]
+    live = [(m, e) for m, e in entries if e["status"] != 2]
+    parts: dict = {}
+    for m, e in live:
+        if m["content"] == 0:
+            slot = parts.setdefault(tuple(sorted(e["data_file"]["partition"].items())), [0, 0, 0])
+            slot[0] += e["data_file"]["record_count"]
+            slot[1] += 1
+            slot[2] += e["data_file"]["file_size_in_bytes"]
+    id_to_name = {c["id"]: c["name"] for c in raw["schemas"][-1]["fields"]}
+    status = {0: "EXISTING", 1: "ADDED", 2: "DELETED"}
+    content = {0: "EXISTING", 1: "POSITION_DELETES", 2: "EQUALITY_DELETES"}
+
+    cases = [
+        (
+            iceberg_snapshots(spark, path),
+            "sequence_number long, snapshot_id long, timestamp_ms timestamp, manifest_list string",
+            [(s["sequence-number"], s["snapshot-id"], local_ts(s["timestamp-ms"]), s["manifest-list"])
+             for s in snapshots],
+        ),
+        (
+            iceberg_snapshots(spark, path).select("snapshot_id"),
+            "snapshot_id long",
+            [(s["snapshot-id"],) for s in snapshots],
+        ),
+        (
+            iceberg_history(spark, path),
+            "made_current_at timestamp, snapshot_id long, parent_id long, is_current_ancestor boolean",
+            [(local_ts(h["timestamp-ms"]), h["snapshot-id"], parents[h["snapshot-id"]],
+              h["snapshot-id"] in ancestors) for h in raw["snapshot-log"]],
+        ),
+        (
+            iceberg_partitions(spark, path),
+            "partition map<string,string>, record_count long, file_count int, total_size_bytes long",
+            [(dict(k), *v) for k, v in sorted(parts.items())],
+        ),
+        (
+            iceberg_table_statistics(spark, path),
+            "snapshot_id long, column string, blob_type string, ndv long",
+            [(s["snapshot-id"], id_to_name[b["fields"][0]], b["type"], int(b["properties"]["ndv"]))
+             for s in raw["statistics"] for b in s["blob-metadata"]],
+        ),
+        (
+            iceberg_metadata(spark, path).filter(F.col("status") != "DELETED"),
+            "manifest_path string, manifest_sequence_number long, manifest_content string, "
+            "status string, content string, file_path string, file_format string, record_count long",
+            [(m["manifest_path"], m["sequence_number"], "DELETE" if m["content"] else "DATA",
+              status[e["status"]], content[e["data_file"]["content"]], e["data_file"]["file_path"],
+              e["data_file"]["file_format"].upper(), e["data_file"]["record_count"])
+             for m, e in live],
+        ),
+        (
+            iceberg_scan(spark, path, mode="list_files"),
+            "file string, type string",
+            [(e["data_file"]["file_path"], "delete" if m["content"] else "data") for m, e in live],
+        ),
+    ]
+    assert any(m["content"] == 1 for m, _ in live)  # the delete left a delete file
+    assert parents[snapshots[0]["snapshot-id"]] is None  # a NULL parent_id row
+    for df, ddl, want in cases:
+        rows, jobs = _jobs_during(spark, df.collect)
+        assert jobs == []
+        assert df.schema == _parse_datatype_string(ddl)
+        assert sorted(map(tuple, rows), key=repr) == sorted(want, key=repr)
+
+
+def test_local_df_edge_cases(spark, tmp_path):
+    """_local_df, the package's one builder of driver-side DataFrames:
+    an empty zero-column frame (skip_schema_inference on a table with no
+    data files), a map column holding a NULL map and a NULL value, and
+    NULL longs, all collected with no Spark job."""
+    from pyspark.sql import types as T
+    from pyspark.sql.types import _parse_datatype_string
+
+    from duckdb_iceberg_spark.sources.iceberg import _local_df
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    IcebergTable.create(spark, path, spark.createDataFrame([], "k long"))
+    empty = iceberg_scan(spark, path, skip_schema_inference=True)
+    assert empty.schema == T.StructType([])
+    assert _jobs_during(spark, empty.collect) == ([], [])
+
+    ddl = "partition map<string,string>, record_count long, file_count int, total_size_bytes long"
+    rows = [({"p": "a", "q": None}, 3, 1, None), (None, None, None, 7)]
+    df = _local_df(spark, rows, ddl)
+    got, jobs = _jobs_during(spark, df.collect)
+    assert jobs == []
+    assert df.schema == _parse_datatype_string(ddl)
+    assert [tuple(r) for r in got] == rows
+
+    ddl = "snapshot_id long, column string, blob_type string, ndv long"
+    got, jobs = _jobs_during(spark, _local_df(spark, [(1, "k", "ndv-long-v1", None)], ddl).collect)
+    assert (jobs, [tuple(r) for r in got]) == ([], [(1, "k", "ndv-long-v1", None)])
+
+
+def test_every_driver_built_dataframe_goes_through_local_df():
+    """The package builds driver-side DataFrames in one place:
+    sources.iceberg._local_df. Any other createDataFrame call would
+    bring back the pickled-RDD path whose actions each run a job."""
+    import ast
+    import pathlib
+
+    import duckdb_iceberg_spark
+
+    root = pathlib.Path(duckdb_iceberg_spark.__file__).parent
+    builders, others = [], []
+    for f in sorted(root.rglob("*.py")):
+        tree = ast.parse(f.read_text(), str(f))
+        inside = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "_local_df"
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                where = f"{f.relative_to(root)}:{node.lineno}"
+                (builders if id(node) in inside else others).append(where)
+    assert others == []
+    assert [b.split(":")[0] for b in builders] == ["sources/iceberg.py"]

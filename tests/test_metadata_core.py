@@ -1,7 +1,8 @@
 """Pure-Python metadata layer tests (no Spark) against the reference's
 read-only data trees — version resolution, snapshot selection, schema
 parse, avro manifests. Mirrors reference test/sql/iceberg_snapshots.test
-and iceberg_metadata.test coverage."""
+and iceberg_metadata.test coverage. One Spark test checks that the
+snapshot and history listings carry the metadata's instants."""
 
 import pytest
 
@@ -145,3 +146,40 @@ def test_error_message_parity_verbatim():
         "Iceberg metadata file not found for table version '1' using 'none' "
         "compression and format(s): 'v%s%s.metadata.gz'"
     )
+
+
+def test_listing_timestamps_are_metadata_instants_in_any_host_zone(spark, tmp_path):
+    """iceberg_snapshots.timestamp_ms and iceberg_history.made_current_at
+    hold the metadata's timestamp-ms instant exactly, even when the
+    Python process runs in a non-UTC zone. (Python-side collect() shows
+    them in the process's zone, as it does every Spark TimestampType
+    column; unix_millis reads the stored instant.)"""
+    import os
+    import time
+
+    from duckdb_iceberg_spark.sources.iceberg import iceberg_history, iceberg_snapshots
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(spark, path, spark.range(3).selectExpr("id AS k"))
+    t.append(spark.range(3, 5).selectExpr("id AS k"))
+    raw = load_table_metadata(path).raw
+    want_snaps = sorted((s["snapshot-id"], s["timestamp-ms"]) for s in raw["snapshots"])
+    want_hist = sorted((h["snapshot-id"], h["timestamp-ms"]) for h in raw["snapshot-log"])
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        snaps = iceberg_snapshots(spark, path).selectExpr("snapshot_id", "unix_millis(timestamp_ms)")
+        hist = iceberg_history(spark, path).selectExpr("snapshot_id", "unix_millis(made_current_at)")
+        got_snaps = sorted(map(tuple, snaps.collect()))
+        got_hist = sorted(map(tuple, hist.collect()))
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert got_snaps == want_snaps
+    assert got_hist == want_hist
