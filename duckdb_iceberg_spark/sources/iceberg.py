@@ -16,7 +16,10 @@ pushdown + column pruning reach the scan), positional deletes applied
 as a broadcast ANTI join keyed on (`_metadata.file_path`,
 `_metadata.row_index`) — the exact Spark equivalents of DuckDB's
 ``filename``/``file_row_number`` virtual columns the reference uses
-(iceberg_scan.cpp:177-182).
+(iceberg_scan.cpp:177-182), compared as Spark reports them, as the
+reference compares ``filename``. The small side is translated instead:
+delete files name data files by raw path, and `_DataFileUris` turns
+those into the URIs Spark reports, from URIs recorded once per file.
 
 Scale notes (100 TB design):
 - Manifest metadata is KB-MB scale even for huge tables; driver-side
@@ -29,6 +32,16 @@ Scale notes (100 TB design):
   as `explicit_cardinality`); we broadcast them for a shuffle-free
   anti join when under the broadcast cap, else fall back to a shuffled
   anti join automatically.
+- No scanned data row runs a string function to meet its deletes: the
+  probe key is `_metadata.file_path` untouched. Each data file's URI is
+  recorded once per SparkContext beside its qualified path (3 py4j
+  round trips the first time it is needed, none after). The delete
+  side, the equality-delete sequence lookup and the row-lineage map are
+  keyed by it on the driver. Position-delete rows are translated with
+  one prefix plus a literal map of the files whose URI percent-encodes
+  their path, so plan size is O(such files): zero on an ordinary
+  table. Only moved-path tables decode per row, for the reference's
+  file-name match.
 - One task per parquet file is NOT required: `_metadata.row_index` is
   split-safe (computed by the reader per file), unlike
   monotonically_increasing_id tricks.
@@ -52,10 +65,11 @@ import json
 import logging
 import math
 import os
+import re
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from types import SimpleNamespace
-from typing import Any, Optional
+from typing import Any, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,7 +78,6 @@ from pyspark.sql import types as T
 from ..plans.manifests import (
     EntryStatus,
     FileContent,
-    IcebergTableScan,
     ManifestContent,
     load_table_scan,
 )
@@ -118,9 +131,12 @@ def _select_snapshot(meta: TableMetadata, snapshot_id, timestamp):
     return meta.latest_snapshot()
 
 
+_FILE_SCHEME = r"^file:/+"
+
+
 def _norm_path(col):
     """Normalize a file URI/path for exact-path comparison."""
-    return F.regexp_replace(col, r"^file:/+", "/")
+    return F.regexp_replace(col, _FILE_SCHEME, "/")
 
 
 def _decode_file_uri(col):
@@ -128,12 +144,60 @@ def _decode_file_uri(col):
     percent-encoded (a dir literally named ``p_brand=Brand%2333``, as
     Java writers emit for partition value ``Brand#33``, is reported as
     ``...Brand%252333...``), while manifest/delete-file paths are raw
-    filesystem paths. Decode ONCE at the ``__file`` source so every
-    downstream comparison (positional-delete join, equality-delete
-    sequence join, moved-path tail match) compares raw against raw.
-    A literal ``+`` is valid raw in a URI path segment and must NOT
-    become a space, so escape it before url_decode."""
+    filesystem paths. Deletes, equality-delete sequence numbers and row
+    lineage do not decode: they meet the data on the URI as reported
+    (`_DataFileUris`). This decode serves only the ``__file`` column
+    ``_keep_position_columns`` exposes, applied after the delete joins,
+    and the moved-path tail match. A literal ``+`` is valid raw in a
+    URI path segment and must NOT become a space, so escape it before
+    url_decode."""
     return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
+
+
+class _DataFileUris(NamedTuple):
+    """How a raw data-file path on the delete side names the URI Spark
+    reports as ``_metadata.file_path`` for that file, so the data side
+    probes with ``_metadata.file_path`` untouched.
+
+    A path ``p`` names ``exceptions.get(n, prefix + n)``, where ``n`` is
+    ``p`` with a leading ``file:/+`` made ``/`` (`_norm_path`).
+    ``prefix`` turns most scanned files' normalized paths into their
+    URIs: ``file:`` locally, empty on object stores. ``exceptions``
+    holds only the files it does not, whose paths have characters Spark
+    percent-encodes (a space, ``#``, ``%``), so it is empty on an
+    ordinary table. For each of them it also maps the path ``prefix``
+    would turn into that file's URI to ``""``, which no file reports:
+    a delete naming a file outside the scan never matches a scanned
+    one."""
+
+    prefix: str
+    exceptions: dict
+
+    @classmethod
+    def of(cls, uris: dict) -> "_DataFileUris":
+        """From manifest path -> URI of every scanned data file."""
+        norm = {re.sub(_FILE_SCHEME, "/", p): u for p, u in uris.items()}
+        counts = Counter(u[: len(u) - len(n)] for n, u in norm.items() if u.endswith(n))
+        prefix = counts.most_common(1)[0][0] if counts else ""
+        exceptions = {n: u for n, u in norm.items() if u != prefix + n}
+        for u in list(exceptions.values()):
+            if u.startswith(prefix) and u[len(prefix):] not in norm:
+                exceptions.setdefault(u[len(prefix):], "")
+        return cls(prefix, exceptions)
+
+    def uri(self, path: str) -> str:
+        n = re.sub(_FILE_SCHEME, "/", path)
+        return self.exceptions.get(n, self.prefix + n)
+
+    def column(self, col):
+        """`uri` as a Column expression over a raw path column."""
+        n = _norm_path(col)
+        key = F.concat(F.lit(self.prefix), n)
+        if self.exceptions:
+            ks, vs = zip(*self.exceptions.items())
+            lookup = F.map_from_arrays(F.array(*map(F.lit, ks)), F.array(*map(F.lit, vs)))
+            key = F.coalesce(F.element_at(lookup, n), key)
+        return key
 
 
 def _tail(col):
@@ -188,9 +252,9 @@ _DELETE_SCHEMA = T.StructType(
 _READ_CACHE: dict = {}
 _READ_CACHE_MAX = 128
 
-# Files whose manifest FileStatus _parquet_relation has put into the
-# session's FileStatusCache, at most this many per SparkContext.
-_FED_FILES_MAX = 1 << 16
+# Files _parquet_relation has resolved (and, when sized, put into the
+# session's FileStatusCache), at most this many per SparkContext.
+_FILES_MAX = 1 << 16
 
 _log = logging.getLogger("duckdb_iceberg_spark")
 
@@ -199,10 +263,11 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
     """Per-SparkContext state of _parquet_relation: the JVM handles it
     calls (each package hop of ``spark._jvm.a.b.C`` is a py4j round
     trip), its FileStatusCache client, and the LRU of manifest path ->
-    qualified JVM Path of the files already fed to that client. Lives
-    on the SparkContext instance, like session.py's JVM function cache,
-    so a restarted context starts empty and never reuses references
-    from a dead gateway."""
+    (qualified JVM Path, file URI or None until asked for) of the files
+    already resolved, sized ones fed to that client. Lives on the
+    SparkContext instance, like session.py's JVM function cache, so a
+    restarted context starts empty and never reuses references from a
+    dead gateway."""
     sc = spark.sparkContext
     state = sc.__dict__.get("_graft_parquet_relation")
     if state is None:
@@ -213,10 +278,11 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
             "_graft_parquet_relation",
             SimpleNamespace(
                 cache=ds.FileStatusCache.getOrCreate(spark._jsparkSession),
-                fed=OrderedDict(),
+                files=OrderedDict(),
                 lock=threading.Lock(),
                 Path=fs.Path,
                 FileStatus=fs.FileStatus,
+                SparkPath=jvm.org.apache.spark.paths.SparkPath,
                 InMemoryFileIndex=ds.InMemoryFileIndex,
                 HadoopFsRelation=ds.HadoopFsRelation,
                 parquet=ds.parquet.ParquetFileFormat(),
@@ -230,6 +296,55 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
             ),
         )
     return state
+
+
+def _resolve_files(spark: SparkSession, entries: list) -> dict:
+    """Manifest path -> (qualified JVM Path, URI or None) for each
+    entry's file, from the per-SparkContext LRU. A file seen for the
+    first time costs a few py4j round trips to qualify and, when its
+    manifest size is known, is put into the session's FileStatusCache;
+    a file already in the LRU costs none."""
+    jvm = _relation_jvm(spark)
+    sizes = {e.file_path: e.file_size_in_bytes for e in entries}
+    with jvm.lock:
+        known = {p: jvm.files[p] for p in sizes if p in jvm.files}
+        for p in known:
+            jvm.files.move_to_end(p)
+    new = [p for p in sizes if p not in known]
+    if new:
+        hconf = spark._jsparkSession.sessionState().newHadoopConf()
+        for p in new:
+            jp = jvm.Path(p)
+            jp = jp.getFileSystem(hconf).makeQualified(jp)
+            known[p] = (jp, None)
+            if sizes[p]:
+                leaf = spark.sparkContext._gateway.new_array(jvm.FileStatus, 1)
+                leaf[0] = jvm.FileStatus(sizes[p], False, 1, 0, 0, jp)
+                jvm.cache.putLeafFiles(jp, leaf)
+        with jvm.lock:
+            jvm.files.update((p, known[p]) for p in new)
+            while len(jvm.files) > _FILES_MAX:
+                jvm.files.popitem(last=False)
+    return known
+
+
+def _file_uris(spark: SparkSession, entries: list) -> dict:
+    """Manifest path -> the URI Spark reports as ``_metadata.file_path``
+    for each entry's file: the qualified path re-parsed from its string
+    form, as Spark's own ``SparkPath`` does (``qualified.toUri()`` would
+    give ``file:///`` where Spark reports ``file:/``). Computed the first
+    time a file's URI is asked for (3 py4j round trips) and kept in the
+    LRU beside its qualified path."""
+    jvm = _relation_jvm(spark)
+    uris = {}
+    for p, (jp, uri) in _resolve_files(spark, entries).items():
+        if uri is None:
+            uri = jvm.SparkPath.fromPathString(jp.toString()).urlEncoded()
+            with jvm.lock:
+                if p in jvm.files:
+                    jvm.files[p] = (jp, uri)
+        uris[p] = uri
+    return uris
 
 
 def _parquet_relation(
@@ -248,38 +363,20 @@ def _parquet_relation(
     empty for file roots), nullable data schema and options — except
     that each file's FileStatus (qualified path, manifest size; no
     modification time) is put into the session's FileStatusCache first,
-    once per file. The index then finds every root in the cache, so the
-    build makes no filesystem call and runs no Spark listing job (past
-    ``parallelPartitionDiscovery.threshold`` paths the reader lists
-    with one task per file). Iceberg's own Spark reader plans from the
-    same manifest sizes. Files with a missing or 0 size are not fed:
-    the index lists them itself, as it does any path the cache lacks
-    (a no-op cache, an evicted entry). A file deleted from storage is
-    therefore reported when the query runs, not here.
+    once per file (`_resolve_files`). The index then finds every root in
+    the cache, so the build makes no filesystem call and runs no Spark
+    listing job (past ``parallelPartitionDiscovery.threshold`` paths the
+    reader lists with one task per file). Iceberg's own Spark reader
+    plans from the same manifest sizes. Files with a missing or 0 size
+    are not fed: the index lists them itself, as it does any path the
+    cache lacks (a no-op cache, an evicted entry). A file deleted from
+    storage is therefore reported when the query runs, not here.
 
     ``schema=None`` infers the data schema from the footers, as the
     reader does without a schema."""
     js = spark._jsparkSession
     jvm = _relation_jvm(spark)
-    sizes = {e.file_path: e.file_size_in_bytes for e in entries}
-    with jvm.lock:
-        roots = {p: jvm.fed[p] for p in sizes if p in jvm.fed}
-        for p in roots:
-            jvm.fed.move_to_end(p)
-    new = [p for p in sizes if p not in roots]
-    if new:
-        hconf = js.sessionState().newHadoopConf()
-        for p in new:
-            jp = jvm.Path(p)
-            roots[p] = jp = jp.getFileSystem(hconf).makeQualified(jp)
-            if sizes[p]:
-                leaf = spark.sparkContext._gateway.new_array(jvm.FileStatus, 1)
-                leaf[0] = jvm.FileStatus(sizes[p], False, 1, 0, 0, jp)
-                jvm.cache.putLeafFiles(jp, leaf)
-        with jvm.lock:
-            jvm.fed.update((p, roots[p]) for p in new if sizes[p])
-            while len(jvm.fed) > _FED_FILES_MAX:
-                jvm.fed.popitem(last=False)
+    roots = _resolve_files(spark, entries)
     paths = [e.file_path for e in entries]
     opts = dict(options or {})
     if len(paths) == 1:
@@ -287,7 +384,7 @@ def _parquet_relation(
     jopts = jvm.CaseInsensitiveMap.apply(jvm.utils.toScalaMap(opts))
     jschema = None if schema is None else js.parseDataType(schema.json())
     index = jvm.InMemoryFileIndex(
-        js, jvm.utils.toSeq([roots[p] for p in paths]), jopts,
+        js, jvm.utils.toSeq([roots[p][0] for p in paths]), jopts,
         jvm.Option.apply(jschema), jvm.cache, jvm.none, jvm.none,
     )
     if jschema is None:
@@ -295,6 +392,7 @@ def _parquet_relation(
     relation = jvm.HadoopFsRelation(
         index, index.partitionSchema(), jschema.asNullable(), jvm.none, jvm.parquet, jopts, js
     )
+    sizes = {e.file_path: e.file_size_in_bytes for e in entries}
     unsized = sum(1 for s in sizes.values() if not s)
     _log.debug(
         "parquet relation: %d files, %d from manifest sizes, %d left to listing",
@@ -566,7 +664,7 @@ def iceberg_scan(
         pos_delete_entries or dv_entries or eq_deletes or _keep_position_columns or row_lineage
     )
     pos_cols = [
-        _decode_file_uri(F.col("_metadata.file_path")).alias("__file"),
+        F.col("_metadata.file_path").alias("__file"),
         F.col("_metadata.row_index").alias("__pos"),
     ]
     name_mapping = meta.properties.get("schema.name-mapping.default")
@@ -636,37 +734,68 @@ def iceberg_scan(
             raise ValueError("skip_schema_inference is parquet-only; table has ORC data files")
         part = spark.read.schema(schema.to_struct_type()).orc(*orc_data)
         df = part if df is None else df.unionByName(part)
+    # With row positions, every data row carries its file's URI as
+    # Spark reports it (``__file``, untouched), and the delete side,
+    # sequence numbers and lineage are keyed by that URI on the driver:
+    # no data row runs a string function to meet them. The reference
+    # compares DuckDB's ``filename`` as is, too (iceberg_scan.cpp:177-182).
+    # Moved-path tables keep the reference's per-row file-name match on
+    # the decoded path.
+    uris = _file_uris(spark, [e for e in data_entries if _fmt(e) != "ORC"]) if want_pos else None
     if avro_data:
         if skip_schema_inference:
             raise ValueError("skip_schema_inference is parquet-only; table has AVRO data files")
-        part = _avro_data_df(spark, schema, avro_data, want_pos)
+        part = _avro_data_df(spark, schema, avro_data, uris)
         df = part if df is None else df.unionByName(part)
 
     if pos_delete_entries or dv_entries:
+        keys = None if allow_moved_paths else _DataFileUris.of(uris)
         parts = []
         if pos_delete_entries:
-            parts.append(_parquet_relation(spark, pos_delete_entries, _DELETE_SCHEMA))
+            d = _parquet_relation(spark, pos_delete_entries, _DELETE_SCHEMA)
+            if keys is not None:
+                d = d.select(keys.column(d["file_path"]).alias("file_path"), "pos")
+            parts.append(d)
         if dv_entries:
             # v3 deletion vectors decode executor-side into the SAME
             # (file_path, pos) shape, so both delete kinds share one
             # anti-join
-            parts.append(_dv_deletes_df(spark, dv_entries))
+            parts.append(_dv_deletes_df(spark, dv_entries, None if keys is None else keys.uri))
         deletes = parts[0]
         for p in parts[1:]:
             deletes = deletes.unionByName(p)
-        if allow_moved_paths:
-            cond = (_tail(df["__file"]) == _tail(deletes["file_path"])) & (df["__pos"] == deletes["pos"])
+        if keys is None:
+            file_cond = _tail(_decode_file_uri(df["__file"])) == _tail(deletes["file_path"])
         else:
-            cond = (_norm_path(df["__file"]) == _norm_path(deletes["file_path"])) & (df["__pos"] == deletes["pos"])
+            file_cond = df["__file"] == deletes["file_path"]
         # Deletes are small relative to data (manifest record_count sums
         # prove it — same stats the reference injects as cardinality);
         # broadcast -> shuffle-free anti join.
-        if scan.delete_cardinality() < 50_000_000:
+        deleted_rows = scan.delete_cardinality()
+        broadcast = deleted_rows < 50_000_000
+        if broadcast:
             deletes = F.broadcast(deletes)
-        df = df.join(deletes, cond, "left_anti")
+        df = df.join(deletes, file_cond & (df["__pos"] == deletes["pos"]), "left_anti")
+        n_exceptions = 0 if keys is None else len(keys.exceptions)
+        _log.debug(
+            "delete application: %d data files, %d position-delete files, %d deletion "
+            "vectors, %d deleted rows, %d URI exceptions, %s",
+            len(data_entries), len(pos_delete_entries), len(dv_entries), deleted_rows,
+            n_exceptions, "broadcast" if broadcast else "shuffled",
+            extra={
+                "data_files": len(data_entries),
+                "position_delete_files": len(pos_delete_entries),
+                "deletion_vectors": len(dv_entries),
+                "deleted_rows": deleted_rows,
+                "uri_exceptions": n_exceptions,
+                "broadcast": broadcast,
+            },
+        )
 
     if eq_deletes:
-        df = _apply_equality_deletes(spark, df, scan, schema, allow_moved_paths)
+        df = _apply_equality_deletes(
+            spark, df, data_entries, eq_deletes, schema, None if allow_moved_paths else uris
+        )
 
     if row_lineage:
         # inherit _row_id / _last_updated_sequence_number from a
@@ -675,7 +804,7 @@ def iceberg_scan(
         # lineage at scan time
         lrows = [
             (
-                e.file_path,
+                e.file_path if allow_moved_paths else uris[e.file_path],
                 e.first_row_id if e.first_row_id is not None else None,
                 int(e.sequence_number or 0),
             )
@@ -683,9 +812,9 @@ def iceberg_scan(
         ]
         ldf = _local_df(spark, lrows, "lfile string, lfirst long, lseq long")
         if allow_moved_paths:
-            lcond = _tail(df["__file"]) == _tail(ldf["lfile"])
+            lcond = _tail(_decode_file_uri(df["__file"])) == _tail(ldf["lfile"])
         else:
-            lcond = _norm_path(df["__file"]) == _norm_path(ldf["lfile"])
+            lcond = df["__file"] == ldf["lfile"]
         df = (
             df.join(F.broadcast(ldf), lcond, "left")
             .withColumn("_row_id", F.col("lfirst") + F.col("__pos"))
@@ -693,7 +822,11 @@ def iceberg_scan(
             .drop("lfile", "lfirst", "lseq")
         )
 
-    if want_pos and not _keep_position_columns:
+    if _keep_position_columns:
+        # the decoded path, in place and after the delete joins, so a
+        # pushed-down filter limits the decode to the rows it keeps
+        df = df.withColumn("__file", _decode_file_uri(F.col("__file")))
+    elif want_pos:
         df = df.drop("__file", "__pos")
 
     # initial-default for columns added after some files were written
@@ -1035,7 +1168,9 @@ def _prune_by_stats(meta: TableMetadata, entries, flt: dict):
     return out
 
 
-def _avro_data_df(spark: SparkSession, schema, files: list[str], want_pos: bool) -> DataFrame:
+def _avro_data_df(
+    spark: SparkSession, schema, files: list[str], uris: Optional[dict] = None
+) -> DataFrame:
     """Iceberg AVRO data files through the repo's pure-Python Avro
     codec (plans/avro — the same decoder the manifest layer uses),
     decoded EXECUTOR-side: one task per file via mapInPandas, so no
@@ -1046,7 +1181,12 @@ def _avro_data_df(spark: SparkSession, schema, files: list[str], want_pos: bool)
     spark-avro is not assumed on the classpath. Column resolution is
     by NAME against the table schema (missing fields -> NULL); the
     rare foreign table carrying avro data files is the target —
-    compaction (rewrite_data_files) converts to parquet."""
+    compaction (rewrite_data_files) converts to parquet.
+
+    ``uris`` (manifest path -> URI, `_file_uris`) adds the
+    ``__file``/``__pos`` columns, ``__file`` holding the file's URI as
+    a parquet scan's ``_metadata.file_path`` would."""
+    want_pos = uris is not None
     names = [c.name for c in schema.columns]
     fields = [T.StructField(c.name, c.spark_type) for c in schema.columns]
     if want_pos:
@@ -1059,22 +1199,26 @@ def _avro_data_df(spark: SparkSession, schema, files: list[str], want_pos: bool)
         from ..plans.avro import read_avro_file
 
         for pdf in batches:
-            for p in pdf["path"]:
+            for p, uri in pdf.itertuples(index=False):
                 _, records = read_avro_file(p)
                 d = pd.DataFrame({n: [r.get(n) for r in records] for n in names})
                 if want_pos:
-                    d["__file"] = p
+                    d["__file"] = uri
                     d["__pos"] = range(len(records))
                 yield d
 
-    flist = _local_df(spark, [(f,) for f in files], "path string").repartition(
-        max(1, len(files))
-    )
+    rows = [(f, uris[f] if want_pos else None) for f in files]
+    flist = _local_df(spark, rows, "path string, uri string").repartition(max(1, len(files)))
     return flist.mapInPandas(_read, out)
 
 
-def _dv_deletes_df(spark: SparkSession, entries) -> DataFrame:
+def _dv_deletes_df(spark: SparkSession, entries, file_key=None) -> DataFrame:
     """Iceberg v3 deletion vectors -> a (file_path, pos) DataFrame.
+
+    ``file_path`` is each DV's referenced data file, as
+    ``file_key(referenced_data_file)`` when given (iceberg_scan passes
+    `_DataFileUris.uri`, so the rows carry the URI the data side
+    reports).
 
     Decode happens EXECUTOR-side: the driver ships only one
     (puffin_path, offset, size, referenced_file) row per DV — one task
@@ -1108,7 +1252,7 @@ def _dv_deletes_df(spark: SparkSession, entries) -> DataFrame:
             e.file_path,
             int(e.content_offset),
             int(e.content_size),
-            e.referenced_data_file or "",
+            (file_key or str)(e.referenced_data_file or ""),
         )
         for e in entries
     ]
@@ -1146,9 +1290,10 @@ _EQ_DELETE_BROADCAST_BYTES = 32 * 1024 * 1024
 def _apply_equality_deletes(
     spark: SparkSession,
     df: DataFrame,
-    scan: IcebergTableScan,
+    data_entries: list,
+    eq_entries: list,
     schema: IcebergSchema,
-    allow_moved_paths: bool,
+    uris: Optional[dict],
 ) -> DataFrame:
     """Equality deletes: anti-join on the delete file's equality_ids
     columns, scoped so a delete only applies to rows from data files
@@ -1167,35 +1312,43 @@ def _apply_equality_deletes(
     O(delete files), and a MoR table carrying thousands of
     equality-delete files doesn't blow up the analyzer. The broadcast
     is size-gated on the manifests' recorded file sizes; an oversized
-    group falls back to a shuffled null-safe-equi anti-join."""
+    group falls back to a shuffled null-safe-equi anti-join.
+
+    ``uris`` maps each data file's manifest path to the URI ``__file``
+    carries for it, so the data rows meet the sequence-number lookup
+    on ``__file`` untouched; ``None`` (moved-path tables) matches the
+    decoded path's file name instead."""
     id_to_name = {c.field_id: c.name for c in schema.columns}
     # data-file -> sequence number lookup (tiny; broadcast)
-    seq_rows = [(e.file_path, e.sequence_number or 0) for e in scan.data_files()]
+    seq_rows = [
+        (e.file_path if uris is None else uris[e.file_path], e.sequence_number or 0)
+        for e in data_entries
+    ]
     seq_df = _local_df(spark, seq_rows, "___df_path string, ___data_seq long")
-    key = _tail(df["__file"]) if allow_moved_paths else _norm_path(df["__file"])
-    skey = _tail(seq_df["___df_path"]) if allow_moved_paths else _norm_path(seq_df["___df_path"])
-    df = df.join(F.broadcast(seq_df), key == skey, "left").drop("___df_path")
+    if uris is None:
+        cond = _tail(_decode_file_uri(df["__file"])) == _tail(seq_df["___df_path"])
+    else:
+        cond = df["__file"] == seq_df["___df_path"]
+    df = df.join(F.broadcast(seq_df), cond, "left").drop("___df_path")
 
     from collections import defaultdict
 
     groups: dict[tuple, list] = defaultdict(list)
-    for e in scan.equality_delete_files():
+    for e in eq_entries:
         groups[tuple(sorted(e.equality_ids or []))].append(e)
     for eq_ids, entries in groups.items():
         cols = [id_to_name[i] for i in eq_ids if i in id_to_name]
         if not cols:
             continue
-        # one union read; per-file seq rejoined on the decoded
-        # _metadata URI (raw-vs-raw, same rule as the positional path)
-        dseq_rows = [(e.file_path, e.sequence_number or 0) for e in entries]
+        # one union read; per-file seq rejoined on _metadata.file_path,
+        # each delete file keyed by the URI Spark reports for it
+        dels = _parquet_relation(spark, entries)
+        del_uris = _file_uris(spark, entries)
+        dseq_rows = [(del_uris[e.file_path], e.sequence_number or 0) for e in entries]
         dseq_df = _local_df(spark, dseq_rows, "___del_path string, ___del_seq long")
-        dels = _parquet_relation(spark, entries).select(
-            *cols, _decode_file_uri(F.col("_metadata.file_path")).alias("___dfile")
-        )
+        dels = dels.select(*cols, F.col("_metadata.file_path").alias("___dfile"))
         dels = dels.join(
-            F.broadcast(dseq_df),
-            _norm_path(dels["___dfile"]) == _norm_path(dseq_df["___del_path"]),
-            "inner",
+            F.broadcast(dseq_df), dels["___dfile"] == dseq_df["___del_path"], "inner"
         ).drop("___del_path", "___dfile")
         dels = dels.groupBy(*cols).agg(F.max("___del_seq").alias("___del_seq"))
         renamed = dels.select(

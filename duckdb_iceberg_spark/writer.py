@@ -711,13 +711,16 @@ class IcebergTable:
         from .sources.iceberg import _norm_path
 
         self._pending_superseded = None
+        # hash-partitioned on file_path first, so the dedup on
+        # (file_path, pos) finds its rows clustered and needs no
+        # exchange of its own
         dels = (
             matched.select(
                 _norm_path(F.col("__file")).alias("file_path"),
                 F.col("__pos").cast("long").alias("pos"),
             )
-            .dropDuplicates()
             .repartition("file_path")
+            .dropDuplicates()
             .sortWithinPartitions("file_path", "pos")
         )
         if self.format_version < 3:

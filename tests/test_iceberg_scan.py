@@ -829,3 +829,187 @@ def test_every_driver_built_dataframe_goes_through_local_df():
                 (builders if id(node) in inside else others).append(where)
     assert others == []
     assert [b.split(":")[0] for b in builders] == ["sources/iceberg.py"]
+
+
+def _live_files(path):
+    """The latest snapshot's live manifest entries of the table at path."""
+    from duckdb_iceberg_spark.plans.manifests import load_table_scan
+    from duckdb_iceberg_spark.plans.table_metadata import load_table_metadata
+
+    meta = load_table_metadata(path)
+    return load_table_scan(meta, meta.latest_snapshot(), path, False)
+
+
+def test_deletes_on_encoded_paths_match_duckdb(spark, tmp_path):
+    """Tables whose root and partition directories hold characters Spark
+    percent-encodes in _metadata.file_path (a space, '#', '%', '+' and a
+    non-ASCII letter; the partition directories also carry the literal
+    '%23'/'%25' escapes of the writer). v2 position deletes, v3 deletion
+    vectors with row_lineage, and sequence-scoped equality deletes all
+    read the rows DuckDB computes over the same parquet files, delete
+    files and deletion-vector blobs."""
+    import duckdb
+    import pyarrow as pa
+
+    from duckdb_iceberg_spark.plans.fs import read_range
+    from duckdb_iceberg_spark.plans.roaring import decode_dv_blob
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    root = tmp_path / "r o#o%t+é"
+    src = spark.createDataFrame(
+        [(i, f"p {i % 3}#%+é") for i in range(60)], "k long, p string"
+    ).repartition(2)
+    con = duckdb.connect()
+
+    def data_rows(scan):
+        files = [e.file_path for e in scan.data_files()]
+        return (
+            f"SELECT k, p, filename, file_row_number FROM read_parquet({files!r}, "
+            "filename = true, file_row_number = true, hive_partitioning = false)"
+        )
+
+    # v2: position-delete parquet files
+    v2 = str(root / "v2")
+    IcebergTable.create(spark, v2, src, partition_by=["p"]).delete_where("k % 4 = 0")
+    scan = _live_files(v2)
+    dels = [e.file_path for e in scan.positional_delete_files()]
+    assert dels and all(" " in f and "é" in f for f in dels)
+    want = con.sql(
+        f"SELECT k, p FROM ({data_rows(scan)}) d ANTI JOIN read_parquet({dels!r}) x "
+        "ON d.filename = x.file_path AND d.file_row_number = x.pos"
+    ).fetchall()
+    assert len(want) == 45
+    assert sorted(map(tuple, iceberg_scan(spark, v2).collect())) == sorted(want)
+
+    # v3: deletion vectors, read with row lineage
+    v3 = str(root / "v3")
+    IcebergTable.create(spark, v3, src, partition_by=["p"], format_version=3).delete_where(
+        "k % 5 = 0"
+    )
+    scan = _live_files(v3)
+    dvs = [e for e in scan.positional_delete_files() if e.content_offset is not None]
+    assert dvs
+    deleted = [
+        (e.referenced_data_file, int(pos))
+        for e in dvs
+        for pos in decode_dv_blob(read_range(e.file_path, e.content_offset, e.content_size))
+    ]
+    con.register("dv", pa.table({"file_path": [f for f, _ in deleted], "pos": [p for _, p in deleted]}))
+    lineage = pa.table(
+        {
+            "file_path": [e.file_path for e in scan.data_files()],
+            "first_row_id": [e.first_row_id for e in scan.data_files()],
+            "seq": [e.sequence_number for e in scan.data_files()],
+        }
+    )
+    assert None not in lineage["first_row_id"].to_pylist()
+    con.register("lineage", lineage)
+    want = con.sql(
+        f"SELECT k, p, l.first_row_id + d.file_row_number, l.seq FROM ({data_rows(scan)}) d "
+        "JOIN lineage l ON d.filename = l.file_path "
+        "ANTI JOIN dv ON d.filename = dv.file_path AND d.file_row_number = dv.pos"
+    ).fetchall()
+    assert len(want) == 48
+    got = iceberg_scan(spark, v3, row_lineage=True).select(
+        "k", "p", "_row_id", "_last_updated_sequence_number"
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+    # equality deletes, scoped to data files of a smaller sequence number
+    eq = str(root / "eq")
+    t = IcebergTable.create(spark, eq, src, partition_by=["p"])
+    t.delete_where_equality(spark.createDataFrame([(3,), (10,), (11,)], "k long"))
+    IcebergTable(spark, eq).append(src.filter("k = 10"))
+    scan = _live_files(eq)
+    eq_files = scan.equality_delete_files()
+    assert eq_files
+    con.register(
+        "seqs",
+        pa.table(
+            {
+                "file_path": [e.file_path for e in scan.data_files()],
+                "seq": [e.sequence_number for e in scan.data_files()],
+            }
+        ),
+    )
+    eq_seq = max(e.sequence_number for e in eq_files)
+    want = con.sql(
+        f"SELECT k, p FROM ({data_rows(scan)}) d JOIN seqs s ON d.filename = s.file_path "
+        f"WHERE s.seq >= {eq_seq} OR k NOT IN "
+        f"(SELECT k FROM read_parquet({[e.file_path for e in eq_files]!r}))"
+    ).fetchall()
+    assert len(want) == 58
+    assert sorted(map(tuple, iceberg_scan(spark, eq).collect())) == sorted(want)
+
+
+def _anti_join_probe(plan) -> str:
+    """The probe keys and probe-side subtree of the broadcast LeftAnti
+    join in an executed (adaptive) plan, as strings."""
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name == "BroadcastHashJoin" and node.joinType().toString() == "LeftAnti":
+            return f"{node.leftKeys().toString()}\n{node.left().toString()}"
+        kids = node.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+        if name == "AdaptiveSparkPlan":
+            nodes.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            nodes.append(node.plan())
+    raise AssertionError(f"no broadcast LeftAnti join in\n{plan.toString()}")
+
+
+def test_position_deletes_probe_with_raw_file_uri(spark, tmp_path):
+    """The data side of the position-delete anti join probes with
+    _metadata.file_path and _metadata.row_index untouched: no scanned
+    row runs a regex or URL decode. Keying the delete side by file URI
+    on the driver adds no Spark job: collecting runs 2."""
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(spark, path, spark.range(200).selectExpr("id AS k").repartition(4))
+    t.delete_where("k % 3 = 0")
+    df = iceberg_scan(spark, path)
+    rows, jobs = _jobs_during(spark, df.collect)
+    assert sorted(r.k for r in rows) == [k for k in range(200) if k % 3]
+    assert len(jobs) == 2
+    probe = _anti_join_probe(df._jdf.queryExecution().executedPlan())
+    for fn in ("regexp_replace", "url_decode", "UrlCodec"):
+        assert fn not in probe, probe
+
+
+def test_delete_application_event(spark, tmp_path, caplog):
+    """Each delete application logs one DEBUG event on the package
+    logger with what it applied: data files, position-delete files,
+    deletion vectors, manifest delete cardinality, the URI exception
+    map's size and whether the delete side is broadcast. Files under a
+    root Spark percent-encodes are exceptions; ordinary ones are not."""
+    import logging
+
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    src = spark.range(40).selectExpr("id AS k").repartition(2)
+    plain = str(tmp_path / "plain")
+    IcebergTable.create(spark, plain, src).delete_where("k < 5")
+    spaced = str(tmp_path / "a b" / "t")
+    IcebergTable.create(spark, spaced, src, format_version=3).delete_where("k < 3")
+
+    caplog.set_level(logging.DEBUG, logger="duckdb_iceberg_spark")
+    got = {}
+    for name, path in (("plain", plain), ("spaced", spaced)):
+        caplog.clear()
+        df = iceberg_scan(spark, path)
+        events = [r for r in caplog.records if r.name == "duckdb_iceberg_spark" and hasattr(r, "uri_exceptions")]
+        assert len(events) == 1
+        e = events[0]
+        got[name] = (e.position_delete_files, e.deletion_vectors, e.deleted_rows, e.broadcast)
+        scan = _live_files(path)
+        assert e.data_files == len(scan.data_files())
+        if name == "plain":
+            assert e.uri_exceptions == 0
+        else:
+            assert e.uri_exceptions >= e.data_files > 0
+        assert df.count() == 40 - e.deleted_rows
+    assert got["plain"][1:] == (0, 5, True) and got["plain"][0] >= 1
+    assert got["spaced"][0] == 0 and got["spaced"][2:] == (3, True) and got["spaced"][1] >= 1

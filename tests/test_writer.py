@@ -1050,3 +1050,35 @@ def test_variant_get_shredded_pushdown(spark, tmp_path):
     # full value/metadata binaries
     assert "metadata" not in m.group(1) and "value" not in m.group(1), m.group(1)
     assert sorted(r.a for r in out.collect()) == list(range(20))
+
+
+def test_position_delete_files_unique_and_sorted(spark, tmp_path):
+    """Position-delete files hold each (file_path, pos) once, sorted by
+    both, as the spec asks: also when a merge source repeats a key, so
+    the same target row matches twice."""
+    import pyarrow.parquet as pq
+
+    from duckdb_iceberg_spark import IcebergTable, iceberg_scan
+    from duckdb_iceberg_spark.plans.manifests import load_table_scan
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(
+        spark, path, spark.range(100).selectExpr("id AS k", "CAST(id % 7 AS STRING) AS v").repartition(3)
+    )
+    t.delete_where("k % 10 = 0")
+    src = spark.createDataFrame([(k,) for k in (1, 1, 2, 2, 2, 55, 999)], "k long")
+    IcebergTable(spark, path).merge(src, on="k", when_matched_delete=True, when_not_matched_insert=False)
+    t = IcebergTable(spark, path)
+    scan = load_table_scan(t.meta, t.meta.latest_snapshot(), path, False)
+    commits = {}
+    for e in scan.positional_delete_files():
+        rows = pq.read_table(e.file_path).to_pylist()
+        pairs = [(r["file_path"], r["pos"]) for r in rows]
+        assert pairs == sorted(set(pairs))
+        assert e.record_count == len(pairs)
+        commits.setdefault(e.sequence_number, []).extend(pairs)
+    assert sorted(len(v) for v in commits.values()) == [3, 10]
+    assert sorted(r.k for r in iceberg_scan(spark, path).collect()) == [
+        k for k in range(100) if k % 10 and k not in (1, 2, 55)
+    ]
+    assert t.meta.latest_snapshot().summary["added-position-deletes"] == "3"
