@@ -197,7 +197,7 @@ def minhash_signatures(
     # magnitude more than the variable-width binary agg buffers it was
     # meant to save (~35% of a ~2.4 s subtree); no per-instance-
     # transfer design can win while the JVM aggregate costs ~2 s.
-    # Evidence: tools/exp_minhash_arrow.py, tools/exp_minhash_entry_ab.py.)
+    # Evidence: OPTIMIZATION_r12.md §1 dedup_minhash_sig.)
     if est_bytes <= max_broadcast_bytes:
         # (A rank-substitution variant — int min buffers via
         # per-permutation row_number over the vocabulary, resolved

@@ -655,20 +655,19 @@ def _knn_scores_broadcast(
                     # column with <= k finite values gets kth = -inf =
                     # keep-all-finite, exactly the old else-branch;
                     # NaN >= t is False, the old ~nan_mask term).
+                    # one NaN mask; the -inf-filled copy lives only in the partition call
+                    nan = np.isnan(cos)
                     if m > k:
-                        filled = np.where(np.isnan(cos), -np.inf, cos)
-                        kth = np.partition(filled, m - k, axis=0)[m - k]
+                        kth = np.partition(np.where(nan, -np.inf, cos), m - k, axis=0)[m - k]
                         vmask = cos >= (kth - 2e-4)[None, :]
                     else:
-                        vmask = ~np.isnan(cos)
+                        vmask = ~nan
                     # zero-norm rows: NaN cosine -> NULL; only the k
                     # smallest nids can rank. Per-column rule kept
                     # verbatim, run only for the affected columns
                     # (none, in a corpus without zero/NaN vectors).
-                    for j in np.flatnonzero(np.isnan(cos).any(axis=0)):
-                        nan_idx = _k_smallest_nids(
-                            rvalid[np.isnan(cos[:, j])]
-                        )
+                    for j in np.flatnonzero(nan.any(axis=0)):
+                        nan_idx = _k_smallest_nids(rvalid[nan[:, j]])
                         _emit(
                             qids[j],
                             nids.take(pa.array(nan_idx)),
@@ -748,8 +747,8 @@ def knn_join(
     scan per tile instead of the bucket join's pair materialization —
     at L x R / 2^planes candidate pairs each carrying both vectors
     (~0.5 KB/pair through the join and the window sort), a few extra
-    scans are orders of magnitude cheaper (measured: see
-    tools/exp_knn_blocked.py). Exactness: tiles partition the qids, so
+    scans are orders of magnitude cheaper (measured: OPTIMIZATION_r12.md,
+    "knn_join past the broadcast cap — panel tiling"). Exactness: tiles partition the qids, so
     the unioned candidate stream is exactly the single-panel stream,
     and the unchanged final window resolves global top-k per qid. The
     per-tile kernel keeps every bound the single-panel path proved

@@ -146,11 +146,12 @@ def _decode_file_uri(col):
     ``...Brand%252333...``), while manifest/delete-file paths are raw
     filesystem paths. Deletes, equality-delete sequence numbers and row
     lineage do not decode: they meet the data on the URI as reported
-    (`_DataFileUris`). This decode serves only the ``__file`` column
-    ``_keep_position_columns`` exposes, applied after the delete joins,
-    and the moved-path tail match. A literal ``+`` is valid raw in a
-    URI path segment and must NOT become a space, so escape it before
-    url_decode."""
+    (`_DataFileUris`). ``_keep_position_columns`` exposes ``__file`` as
+    reported, too: the writer decodes it only on the rows it keeps (the
+    deleted rows its position-delete files name, the rows of the files
+    ``_scan_files`` selects). Apart from that, only the moved-path tail
+    match decodes. A literal ``+`` is valid raw in a URI path segment
+    and must NOT become a space, so escape it before url_decode."""
     return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
 
 
@@ -606,6 +607,8 @@ def iceberg_scan(
 
     if not data_entries:
         st = T.StructType([]) if skip_schema_inference else schema.to_struct_type()
+        if _keep_position_columns:
+            st = st.add("__file", T.StringType()).add("__pos", T.LongType())
         return _local_df(spark, [], st)
 
     if io == "arrow":
@@ -822,11 +825,7 @@ def iceberg_scan(
             .drop("lfile", "lfirst", "lseq")
         )
 
-    if _keep_position_columns:
-        # the decoded path, in place and after the delete joins, so a
-        # pushed-down filter limits the decode to the rows it keeps
-        df = df.withColumn("__file", _decode_file_uri(F.col("__file")))
-    elif want_pos:
+    if want_pos and not _keep_position_columns:
         df = df.drop("__file", "__pos")
 
     # initial-default for columns added after some files were written

@@ -31,8 +31,10 @@ Scale design:
 from __future__ import annotations
 
 import copy
+import functools
 import itertools
 import json
+import logging
 import math
 import os
 import shutil
@@ -413,6 +415,15 @@ def _parse_spec_entry(p, field_id: int) -> PartitionField:
     return PartitionField(p[0], p[2], int(p[1]), field_id)
 
 
+_log = logging.getLogger("duckdb_iceberg_spark")
+
+
+def _as_column(val) -> Column:
+    """An assigned value as a Column: a SQL expression string, a
+    Column, or a literal."""
+    return F.expr(val) if isinstance(val, str) else (val if isinstance(val, Column) else F.lit(val))
+
+
 def _now_ms() -> int:
     return int(time.time() * 1000)
 
@@ -663,22 +674,27 @@ class IcebergTable:
         kwargs.setdefault("metadata_compression_codec", self.codec)
         return iceberg_history(self.spark, self.path, **kwargs)
 
-    def _scan_with_pos(self, snapshot_id: Optional[int] = None) -> DataFrame:
+    def _scan_with_pos(self, snapshot_id: Optional[int] = None, where=None) -> DataFrame:
         """Live rows (default: current snapshot) + (__file, __pos)
-        virtual columns."""
+        virtual columns, ``__file`` the URI Spark reports (not decoded).
+        ``where`` keeps the matching rows; a SQL string also prunes data
+        files by partition values and column bounds (iceberg_scan)."""
         from .sources.iceberg import iceberg_scan
 
-        return iceberg_scan(
-            self.spark, self.path, snapshot_id, metadata_compression_codec=self.codec, _keep_position_columns=True
+        sql = where if isinstance(where, str) else None
+        df = iceberg_scan(
+            self.spark, self.path, snapshot_id, metadata_compression_codec=self.codec, where=sql,
+            _keep_position_columns=True,
         )
+        return df if where is None or sql is not None else df.filter(where)
 
     def _scan_files(self, snapshot_id: int, files: set[str]) -> DataFrame:
         """Live rows of snapshot ``snapshot_id`` that sit in the data
         files ``files``."""
-        from .sources.iceberg import _norm_path
+        from .sources.iceberg import _decode_file_uri, _norm_path
 
         df = self._scan_with_pos(snapshot_id)
-        return df.where(_norm_path(F.col("__file")).isin([*files])).drop("__file", "__pos")
+        return df.where(_norm_path(_decode_file_uri(F.col("__file"))).isin([*files])).drop("__file", "__pos")
 
     @property
     def schema(self) -> IcebergSchema:
@@ -708,15 +724,16 @@ class IcebergTable:
         new snapshot's manifests by _commit — no snapshot ever
         exposes two live DVs for one data file, which strict v3
         readers (Iceberg Java, DuckDB) reject."""
-        from .sources.iceberg import _norm_path
+        from .sources.iceberg import _decode_file_uri, _norm_path
 
         self._pending_superseded = None
+        # the manifest path from Spark's URI on the matched rows only;
         # hash-partitioned on file_path first, so the dedup on
         # (file_path, pos) finds its rows clustered and needs no
         # exchange of its own
         dels = (
             matched.select(
-                _norm_path(F.col("__file")).alias("file_path"),
+                _norm_path(_decode_file_uri(F.col("__file"))).alias("file_path"),
                 F.col("__pos").cast("long").alias("pos"),
             )
             .repartition("file_path")
@@ -1437,43 +1454,42 @@ class IcebergTable:
             },
         )
 
-    def delete_where(self, condition) -> None:
-        """Merge-on-read DELETE: write position-delete files for matched
-        rows (no data-file rewrite). `condition` is a Column or SQL string."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        matched = self._scan_with_pos().filter(cond)
-        files = self._write_position_deletes(matched)
-        if not files:
-            return
-        n = self._added_pos_deletes(files)
-        self._commit(
-            operation="delete",
-            new_delete_files=files,
-            extra_summary={"added-position-deletes": str(n), "total-position-deletes": str(self._total_pos_deletes() + n)},
-        )
-
-    def update_where(self, condition, assignments: dict) -> None:
-        """Merge-on-read UPDATE: position-delete matched rows + append
-        re-written rows with `assignments` applied."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        live = self._scan_with_pos()
-        matched = live.filter(cond)
-        updated = matched
-        for col, val in assignments.items():
-            expr = F.expr(val) if isinstance(val, str) else (val if isinstance(val, Column) else F.lit(val))
-            updated = updated.withColumn(col, expr)
-        updated = updated.drop("__file", "__pos")
-        new_files = self._write_parquet_files(self._aligned(updated), partitioned=True)
-        del_files = self._write_position_deletes(matched)
+    def _row_level_commit(self, operation: str, deleted: Optional[DataFrame], rows: Optional[DataFrame] = None) -> None:
+        """The commit of every row-level write: position deletes for the
+        ``deleted`` target rows (carrying ``__file``/``__pos``), one
+        data-file write of ``rows`` and one snapshot holding both. No
+        snapshot when both come out empty."""
+        del_files = [] if deleted is None else self._write_position_deletes(deleted)
+        new_files = [] if rows is None else self._write_parquet_files(self._aligned(rows), partitioned=True)
         if not del_files and not new_files:
             return
         n = self._added_pos_deletes(del_files)
+        event = dict(operation=operation, data_files=len(new_files), delete_files=len(del_files), deleted_positions=n)
+        _log.debug("row-level commit: %s", event, extra=event)
         self._commit(
-            operation="overwrite",
+            operation=operation,
             new_data_files=new_files,
             new_delete_files=del_files,
             extra_summary={"added-position-deletes": str(n), "total-position-deletes": str(self._total_pos_deletes() + n)},
         )
+
+    def delete_where(self, condition) -> None:
+        """Merge-on-read DELETE: write position-delete files for matched
+        rows (no data-file rewrite). ``condition`` is a Column or a SQL
+        string; a SQL string also prunes the scanned data files by
+        partition values and column bounds."""
+        self._row_level_commit("delete", self._scan_with_pos(where=condition))
+
+    def update_where(self, condition, assignments: dict) -> None:
+        """Merge-on-read UPDATE: position-delete matched rows + append
+        re-written rows with ``assignments`` applied, in order, each a
+        SQL expression string, Column or literal. ``condition`` is
+        taken as by :meth:`delete_where`."""
+        matched = self._scan_with_pos(where=condition)
+        updated = matched
+        for col, val in assignments.items():
+            updated = updated.withColumn(col, _as_column(val))
+        self._row_level_commit("overwrite", matched, updated)
 
     def merge(
         self,
@@ -1486,7 +1502,8 @@ class IcebergTable:
     ) -> None:
         """MERGE INTO (merge-on-read): one commit containing
         position-deletes for matched target rows plus appended rows for
-        their replacements and for unmatched source rows.
+        their replacements and for unmatched source rows, written
+        together as one data write.
 
         - ``when_matched_update``: {col: sql_expr/Column/literal} —
           expressions may reference target columns and source columns
@@ -1504,44 +1521,25 @@ class IcebergTable:
         keys = [on] if isinstance(on, str) else list(on)
         tgt = self._scan_with_pos()
         src = source.alias("src")
-        cond = None
-        for k in keys:
-            clause = tgt[k].eqNullSafe(F.col(f"src.{k}"))
-            cond = clause if cond is None else (cond & clause)
+        cond = functools.reduce(Column.__and__, [tgt[k].eqNullSafe(F.col(f"src.{k}")) for k in keys])
         matched = tgt.alias("tgt").join(src, cond, "inner")
 
-        del_files: list[dict] = []
-        new_files: list[dict] = []
-        if when_matched_update or when_matched_delete:
-            del_files = self._write_position_deletes(matched)
-        if when_matched_update:
-            sel = []
-            for c in (cc.name for cc in self.schema.columns):
-                if c in when_matched_update:
-                    val = when_matched_update[c]
-                    expr = F.expr(val) if isinstance(val, str) else (val if isinstance(val, Column) else F.lit(val))
-                    sel.append(expr.alias(c))
-                else:
-                    sel.append(F.col(f"tgt.{c}").alias(c))
-            new_files += self._write_parquet_files(self._aligned(matched.select(*sel)), partitioned=True)
+        upd, parts = when_matched_update, []
+        if upd:
+            cols = [
+                (_as_column(upd[c.name]) if c.name in upd else F.col(f"tgt.{c.name}")).alias(c.name)
+                for c in self.schema.columns
+            ]
+            parts.append(matched.select(*cols))
         if when_not_matched_insert:
             # anti join source rows against target keys
             tkeys = tgt.select(*[F.col(k).alias(f"__t_{k}") for k in keys])
-            acond = None
-            for k in keys:
-                clause = F.col(f"src.{k}").eqNullSafe(F.col(f"__t_{k}"))
-                acond = clause if acond is None else (acond & clause)
-            unmatched = src.join(tkeys, acond, "left_anti")
-            new_files += self._write_parquet_files(self._aligned(unmatched), partitioned=True)
-        if not del_files and not new_files:
-            return
-        n = self._added_pos_deletes(del_files)
-        self._commit(
-            operation="overwrite",
-            new_data_files=new_files or None,
-            new_delete_files=del_files or None,
-            extra_summary={"added-position-deletes": str(n), "total-position-deletes": str(self._total_pos_deletes() + n)},
-        )
+            acond = functools.reduce(Column.__and__, [F.col(f"src.{k}").eqNullSafe(F.col(f"__t_{k}")) for k in keys])
+            parts.append(src.join(tkeys, acond, "left_anti"))
+        # each side conformed to the table schema first: the source may
+        # carry other columns or types than the updated rows
+        rows = functools.reduce(DataFrame.unionByName, map(self._aligned, parts)) if parts else None
+        self._row_level_commit("overwrite", matched if upd or when_matched_delete else None, rows)
 
     def delete_where_equality(self, keys_df: DataFrame) -> None:
         """Equality-delete commit: rows matching ANY row of ``keys_df``

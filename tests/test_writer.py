@@ -1082,3 +1082,85 @@ def test_position_delete_files_unique_and_sorted(spark, tmp_path):
         k for k in range(100) if k % 10 and k not in (1, 2, 55)
     ]
     assert t.meta.latest_snapshot().summary["added-position-deletes"] == "3"
+
+
+@pytest.mark.parametrize("format_version", [2, 3])
+def test_row_level_commits_on_table_without_data_files(spark, tmp_path, format_version):
+    """A table created from an empty DataFrame has a snapshot with no
+    data files: a delete or update on it commits nothing, and a merge
+    into it (the upsert bootstrap) inserts the source."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(
+        spark, path, spark.createDataFrame([], "k long, v string"), format_version=format_version
+    )
+    snaps = len(t.meta.snapshots)
+    t.delete_where("k < 3")
+    t.delete_where(F.col("k") < 3)
+    t.update_where("k = 1", {"v": "'x'"})
+    assert len(IcebergTable(spark, path).meta.snapshots) == snaps
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    t.merge(src, on="k", when_matched_update={"v": "src.v"})
+    t = IcebergTable(spark, path)
+    assert len(t.meta.snapshots) == snaps + 1
+    assert sorted(map(tuple, t.scan().collect())) == [(1, "a"), (2, "b")]
+
+
+def test_merge_one_data_write_and_raw_target_uri(spark, tmp_path, monkeypatch):
+    """A merge with update and insert makes two parquet writes, one of
+    position deletes and one of data files holding both the updated
+    and the inserted rows. The matched frame it hands to the
+    position-delete write keeps Spark's raw file URI: its plan runs no
+    URL decode or regex, which only the deleted rows pay inside the
+    write."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "t")
+    IcebergTable.create(spark, path, spark.range(50).selectExpr("id AS k", "CAST(id AS STRING) AS v"))
+    writes, deleted = [], []
+    write_files, write_deletes = IcebergTable._write_parquet_files, IcebergTable._write_position_deletes
+
+    def spy_files(self, df, *args, **kwargs):
+        writes.append(df)
+        return write_files(self, df, *args, **kwargs)
+
+    def spy_deletes(self, matched):
+        deleted.append(matched)
+        return write_deletes(self, matched)
+
+    monkeypatch.setattr(IcebergTable, "_write_parquet_files", spy_files)
+    monkeypatch.setattr(IcebergTable, "_write_position_deletes", spy_deletes)
+    src = spark.createDataFrame([(3, "x"), (4, "y"), (77, "z")], "k long, v string")
+    t = IcebergTable(spark, path)
+    t.merge(src, on="k", when_matched_update={"v": "src.v"})
+    assert len(deleted) == 1
+    plan = deleted[0]._jdf.queryExecution().executedPlan().toString()
+    for fn in ("UrlCodec", "url_decode", "regexp_replace"):
+        assert fn not in plan, plan
+    assert len(writes) == 2
+    got = dict(map(tuple, IcebergTable(spark, path).scan().collect()))
+    assert got == {**{k: str(k) for k in range(50)}, 3: "x", 4: "y", 77: "z"}
+
+
+def test_sql_delete_prunes_target_files(spark, tmp_path, caplog):
+    """A SQL-string delete_where scans only the data files whose column
+    bounds can match, and reports its commit in one DEBUG event."""
+    import logging
+
+    from duckdb_iceberg_spark import IcebergTable
+    from duckdb_iceberg_spark.sources import iceberg as SRC
+
+    path = str(tmp_path / "t")
+    # 8 slices of 10 consecutive keys: one data file each
+    t = IcebergTable.create(spark, path, spark.range(0, 80, 1, 8).selectExpr("id AS k"))
+    SRC._READ_CACHE.clear()
+    caplog.set_level(logging.DEBUG, logger="duckdb_iceberg_spark")
+    t.delete_where("k < 10")
+    relations = [r.files for r in caplog.records if r.name == "duckdb_iceberg_spark" and hasattr(r, "listed")]
+    assert relations == [1]
+    commits = [r for r in caplog.records if r.name == "duckdb_iceberg_spark" and hasattr(r, "deleted_positions")]
+    assert [(r.operation, r.data_files, r.delete_files, r.deleted_positions) for r in commits] == [
+        ("delete", 0, 1, 10)
+    ]
+    assert sorted(r.k for r in IcebergTable(spark, path).scan().collect()) == list(range(10, 80))
