@@ -259,6 +259,10 @@ def spark_partition_column(pf: PartitionField, dtype: str) -> Column:
     c = F.col(pf.source)
     if pf.transform == "identity":
         return c
+    if dtype == "timestamp" and pf.transform in ("days", "months", "years"):
+        # Iceberg cuts a timestamptz at UTC days; Spark's to_date, year
+        # and month would cut it in the session time zone
+        c = F.date_from_unix_date(F.floor(F.unix_micros(c) / 86_400_000_000).cast("int"))
     if pf.transform == "days":
         return F.to_date(c)
     if pf.transform == "months":

@@ -60,6 +60,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import datetime
+import decimal
 import functools
 import json
 import logging
@@ -67,6 +68,7 @@ import math
 import os
 import re
 import threading
+import zoneinfo
 from collections import Counter, OrderedDict
 from types import SimpleNamespace
 from typing import Any, NamedTuple, Optional
@@ -549,7 +551,9 @@ def iceberg_scan(
     data_entries = scan.data_files()
     where_proven = False
     if where is not None:
-        w_stats, w_part, w_checks = _predicate_to_pruners(meta, where)
+        w_stats, w_part, w_checks = _predicate_to_pruners(
+            meta, where, spark.conf.get("spark.sql.session.timeZone")
+        )
         if w_stats:
             data_entries = _prune_by_stats(meta, data_entries, w_stats)
         if w_part:
@@ -924,12 +928,15 @@ def _prune_by_partition(meta: TableMetadata, entries, flt, strict: bool = True):
                         return _dt.date.fromisoformat(x)
                     return x
 
-                if isinstance(lit, (list, tuple, set, frozenset)):
-                    # multi-value (IN-list) filter: keep files whose
-                    # partition value matches ANY of the transformed values
-                    targets[pf.name] = frozenset(pf.apply(_conv(x)) for x in lit)
-                else:
-                    targets[pf.name] = pf.apply(_conv(lit))
+                try:
+                    if isinstance(lit, (list, tuple, set, frozenset)):
+                        # multi-value (IN-list) filter: keep files whose
+                        # partition value matches ANY of the transformed values
+                        targets[pf.name] = frozenset(pf.apply(_conv(x)) for x in lit)
+                    else:
+                        targets[pf.name] = pf.apply(_conv(lit))
+                except ValueError:
+                    continue  # the transform takes no such literal (bucket of a timestamp): keep the files
         targets_by_spec[sid] = targets
 
     # an entry written under a spec that lacks the field entirely (vs
@@ -950,65 +957,83 @@ def _prune_by_partition(meta: TableMetadata, entries, flt, strict: bool = True):
     return [e for e in entries if _keep(e)]
 
 
-import re as _re
-
-_CLAUSE_RE = _re.compile(
-    r"^\s*(\w+)\s*(>=|<=|==|=|<|>)\s*(?:(?:DATE|TIMESTAMP)\s+)?('[^']*'|[\w.\-:]+)\s*$",
-    _re.IGNORECASE,
+# One literal: an optional DATE/TIMESTAMP type word, then a quoted
+# string or a bare token (a number, or a word Spark reads as a column).
+_LIT = r"(?:(DATE|TIMESTAMP)\s+)?('[^']*'|[\w.\-:]+)"
+_CLAUSE_RE = re.compile(rf"\s*(\w+)\s*(>=|<=|==|=|<|>)\s*{_LIT}\s*", re.IGNORECASE)
+_BETWEEN_RE = re.compile(rf"\s*(\w+)\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}\s*", re.IGNORECASE)
+# "col NOT IN (...)" cannot match: NOT breaks \w+\s+IN
+_IN_RE = re.compile(r"\s*(\w+)\s+IN\s*\((.*)\)\s*", re.IGNORECASE)
+_LIT_RE = re.compile(rf"\s*{_LIT}\s*", re.IGNORECASE)
+_NUMBER_RE = re.compile(r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?")
+# what decides a predicate's top-level shape; quoted strings and
+# identifiers match whole, so a keyword inside one splits nothing
+_SQL_TOKEN_RE = re.compile(
+    r"""'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*"|`[^`]*`|--|/\*|[()]|\b(?:AND|OR|BETWEEN|CASE|END)\b""",
+    re.IGNORECASE,
 )
-_BETWEEN_RE = _re.compile(
-    r"(\w+)\s+BETWEEN\s+(?:(?:DATE|TIMESTAMP)\s+)?('[^']*'|[\w.\-:]+)\s+AND\s+(?:(?:DATE|TIMESTAMP)\s+)?('[^']*'|[\w.\-:]+)",
-    _re.IGNORECASE,
-)
-# anchored so "col NOT IN (...)" cannot match (NOT breaks \w+\s+IN)
-_IN_RE = _re.compile(r"^\s*(\w+)\s+IN\s*\(([^)]*)\)\s*$", _re.IGNORECASE)
 
 
-def _parse_literal(tok: str):
-    tok = tok.strip()
-    if tok.startswith("'") and tok.endswith("'"):
-        return tok[1:-1]
+def _conjuncts(where: str) -> Optional[list[str]]:
+    """The top-level AND terms of ``where`` (a BETWEEN keeps its own
+    AND), or None when a top-level OR or a comment leaves no term that
+    holds on its own. Parentheses and CASE ... END nest."""
+    terms, start, depth, between = [], 0, 0, False
+    for m in _SQL_TOKEN_RE.finditer(where):
+        tok = m.group(0).upper()
+        if tok in ("--", "/*") or (depth == 0 and tok == "OR"):
+            return None
+        depth += (tok in ("(", "CASE")) - (tok in (")", "END"))
+        if depth == 0 and tok == "BETWEEN":
+            between = True
+        elif depth == 0 and tok == "AND":
+            if not between:
+                terms.append(where[start : m.start()])
+                start = m.end()
+            between = False
+    return terms + [where[start:]]
+
+
+def _bind_literal(typed: Optional[str], tok: str, dt, session_tz: str):
+    """The value Spark gives literal ``tok`` (after type word ``typed``)
+    against a column of type ``dt``, in the manifest bounds' domain;
+    None when pruning must not trust it. Spark reads a bare word
+    (``a = b``, ``1_0``) as a column and unescapes backslashes in
+    quotes; a decimal stays exact; a zoneless TIMESTAMP literal is
+    session-zone time, bound as UTC."""
+    quoted, s, typed = tok.startswith("'"), tok[1:-1], (typed or "").upper()
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType)):
+        if typed or quoted or not _NUMBER_RE.fullmatch(tok):
+            return None
+        if isinstance(dt, T.DecimalType):
+            return decimal.Decimal(tok)
+        return int(tok) if re.fullmatch(r"[-+]?\d+", tok) else float(tok)
+    if not quoted or "\\" in s:
+        return None
+    if isinstance(dt, T.StringType):
+        return None if typed else s
     try:
-        return int(tok)
-    except ValueError:
-        pass
-    try:
-        return float(tok)
-    except ValueError:
-        return tok
-
-
-def _lit_compatible(lit, dt) -> bool:
-    """Only trust a parsed literal for pruning when its Python type
-    matches the column's domain (a bare identifier RHS — e.g.
-    ``col = other_col`` — parses as a string and must not prune a
-    numeric column)."""
-    from pyspark.sql import types as _T
-
-    if isinstance(dt, (_T.IntegerType, _T.LongType, _T.ShortType, _T.ByteType, _T.FloatType, _T.DoubleType, _T.DecimalType)):
-        return isinstance(lit, (int, float))
-    if isinstance(dt, (_T.DateType, _T.TimestampType, _T.TimestampNTZType)):
-        if not isinstance(lit, str):
-            return False
-        import datetime as _dt
-
-        try:
-            _dt.datetime.fromisoformat(lit)
-            return True
-        except ValueError:
-            return False
-    if isinstance(dt, _T.StringType):
-        return isinstance(lit, str)
-    return False
+        if isinstance(dt, T.DateType) and typed != "TIMESTAMP" and re.fullmatch(r"\d{4}-\d{2}-\d{2}", s):
+            return datetime.date.fromisoformat(s)
+        if not isinstance(dt, (T.TimestampType, T.TimestampNTZType)) or typed == "DATE":
+            return None
+        v = datetime.datetime.fromisoformat(s)
+        if isinstance(dt, T.TimestampNTZType):
+            return None if v.tzinfo or typed else v.replace(tzinfo=datetime.timezone.utc)
+        if v.tzinfo is None:
+            v = v.replace(tzinfo=zoneinfo.ZoneInfo(session_tz))
+        return v.astimezone(datetime.timezone.utc)
+    except (KeyError, OSError, ValueError):  # not a date, or a zone id Python cannot resolve
+        return None
 
 
 def _predicate_to_pruners(
-    meta: TableMetadata, where: str
+    meta: TableMetadata, where: str, session_tz: str = "UTC"
 ) -> tuple[dict, dict, Optional[list]]:
     """Best-effort translation of a conjunctive SQL predicate into
     (stats_filter ranges, partition equality dict, implication checks).
-    Clauses that don't parse contribute nothing — the row filter still
-    applies them.
+    Terms that don't parse contribute nothing — the row filter still
+    applies them. ``session_tz`` is the zone of zoneless timestamps.
 
     The third element is a list of (col, op, literal) checks usable to
     PROVE the predicate over a file's manifest bounds (so the residual
@@ -1021,13 +1046,6 @@ def _predicate_to_pruners(
     part_eq: dict = {}
     checks: list = []
     complete = True
-
-    # Conservative OR guard: a disjunction can scope any clause (e.g.
-    # "x BETWEEN 1 AND 2 OR y = 3" must keep rows outside [1,2]), and
-    # the clause extractors below assume pure conjunction — prune
-    # nothing; the exact row filter still applies the predicate.
-    if _re.search(r"\bOR\b", where, _re.IGNORECASE):
-        return {}, {}, None
 
     def add(col: str, lo, hi, lo_strict: bool = False, hi_strict: bool = False):
         cur = ranges.setdefault(col, [None, None, False, False])
@@ -1042,61 +1060,42 @@ def _predicate_to_pruners(
             elif hi == cur[1]:
                 cur[3] = cur[3] or hi_strict
 
-    rest = where
-    for m in _BETWEEN_RE.finditer(where):
-        col, lo, hi = m.group(1), _parse_literal(m.group(2)), _parse_literal(m.group(3))
-        if col in known and _lit_compatible(lo, known[col]) and _lit_compatible(hi, known[col]):
-            add(col, lo, hi)
-            checks += [(col, ">=", lo), (col, "<=", hi)]
-        else:
+    terms = _conjuncts(where)
+    if terms is None:
+        return {}, {}, None
+    for term in terms:
+        items = []
+        if m := _BETWEEN_RE.fullmatch(term):
+            ops, lits = (">=", "<="), [m.group(2, 3), m.group(4, 5)]
+        elif m := _CLAUSE_RE.fullmatch(term):
+            ops, lits = (m.group(2).replace("==", "="),), [m.group(3, 4)]
+        elif m := _IN_RE.fullmatch(term):
+            # split on the commas outside quotes; each item one literal
+            items = [_LIT_RE.fullmatch(t) for t in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", m.group(2))]
+            ops, lits = ("in",), [i.group(1, 2) for i in items if i]
+        vals = [_bind_literal(*lit, known[m.group(1)], session_tz) for lit in lits] if m and m.group(1) in known else []
+        if not vals or None in vals or not all(items):
             complete = False
-        rest = rest.replace(m.group(0), " 1=1 ")
-    for clause in _re.split(r"\s+AND\s+", rest, flags=_re.IGNORECASE):
-        if clause.strip() in ("1=1", ""):
-            continue  # BETWEEN placeholder
-        m_in = _IN_RE.match(clause)
-        if m_in:
-            col = m_in.group(1)
-            vals = [
-                _parse_literal(t.strip())
-                for t in _re.findall(r"'[^']*'|[^,]+", m_in.group(2))
-                if t.strip()
-            ]
-            if col in known and vals and all(_lit_compatible(v, known[col]) for v in vals):
-                try:
-                    add(col, min(vals), max(vals))
-                except TypeError:
-                    pass
+            continue
+        col = m.group(1)
+        if ops == ("in",):
+            if len(vals) > 1:
+                add(col, min(vals), max(vals))
                 part_eq[col] = vals
-                if len(vals) == 1:
-                    checks.append((col, "=", vals[0]))
-                else:
-                    complete = False  # membership not provable from bounds
-            else:
-                complete = False
-            continue
-        m = _CLAUSE_RE.match(clause)
-        if not m:
-            complete = False
-            continue
-        col, op, lit = m.group(1), m.group(2), _parse_literal(m.group(3))
-        if col not in known or not _lit_compatible(lit, known[col]):
-            complete = False
-            continue
-        if op in ("=", "=="):
-            add(col, lit, lit)
-            part_eq[col] = lit
-            checks.append((col, "=", lit))
-        elif op in (">", ">="):
-            add(col, lit, None, lo_strict=(op == ">"))
-            checks.append((col, op, lit))
-        elif op in ("<", "<="):
-            add(col, None, lit, hi_strict=(op == "<"))
-            checks.append((col, op, lit))
-        else:
-            complete = False
+                complete = False  # membership not provable from bounds
+                continue
+            ops = ("=",)
+        for op, v in zip(ops, vals):
+            lo, hi = (v if op in ("=", ">", ">=") else None), (v if op in ("=", "<", "<=") else None)
+            add(col, lo, hi, lo_strict=(op == ">"), hi_strict=(op == "<"))
+            checks.append((col, op, v))
+            if op == "=":
+                part_eq[col] = v
+    # Spark orders NaN above every number and Iceberg bounds leave NaN
+    # out: a float range with no upper end could drop a file of NaNs
+    floats = (T.FloatType, T.DoubleType)
     return (
-        {c: tuple(v) for c, v in ranges.items()},
+        {c: tuple(v) for c, v in ranges.items() if v[1] is not None or not isinstance(known[c], floats)},
         part_eq,
         checks if (complete and checks) else None,
     )

@@ -1454,13 +1454,16 @@ class IcebergTable:
             },
         )
 
-    def _row_level_commit(self, operation: str, deleted: Optional[DataFrame], rows: Optional[DataFrame] = None) -> None:
+    def _row_level_commit(self, operation: str, deleted: Optional[DataFrame], parts: list[DataFrame] = ()) -> None:
         """The commit of every row-level write: position deletes for the
         ``deleted`` target rows (carrying ``__file``/``__pos``), one
-        data-file write of ``rows`` and one snapshot holding both. No
-        snapshot when both come out empty."""
+        data-file write of the row frames ``parts``, each conformed to
+        the table schema first (a merge source may carry other columns
+        or types than its updated rows), and one snapshot holding both.
+        No snapshot when both come out empty."""
         del_files = [] if deleted is None else self._write_position_deletes(deleted)
-        new_files = [] if rows is None else self._write_parquet_files(self._aligned(rows), partitioned=True)
+        rows = functools.reduce(DataFrame.unionByName, map(self._aligned, parts)) if parts else None
+        new_files = [] if rows is None else self._write_parquet_files(rows, partitioned=True)
         if not del_files and not new_files:
             return
         n = self._added_pos_deletes(del_files)
@@ -1489,7 +1492,7 @@ class IcebergTable:
         updated = matched
         for col, val in assignments.items():
             updated = updated.withColumn(col, _as_column(val))
-        self._row_level_commit("overwrite", matched, updated)
+        self._row_level_commit("overwrite", matched, [updated])
 
     def merge(
         self,
@@ -1536,10 +1539,7 @@ class IcebergTable:
             tkeys = tgt.select(*[F.col(k).alias(f"__t_{k}") for k in keys])
             acond = functools.reduce(Column.__and__, [F.col(f"src.{k}").eqNullSafe(F.col(f"__t_{k}")) for k in keys])
             parts.append(src.join(tkeys, acond, "left_anti"))
-        # each side conformed to the table schema first: the source may
-        # carry other columns or types than the updated rows
-        rows = functools.reduce(DataFrame.unionByName, map(self._aligned, parts)) if parts else None
-        self._row_level_commit("overwrite", matched if upd or when_matched_delete else None, rows)
+        self._row_level_commit("overwrite", matched if upd or when_matched_delete else None, parts)
 
     def delete_where_equality(self, keys_df: DataFrame) -> None:
         """Equality-delete commit: rows matching ANY row of ``keys_df``

@@ -1013,3 +1013,53 @@ def test_delete_application_event(spark, tmp_path, caplog):
         assert df.count() == 40 - e.deleted_rows
     assert got["plain"][1:] == (0, 5, True) and got["plain"][0] >= 1
     assert got["spaced"][0] == 0 and got["spaced"][2:] == (3, True) and got["spaced"][1] >= 1
+
+
+def test_where_pruners_trust_only_true_literals():
+    """Pruning reads a term only when Spark would read the same value
+    from it: a bare word on the right is a column, not a string; a
+    keyword inside a quoted string or a comment splits nothing; a
+    BETWEEN or comparison with more after it, a NOT, a CASE or an OR
+    around a term all stop it pruning alone; decimals stay exact; a
+    float range needs an upper end (NaN sorts above every number); a
+    zoneless timestamp is read in the session time zone."""
+    import decimal
+    from types import SimpleNamespace
+
+    from pyspark.sql import types as T
+
+    from duckdb_iceberg_spark.sources.iceberg import _predicate_to_pruners
+
+    cols = dict(
+        k=T.LongType(), a=T.StringType(), b=T.StringType(), x=T.DoubleType(),
+        d=T.DecimalType(10, 2), ts=T.TimestampType(), ntz=T.TimestampNTZType(), day=T.DateType(),
+    )
+    meta = SimpleNamespace(
+        current_schema_id=0,
+        schemas={0: SimpleNamespace(columns=[SimpleNamespace(name=n, spark_type=t) for n, t in cols.items()])},
+    )
+
+    def ranges(where, tz="UTC"):
+        return _predicate_to_pruners(meta, where, tz)[0]
+
+    for where in (
+        "a = b", "a IN (b, 'x')", "a IN ('x' 'y')", "a = true", "k = 1_0", "k = 5-3",
+        "a = 'c:\\x'", "k BETWEEN 1 AND 5 + 2", "NOT k BETWEEN 1 AND 5", "NOT k = 5",
+        "CASE WHEN b = 'y' AND k = 5 THEN true END", "k = 5 -- and more", "k = 5 /* AND */",
+        "a = 'y' OR k = 5", "x > 5", "x >= 1e3", "day = '2024-01-01 10:00:00'",
+        "ntz = '2024-01-01T00:00:00+02:00'", "a = TIMESTAMP '2024-01-01'",
+    ):
+        assert ranges(where) == {}, where
+    assert ranges("a = 'x AND k = 5 AND y'") == {"a": ("x AND k = 5 AND y",) * 2 + (False, False)}
+    assert ranges("k BETWEEN 1 AND 5 AND a >= 'm'") == {"k": (1, 5, False, False), "a": ("m", None, False, False)}
+    assert ranges("k = 1 AND (a = 'x' OR k = 2)") == {"k": (1, 1, False, False)}
+    assert ranges("d <= 1.1") == {"d": (None, decimal.Decimal("1.1"), False, False)}
+    assert ranges("x > 5 AND x < 9") == {"x": (5, 9, True, True)}
+    utc = datetime.timezone.utc
+    assert ranges("ts < '2024-01-01 00:00:00'", "America/Los_Angeles") == {
+        "ts": (None, datetime.datetime(2024, 1, 1, 8, tzinfo=utc), False, True)
+    }
+    assert ranges("ts < TIMESTAMP '2024-01-01 00:00:00+01:00'", "America/Los_Angeles") == {
+        "ts": (None, datetime.datetime(2023, 12, 31, 23, tzinfo=utc), False, True)
+    }
+    assert ranges("ts < '2024-01-01'", "+02:00") == {}  # a zone Python cannot resolve

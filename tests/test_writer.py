@@ -1164,3 +1164,55 @@ def test_sql_delete_prunes_target_files(spark, tmp_path, caplog):
         ("delete", 0, 1, 10)
     ]
     assert sorted(r.k for r in IcebergTable(spark, path).scan().collect()) == list(range(10, 80))
+
+
+def test_sql_row_level_writes_compare_columns(spark, tmp_path):
+    """A SQL condition that compares two columns (a bare word on the
+    right, not a quoted literal) prunes no target file: update_where
+    and delete_where reach the matching row of every file, as Spark's
+    own filter does."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "t")
+    # 4 files with disjoint bounds on a; one row per file has a = b
+    df = spark.range(0, 40, 1, 4).selectExpr(
+        "id AS k", "lpad(CAST(id AS STRING), 3, '0') AS a",
+        "IF(id % 10 = 3, lpad(CAST(id AS STRING), 3, '0'), 'zzz') AS b", "'v' AS v",
+    )
+    t = IcebergTable.create(spark, path, df)
+    t.update_where("a = b", {"v": "'u'"})
+    rows = IcebergTable(spark, path).scan().collect()
+    assert sorted(r.k for r in rows if r.v == "u") == [3, 13, 23, 33]
+    t = IcebergTable(spark, path)
+    t.delete_where("a IN (b, 'none')")
+    assert sorted(r.k for r in IcebergTable(spark, path).scan().collect()) == [
+        k for k in range(40) if k % 10 != 3
+    ]
+
+
+def test_sql_delete_reads_timestamps_in_session_time_zone(spark, tmp_path):
+    """A zoneless timestamp literal in a delete_where condition is
+    session-zone wall-clock time, as in Spark's own filter. In a Los
+    Angeles session, ``ts < '2024-01-01 00:00:00'`` holds up to 08:00
+    UTC, so pruning must keep the file whose row sits at 07:30 UTC
+    (microsecond timestamps give the files column bounds). A days(ts)
+    partition is the UTC day, whatever the session zone."""
+    from duckdb_iceberg_spark import IcebergTable
+    from duckdb_iceberg_spark.plans.manifests import load_table_scan
+
+    # one row per file: 2024-01-01 07:30 UTC and 09:00 UTC
+    df = spark.range(0, 2, 1, 2).selectExpr("id AS k", "timestamp_seconds(1704094200 + id * 5400) AS ts")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try:
+        for i, partition_by in enumerate([None, [("days", "ts")]]):
+            path = str(tmp_path / f"t{i}")
+            t = IcebergTable.create(spark, path, df, partition_by=partition_by)
+            t.delete_where("ts < '2024-01-01 00:00:00'")
+            t = IcebergTable(spark, path)
+            assert [r.k for r in t.scan().collect()] == [1], partition_by
+        files = load_table_scan(t.meta, t.meta.latest_snapshot(), path).data_files()
+        assert sorted(e.partition["ts_day"] for e in files) == [19723, 19723]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
