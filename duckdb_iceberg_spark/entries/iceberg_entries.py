@@ -239,10 +239,29 @@ GROUP BY 1
 """
 
 
+_LI_TABLE = f"{REFERENCE_ICEBERG}/lineitem_iceberg"
+_LI_GZ = f"{REFERENCE_ICEBERG}/lineitem_iceberg_gz"
+
+# Entries whose query and oracle both read the reference tables under
+# REFERENCE_ICEBERG (through GEN2, _LI_TABLE or _LI_GZ).
+_REFERENCE_ENTRIES = frozenset(
+    {
+        "iceberg_arrow_scan",
+        "iceberg_history",
+        "iceberg_list_files",
+        "iceberg_metadata_entries",
+        "iceberg_scan_generated",
+        "iceberg_scan_where",
+        "iceberg_snapshots",
+        "iceberg_time_travel",
+    }
+)
+
+
 def _iceberg_snapshots_q(spark, sf):
     from duckdb_iceberg_spark import iceberg_snapshots
 
-    df = iceberg_snapshots(spark, "/root/reference/data/iceberg/lineitem_iceberg")
+    df = iceberg_snapshots(spark, _LI_TABLE)
     return df.select(
         "sequence_number",
         "snapshot_id",
@@ -259,10 +278,6 @@ SELECT * FROM (VALUES
    'snap-7635660646343998149-1-10eaca8a-1e1c-421e-ad6d-b232e5ee23d3.avro')
 ) AS t(sequence_number, snapshot_id, ts, manifest_file)
 """
-
-
-_LI_TABLE = "/root/reference/data/iceberg/lineitem_iceberg"
-_LI_GZ = "/root/reference/data/iceberg/lineitem_iceberg_gz"
 
 
 def _iceberg_history_q(spark, sf):

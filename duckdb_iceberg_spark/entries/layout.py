@@ -24,7 +24,10 @@ from duckdb_iceberg_spark.operators import packing as PK
 from duckdb_iceberg_spark.operators import sampling as SA
 from duckdb_iceberg_spark.operators import similarity as SIM
 
-GEN2 = "/root/reference/data/iceberg/generated_spec2_0_001"
+# The reference repo's checked-in Iceberg tables (the golden-count
+# source); every entry and test path into them derives from this root.
+REFERENCE_ICEBERG = "/root/reference/data/iceberg"
+GEN2 = f"{REFERENCE_ICEBERG}/generated_spec2_0_001"
 
 
 # Opt-in physical-layout overlay: (abs sf_dir, table) -> catalog table

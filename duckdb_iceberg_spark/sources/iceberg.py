@@ -533,7 +533,13 @@ def iceberg_scan(
     src/common/schema.cpp:104-106 maps time to a real DuckDB TIME) so
     cross-engine diffs line up. Default off: the LONG form stays
     sortable/arithmetic-friendly.
+
+    ``io`` picks the data-file reader: ``"spark"`` (default) or
+    ``"arrow"`` (sources/arrow_scan.py). Any other value raises
+    ``ValueError`` before any metadata is read, whatever the mode.
     """
+    if io not in ("spark", "arrow"):
+        raise ValueError(f"io must be 'spark' or 'arrow', got {io!r}")
     meta = _load(
         path,
         version=version,
@@ -656,8 +662,6 @@ def iceberg_scan(
         if where is not None and not where_proven:
             df = df.filter(where)
         return df
-    if io != "spark":
-        raise ValueError(f"io must be 'spark' or 'arrow', got {io!r}")
 
     # Field-id based column resolution (the reference pushes a
     # field_id->column map into the parquet reader, iceberg_scan.cpp:103-128;

@@ -9,12 +9,14 @@ Reference goldens: 51,793 (lineitem_iceberg latest) and 6,592 (the
 import os
 
 import pytest
+from conftest import REFERENCE_DATA, requires_reference
 
 from duckdb_iceberg_spark import iceberg_scan
 
-B = "/root/reference/data/iceberg"
+B = REFERENCE_DATA
 
 
+@requires_reference
 def test_arrow_io_golden_counts(spark):
     assert (
         iceberg_scan(spark, f"{B}/lineitem_iceberg", allow_moved_paths=True, io="arrow").count()
@@ -28,6 +30,7 @@ def test_arrow_io_golden_counts(spark):
     )
 
 
+@requires_reference
 def test_arrow_io_rows_equal_spark_io(spark):
     """Full-row parity on the MoR table: positional deletes applied
     in-reader, field-id resolution, INT->BIGINT widening, add-column
@@ -38,6 +41,7 @@ def test_arrow_io_rows_equal_spark_io(spark):
     assert a == b
 
 
+@requires_reference
 def test_arrow_io_where_filters_and_prunes(spark):
     p = f"{B}/generated_spec2_0_001/pyspark_iceberg_table"
     w = "l_extendedprice_double < 20000 AND l_partkey_int >= 100"
@@ -46,6 +50,7 @@ def test_arrow_io_where_filters_and_prunes(spark):
     assert a == b
 
 
+@requires_reference
 def test_arrow_io_time_travel(spark):
     got = iceberg_scan(
         spark, f"{B}/lineitem_iceberg", allow_moved_paths=True, io="arrow",
@@ -81,6 +86,34 @@ def test_arrow_io_equality_deletes_match_spark_io(spark, tmp_path):
 def test_arrow_io_rejects_bad_mode(spark):
     with pytest.raises(ValueError, match="io must be"):
         iceberg_scan(spark, f"{B}/lineitem_iceberg", allow_moved_paths=True, io="duck")
+
+
+def test_bad_io_rejected_before_metadata_io(spark, tmp_path):
+    """An unknown io= is refused up front: in list_files mode and on a
+    table with no data files (both returned early before the check
+    moved), and on a path with no table at all — the argument is
+    checked before any metadata is resolved."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    full = str(tmp_path / "full")
+    empty = str(tmp_path / "empty")
+    IcebergTable.create(spark, full, df)
+    IcebergTable.create(spark, empty, df.limit(0))
+    msg = "io must be 'spark' or 'arrow', got 'duck'"
+    for path, kw in [
+        (full, {"mode": "list_files"}),
+        (empty, {}),
+        (str(tmp_path / "missing"), {}),
+    ]:
+        with pytest.raises(ValueError, match="io must be") as e:
+            iceberg_scan(spark, path, io="duck", **kw)
+        assert str(e.value) == msg, (path, kw)
+    # the valid values still read both tables
+    files = iceberg_scan(spark, full, mode="list_files").collect()
+    assert files and {r.type for r in files} == {"data"}
+    assert iceberg_scan(spark, empty).count() == 0
+    assert iceberg_scan(spark, empty, io="arrow").count() == 0
 
 
 def test_arrow_io_credentials_never_in_plan(spark, monkeypatch):

@@ -7,9 +7,11 @@ from pathlib import Path
 import pytest
 
 sys.path.insert(0, str(Path(__file__).parent))
+from conftest import requires_reference
 from oracle_harness import compare_query
 
 import __spark_entry__ as E
+from duckdb_iceberg_spark.entries.iceberg_entries import _REFERENCE_ENTRIES
 
 _QUERIES = E.queries()
 _ORACLES = E.oracle_sql()
@@ -34,6 +36,12 @@ def test_core_aliases_are_pure_aliases():
     assert all(a in window for a in E._CORE_ALIASES)
 
 
+def test_reference_entries_are_declared():
+    """The entries skipped without the reference tables are real,
+    oracle-checked entries (a stale name would silently mark nothing)."""
+    assert _REFERENCE_ENTRIES <= set(_ORACLES) - set(E._CORE_ALIASES)
+
+
 def test_entry_smoke(spark):
     df = E.entry(spark)
     rows = df.collect()
@@ -42,7 +50,12 @@ def test_entry_smoke(spark):
 
 
 @pytest.mark.parametrize(
-    "name", sorted(k for k in _QUERIES if k not in E._CORE_ALIASES)
+    "name",
+    [
+        pytest.param(k, marks=requires_reference) if k in _REFERENCE_ENTRIES else k
+        for k in sorted(_QUERIES)
+        if k not in E._CORE_ALIASES
+    ],
 )
 def test_query_matches_oracle(spark, sf_dir, name):
     ok, detail = compare_query(spark, sf_dir, name, _QUERIES[name], _ORACLES.get(name))

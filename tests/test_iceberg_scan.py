@@ -6,27 +6,32 @@ import datetime
 import os
 
 import pytest
+from conftest import REFERENCE_DATA, requires_reference
 from pyspark.sql import functions as F
 
 from duckdb_iceberg_spark import iceberg_metadata, iceberg_scan, iceberg_snapshots
 
-BASE = "/root/reference/data/iceberg"
+BASE = REFERENCE_DATA
 LI = f"{BASE}/lineitem_iceberg"
 
 
+@requires_reference
 def test_scan_latest_count(spark):
     assert iceberg_scan(spark, LI, allow_moved_paths=True).count() == 51793
 
 
+@requires_reference
 def test_scan_snapshot_id(spark):
     df = iceberg_scan(spark, LI, snapshot_id=3776207205136740581, allow_moved_paths=True)
     assert df.count() == 60175
 
 
+@requires_reference
 def test_scan_version_param(spark):
     assert iceberg_scan(spark, LI, version="1", allow_moved_paths=True).count() == 60175
 
 
+@requires_reference
 def test_scan_timestamp(spark):
     df = iceberg_scan(spark, LI, timestamp=datetime.datetime(2023, 2, 15, 15, 8, 0), allow_moved_paths=True)
     assert df.count() == 60175
@@ -35,11 +40,13 @@ def test_scan_timestamp(spark):
         iceberg_scan(spark, LI, timestamp=datetime.datetime(2000, 1, 1), allow_moved_paths=True)
 
 
+@requires_reference
 def test_scan_gz_metadata(spark):
     df = iceberg_scan(spark, f"{BASE}/lineitem_iceberg_gz", metadata_compression_codec="gzip", allow_moved_paths=True)
     assert df.count() == 111968
 
 
+@requires_reference
 def test_scan_pushdown_reaches_parquet(spark):
     """Filters and projection must reach the parquet scan (100 TB
     requirement: file-skipping + column pruning)."""
@@ -49,6 +56,7 @@ def test_scan_pushdown_reaches_parquet(spark):
     assert "ReadSchema" in plan
 
 
+@requires_reference
 def test_snapshots_listing(spark):
     rows = iceberg_snapshots(spark, LI).orderBy("sequence_number").collect()
     assert [(r.sequence_number, r.snapshot_id) for r in rows] == [
@@ -58,6 +66,7 @@ def test_snapshots_listing(spark):
     assert str(rows[0].timestamp_ms).startswith("2023-02-15 15:07:54.504")
 
 
+@requires_reference
 def test_metadata_listing(spark):
     rows = iceberg_metadata(spark, LI, allow_moved_paths=True).collect()
     got = {(r.manifest_sequence_number, r.manifest_content, r.status, r.content, r.record_count) for r in rows}
@@ -68,12 +77,14 @@ def test_metadata_listing(spark):
     assert all(r.file_path.startswith("lineitem_iceberg/data/") for r in rows)
 
 
+@requires_reference
 def test_list_files_mode(spark):
     rows = iceberg_scan(spark, f"{BASE}/generated_spec2_0_001/pyspark_iceberg_table", mode="list_files", allow_moved_paths=True).collect()
     types = {r.type for r in rows}
     assert types == {"data", "delete"}
 
 
+@requires_reference
 @pytest.mark.parametrize("spec,final_rows", [("generated_spec1_0_001", 7690), ("generated_spec2_0_001", 6592)])
 def test_generated_full_table_equality(spark, spec, final_rows):
     """The reference's core correctness engine (SURVEY §5 layer 2):
@@ -87,6 +98,7 @@ def test_generated_full_table_equality(spark, spec, final_rows):
     assert exp.select(cols).exceptAll(ours.select(cols)).count() == 0
 
 
+@requires_reference
 def test_schema_evolution_time_travel(spark):
     t = f"{BASE}/generated_spec2_0_001/pyspark_iceberg_table"
     latest = iceberg_scan(spark, t, allow_moved_paths=True)
@@ -97,6 +109,7 @@ def test_schema_evolution_time_travel(spark):
     assert "schema_evol_added_col_1" not in v6.columns
 
 
+@requires_reference
 def test_mor_plan_shape(spark):
     """Plan-shape parity with the reference's EXPLAIN assertion
     (ANTI join; deletes side broadcast so no shuffle on the big side)."""
@@ -106,12 +119,13 @@ def test_mor_plan_shape(spark):
     assert "Broadcast" in plan
 
 
+@requires_reference
 def test_history_ancestry(spark):
     """history(): parent links follow the snapshot chain and every
     logged snapshot on the linear chain is a current ancestor."""
     from duckdb_iceberg_spark import iceberg_history
 
-    df = iceberg_history(spark, "/root/reference/data/iceberg/generated_spec2_0_001/pyspark_iceberg_table")
+    df = iceberg_history(spark, f"{BASE}/generated_spec2_0_001/pyspark_iceberg_table")
     rows = sorted(df.collect(), key=lambda r: r.made_current_at)
     assert len(rows) >= 2
     assert rows[0].parent_id is None
@@ -120,12 +134,13 @@ def test_history_ancestry(spark):
     assert all(r.is_current_ancestor for r in rows)
 
 
+@requires_reference
 def test_register_sql_views_family(spark):
     """SQL-first parity: the whole reference query surface through
     spark.sql against registered views, golden counts intact."""
     from duckdb_iceberg_spark import register_sql_views
 
-    path = "/root/reference/data/iceberg/lineitem_iceberg"
+    path = LI
     names = register_sql_views(spark, path, "li", allow_moved_paths=True)
     assert set(names) == {"li", "li_snapshots", "li_metadata", "li_history", "li_partitions", "li_files"}
     assert spark.sql("SELECT COUNT(*) AS n FROM li").first().n == 51793
@@ -141,6 +156,7 @@ def test_register_sql_views_family(spark):
     assert row.rc is None or row.rc >= 0
 
 
+@requires_reference
 def test_register_sql_views_opts_forwarding(spark):
     """codec/time-travel/stray-mode opts must forward to ALL six
     views: gzip metadata + snapshot_id registration succeeds and
@@ -148,7 +164,7 @@ def test_register_sql_views_opts_forwarding(spark):
     across scan+snapshots+metadata, test/sql/iceberg_scan.test)."""
     from duckdb_iceberg_spark import register_sql_views
 
-    path = "/root/reference/data/iceberg/lineitem_iceberg_gz"
+    path = f"{BASE}/lineitem_iceberg_gz"
     names = register_sql_views(
         spark,
         path,
@@ -243,6 +259,7 @@ def test_time_as_string_rendering(spark, tmp_path):
             assert got_str[i] == want, (m, got_str[i], want)
 
 
+@requires_reference
 def test_zstandard_manifest_table_scans(spark, tmp_path):
     """Foreign-engine interop: copy the reference lineitem table,
     re-encode every Avro manifest + manifest list with the zstandard

@@ -5,6 +5,7 @@ and iceberg_metadata.test coverage. One Spark test checks that the
 snapshot and history listings carry the metadata's instants."""
 
 import pytest
+from conftest import REFERENCE_DATA, requires_reference
 
 from duckdb_iceberg_spark.plans.manifests import load_table_scan, read_manifest_list
 from duckdb_iceberg_spark.plans.table_metadata import (
@@ -14,31 +15,36 @@ from duckdb_iceberg_spark.plans.table_metadata import (
 )
 from pyspark.sql import types as T
 
-LI = "/root/reference/data/iceberg/lineitem_iceberg"
-LI_GZ = "/root/reference/data/iceberg/lineitem_iceberg_gz"
-LI_NO_HINT = "/root/reference/data/iceberg/lineitem_iceberg_no_hint"
-GEN2 = "/root/reference/data/iceberg/generated_spec2_0_001/pyspark_iceberg_table"
+LI = f"{REFERENCE_DATA}/lineitem_iceberg"
+LI_GZ = f"{REFERENCE_DATA}/lineitem_iceberg_gz"
+LI_NO_HINT = f"{REFERENCE_DATA}/lineitem_iceberg_no_hint"
+GEN2 = f"{REFERENCE_DATA}/generated_spec2_0_001/pyspark_iceberg_table"
 
 
+@requires_reference
 def test_resolve_via_version_hint():
     assert resolve_metadata_path(LI).endswith("metadata/v2.metadata.json")
 
 
+@requires_reference
 def test_resolve_explicit_version():
     assert resolve_metadata_path(LI, version="1").endswith("v1.metadata.json")
 
 
+@requires_reference
 def test_resolve_gzip_codec():
     p = resolve_metadata_path(LI_GZ, metadata_compression_codec="gzip")
     assert p.endswith("v2.gz.metadata.json")
 
 
+@requires_reference
 def test_wrong_codec_errors():
     # reference: iceberg_metadata.test:36-40 asserts this error text shape
     with pytest.raises(FileNotFoundError, match="not found for table version"):
         resolve_metadata_path(LI_GZ)
 
 
+@requires_reference
 def test_no_hint_guessing_gate():
     with pytest.raises(FileNotFoundError, match="version-hint"):
         resolve_metadata_path(LI_NO_HINT)
@@ -51,6 +57,7 @@ def test_nonexistent_dir_errors():
         resolve_metadata_path("/nonexistent/table/path")
 
 
+@requires_reference
 def test_snapshot_selection():
     meta = load_table_metadata(LI)
     assert len(meta.snapshots) == 2
@@ -70,6 +77,7 @@ def test_snapshot_selection():
     assert s.snapshot_id == 3776207205136740581
 
 
+@requires_reference
 def test_schema_parse_types():
     assert parse_iceberg_type("decimal(9,2)") == T.DecimalType(9, 2)
     assert parse_iceberg_type("uuid") == T.StringType()
@@ -84,6 +92,7 @@ def test_schema_parse_types():
     assert st["l_orderkey"].metadata["parquet.field.id"] == 1
 
 
+@requires_reference
 def test_manifest_walk_counts():
     meta = load_table_metadata(LI)
     scan = load_table_scan(meta, meta.latest_snapshot(), LI, allow_moved_paths=True)
@@ -92,6 +101,7 @@ def test_manifest_walk_counts():
     assert len(data) == 1 and data[0].file_path.startswith(LI)
 
 
+@requires_reference
 def test_mor_delete_files_found():
     meta = load_table_metadata(GEN2)
     scan = load_table_scan(meta, meta.latest_snapshot(), GEN2, allow_moved_paths=True)
@@ -99,6 +109,7 @@ def test_mor_delete_files_found():
     assert scan.delete_cardinality() == 11452  # BASELINE.md total-position-deletes
 
 
+@requires_reference
 def test_v1_manifest_list_defaults():
     meta = load_table_metadata(LI, version="1")
     snap = meta.latest_snapshot()
@@ -109,6 +120,7 @@ def test_v1_manifest_list_defaults():
     assert all(m.content.value in (0, 1) for m in manifests)
 
 
+@requires_reference
 def test_error_message_parity_verbatim():
     """Pin the exact reference error strings the .test corpus asserts
     (iceberg_scan.test:62,67; iceberg_metadata.test:44,54;
@@ -124,7 +136,7 @@ def test_error_message_parity_verbatim():
         == 'Cannot open "data/iceberg/lineitem_iceberg_nonexistent": Metadata directory does not exist'
     )
 
-    gz = "/root/reference/data/iceberg/lineitem_iceberg_gz"
+    gz = LI_GZ
     with pytest.raises(FileNotFoundError) as e:
         resolve_metadata_path(gz)  # codec defaults to none
     assert str(e.value) == (
@@ -139,7 +151,7 @@ def test_error_message_parity_verbatim():
         "Iceberg metadata file not found for table version '2' using 'blarg' "
         "compression and format(s): 'blat%s%s'"
     )
-    li = "/root/reference/data/iceberg/lineitem_iceberg"
+    li = LI
     with pytest.raises(FileNotFoundError) as e:
         resolve_metadata_path(li, version="1", version_name_format="v%s%s.metadata.gz")
     assert str(e.value) == (

@@ -3,6 +3,7 @@ the parts where a single byte off silently corrupts a table."""
 
 import datetime
 
+from conftest import REFERENCE_DATA, requires_reference
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -162,6 +163,7 @@ def test_snappy_decoder_handles_all_copy_forms():
         _snappy_decompress(bytes([99]) + bytes([(1 << 2) | 0]) + b"ab")
 
 
+@requires_reference
 def test_real_manifest_reencoded_snappy_roundtrips():
     """A REAL Iceberg manifest (reference lineitem_iceberg, written
     deflate by Spark) re-encoded with snappy decodes to identical
@@ -172,7 +174,7 @@ def test_real_manifest_reencoded_snappy_roundtrips():
     import tempfile
 
     src = sorted(
-        glob.glob("/root/reference/data/iceberg/lineitem_iceberg/metadata/*-m0.avro")
+        glob.glob(f"{REFERENCE_DATA}/lineitem_iceberg/metadata/*-m0.avro")
     )[0]
     meta, recs = read_avro_file(src)
     schema = json.loads(meta["avro.schema"])
@@ -183,6 +185,7 @@ def test_real_manifest_reencoded_snappy_roundtrips():
     assert back == recs
 
 
+@requires_reference
 def test_real_manifest_reencoded_zstandard_roundtrips():
     """The same REAL Iceberg manifest re-encoded with zstandard decodes
     to identical records — engines configured for zstd write
@@ -192,7 +195,7 @@ def test_real_manifest_reencoded_zstandard_roundtrips():
     import tempfile
 
     src = sorted(
-        glob.glob("/root/reference/data/iceberg/lineitem_iceberg/metadata/*-m0.avro")
+        glob.glob(f"{REFERENCE_DATA}/lineitem_iceberg/metadata/*-m0.avro")
     )[0]
     meta, recs = read_avro_file(src)
     schema = json.loads(meta["avro.schema"])

@@ -7,8 +7,9 @@ import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
+from conftest import REFERENCE_DATA, requires_reference
 
-LI = "/root/reference/data/iceberg/lineitem_iceberg"
+LI = f"{REFERENCE_DATA}/lineitem_iceberg"
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -81,6 +82,7 @@ def test_rest_catalog_listing(rest_uri):
     assert cat.metadata_location("default", "lineitem").endswith("v2.metadata.json")
 
 
+@requires_reference
 def test_rest_catalog_scan_golden(spark, rest_uri):
     """The start-rest-catalog.sh flow: REST metadata-location ->
     iceberg_scan; golden count 51793 (BASELINE.md)."""
