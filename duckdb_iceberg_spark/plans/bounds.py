@@ -123,30 +123,26 @@ def range_overlaps(
 def range_implied(
     lower: Optional[bytes],
     upper: Optional[bytes],
-    op: str,
-    lit: Any,
+    lo: Any,
+    hi: Any,
     dt: T.DataType,
+    lo_strict: bool = False,
+    hi_strict: bool = False,
 ) -> bool:
-    """True iff [file_lower, file_upper] PROVES every (non-null) row
-    satisfies ``col <op> lit`` — the dual of range_overlaps, used to
+    """True iff [file_lower, file_upper] PROVES every (non-null) value
+    lies in the interval that range_overlaps tests — its dual, used to
     drop a residual row filter after manifest pruning (callers must
-    separately prove the column has zero nulls in the file; bounds
-    say nothing about nulls). Missing stats or an unknown op → False
-    (cannot prove, keep the filter)."""
+    separately prove the column has zero nulls in the file; bounds say
+    nothing about nulls, and must not trust float bounds, which leave
+    NaN out). A missing bound on a side the interval closes → False."""
     fl = deserialize_bound(lower, dt)
     fu = deserialize_bound(upper, dt)
-    v = _canon(lit, dt)
-    if v is None:
-        return False
-    # float bounds may be widened by writers; only trust exact-type laws
-    if op == ">":
-        return fl is not None and fl > v
-    if op == ">=":
-        return fl is not None and fl >= v
-    if op == "<":
-        return fu is not None and fu < v
-    if op == "<=":
-        return fu is not None and fu <= v
-    if op in ("=", "=="):
-        return fl is not None and fu is not None and fl == v == fu
-    return False
+    if lo is not None:
+        lo = _canon(lo, dt)
+        if fl is None or fl < lo or (lo_strict and fl == lo):
+            return False
+    if hi is not None:
+        hi = _canon(hi, dt)
+        if fu is None or fu > hi or (hi_strict and fu == hi):
+            return False
+    return True

@@ -17,7 +17,8 @@ from typing import Any, Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_EPOCH = datetime.date(1970, 1, 1)
+from .bounds import _EPOCH_DATE as _EPOCH
+from .bounds import _EPOCH_TS
 
 
 def murmur3_32(data: bytes, seed: int = 0) -> int:
@@ -56,10 +57,15 @@ def murmur3_32(data: bytes, seed: int = 0) -> int:
 
 def bucket_value(v: Any, n: int) -> int | None:
     """Iceberg bucket(N): (murmur3(encoded) & MAX_INT) % N.
-    int/long/date hash as 8-byte little-endian long; strings as UTF-8."""
+    int/long/date/timestamp hash as 8-byte little-endian long (epoch
+    days, epoch micros; a naive datetime is wall-clock time, hashed as
+    if UTC, as Iceberg hashes a timestamp without zone); strings as
+    UTF-8."""
     if v is None:
         return None
-    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+    if isinstance(v, datetime.datetime):
+        v = ((v if v.tzinfo else v.replace(tzinfo=datetime.timezone.utc)) - _EPOCH_TS) // datetime.timedelta(microseconds=1)
+    elif isinstance(v, datetime.date):
         v = (v - _EPOCH).days
     if isinstance(v, bool):
         raise ValueError("bucket transform not defined for boolean")
@@ -225,32 +231,39 @@ def murmur3_32_long_column(v: Column) -> Column:
 def bucket_column(source: Column, n: int, dtype: str) -> Column:
     """Write-time Iceberg bucket(N) partition column.
 
-    int/long/date take the JVM expression path (codegen, no Python);
-    variable-length types (string/binary) need UTF-8 byte iteration,
+    int/long/date/timestamp take the JVM expression path (codegen, no
+    Python) over the long ``bucket_value`` hashes: the value, epoch
+    days, epoch micros (a timestamp_ntz's wall-clock micros, from its
+    date and time parts, which no session zone changes).
+    Variable-length types (string/binary) need UTF-8 byte iteration,
     which runs per-element inside Arrow-transferred batches — never a
     row-at-a-time pickled Python UDF."""
     if dtype in ("tinyint", "smallint", "int", "bigint"):
-        hashed = murmur3_32_long_column(source.cast("long"))
-        return F.pmod(hashed.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(n)).cast("int")
-    if dtype == "date":
-        days = F.datediff(source, F.lit("1970-01-01").cast("date")).cast("long")
-        hashed = murmur3_32_long_column(days)
-        return F.pmod(hashed.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(n)).cast("int")
+        v = source.cast("long")
+    elif dtype == "date":
+        v = F.datediff(source, F.lit("1970-01-01").cast("date")).cast("long")
+    elif dtype == "timestamp":
+        v = F.unix_micros(source)
+    elif dtype == "timestamp_ntz":
+        minutes = (F.unix_date(F.to_date(source)).cast("long") * 24 + F.hour(source)) * 60 + F.minute(source)
+        v = minutes * 60_000_000 + (F.date_part(F.lit("SECOND"), source) * 1_000_000).cast("long")
+    else:
+        import pandas as pd
 
-    import pandas as pd
+        def _bucket_batch_fn(s):
+            def one(v):
+                if v is None or (isinstance(v, float) and v != v):
+                    return None
+                return bucket_value(v, n)
 
-    def _bucket_batch_fn(s):
-        def one(v):
-            if v is None or (isinstance(v, float) and v != v):
-                return None
-            return bucket_value(v, n)
+            return pd.Series(pd.array([one(v) for v in s], dtype="Int32"))
 
-        return pd.Series(pd.array([one(v) for v in s], dtype="Int32"))
-
-    # PEP-563 stringified hints defeat pandas_udf inference under
-    # `from __future__ import annotations`; set real ones explicitly.
-    _bucket_batch_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_bucket_batch_fn, "int")(source)
+        # PEP-563 stringified hints defeat pandas_udf inference under
+        # `from __future__ import annotations`; set real ones explicitly.
+        _bucket_batch_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
+        return F.pandas_udf(_bucket_batch_fn, "int")(source)
+    hashed = murmur3_32_long_column(v)
+    return F.pmod(hashed.bitwiseAND(F.lit(0x7FFFFFFF)), F.lit(n)).cast("int")
 
 
 def spark_partition_column(pf: PartitionField, dtype: str) -> Column:

@@ -62,21 +62,25 @@ from __future__ import annotations
 import datetime
 import decimal
 import functools
+import itertools
 import json
 import logging
 import math
 import os
 import re
+import struct
 import threading
-import zoneinfo
 from collections import Counter, OrderedDict
 from types import SimpleNamespace
 from typing import Any, NamedTuple, Optional
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.bounds import _EPOCH_DATE, _EPOCH_TS, range_implied, range_overlaps
 from ..plans.manifests import (
     EntryStatus,
     FileContent,
@@ -149,10 +153,9 @@ def _decode_file_uri(col):
     filesystem paths. Deletes, equality-delete sequence numbers and row
     lineage do not decode: they meet the data on the URI as reported
     (`_DataFileUris`). ``_keep_position_columns`` exposes ``__file`` as
-    reported, too: the writer decodes it only on the rows it keeps (the
-    deleted rows its position-delete files name, the rows of the files
-    ``_scan_files`` selects). Apart from that, only the moved-path tail
-    match decodes. A literal ``+`` is valid raw in a URI path segment
+    reported, too: the writer decodes it only on the deleted rows its
+    position-delete files name. Apart from that, only the moved-path
+    tail match decodes. A literal ``+`` is valid raw in a URI path segment
     and must NOT become a space, so escape it before url_decode."""
     return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
 
@@ -249,11 +252,24 @@ _DELETE_SCHEMA = T.StructType(
     ]
 )
 
-# Base-relation memo for iceberg_scan's default read path (see the
-# inline comment there). Keyed by session applicationId so a restarted
+# Memo of DataFrames the scan rebuilds often: iceberg_scan's base
+# relations (see the inline comment there) and `_where_predicate`'s
+# empty relations. Keyed by session applicationId so a restarted
 # session never serves plans bound to a dead JVM.
 _READ_CACHE: dict = {}
 _READ_CACHE_MAX = 128
+
+
+def _memo(key, build):
+    """``_READ_CACHE[key]``, built by ``build()`` on a miss (LRU)."""
+    df = _READ_CACHE.pop(key, None)
+    if df is None:
+        df = build()
+    _READ_CACHE[key] = df  # (re-)insert: LRU recency
+    while len(_READ_CACHE) > _READ_CACHE_MAX:
+        _READ_CACHE.pop(next(iter(_READ_CACHE)))
+    return df
+
 
 # Files _parquet_relation has resolved (and, when sized, put into the
 # session's FileStatusCache), at most this many per SparkContext.
@@ -263,9 +279,10 @@ _log = logging.getLogger("duckdb_iceberg_spark")
 
 
 def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
-    """Per-SparkContext state of _parquet_relation: the JVM handles it
-    calls (each package hop of ``spark._jvm.a.b.C`` is a py4j round
-    trip), its FileStatusCache client, and the LRU of manifest path ->
+    """Per-SparkContext state of _parquet_relation and
+    _where_predicate: the JVM handles they call (each package hop of
+    ``spark._jvm.a.b.C`` is a py4j round trip), the FileStatusCache
+    client, and the LRU of manifest path ->
     (qualified JVM Path, file URI or None until asked for) of the files
     already resolved, sized ones fed to that client. Lives on the
     SparkContext instance, like session.py's JVM function cache, so a
@@ -277,6 +294,7 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
         jvm = spark._jvm
         ds = jvm.org.apache.spark.sql.execution.datasources
         fs = jvm.org.apache.hadoop.fs
+        opt = jvm.org.apache.spark.sql.catalyst.optimizer
         state = sc.__dict__.setdefault(
             "_graft_parquet_relation",
             SimpleNamespace(
@@ -296,6 +314,8 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
                 Option=jvm.scala.Option,
                 none=jvm.scala.Option.empty(),
                 utils=jvm.PythonUtils,
+                constant_folding=getattr(getattr(opt, "ConstantFolding$"), "MODULE$"),
+                simplify_casts=getattr(getattr(opt, "SimplifyCasts$"), "MODULE$"),
             ),
         )
     return state
@@ -475,8 +495,7 @@ def iceberg_scan(
     skip_schema_inference: bool = False,
     unsafe_enable_version_guessing: bool = False,
     partition_filter=None,
-    stats_filter=None,
-    where: Optional[str] = None,
+    where=None,
     ref: Optional[str] = None,
     time_as_string: bool = False,
     io: str = "spark",
@@ -499,17 +518,19 @@ def iceberg_scan(
     never does (its partial Avro schemas drop partition data,
     reference iceberg_types.hpp:122-155; SURVEY.md §4).
 
-    ``stats_filter`` is zone-map file skipping from manifest
-    lower/upper bounds: ``{column: (lo, hi)}`` with ``None`` for an
-    open side; a file is kept iff its [min,max] may intersect every
-    range. Files without stats are always kept (correctness-safe).
-
     ``where`` is the one-stop predicate API: a SQL boolean expression
-    that is ALWAYS applied as an exact row filter, and — when it is a
-    conjunction of simple ``col op literal`` clauses — is also
-    translated into stats_filter ranges (and partition equality) so
-    non-matching files are skipped entirely. Anything unparseable
-    still filters correctly, it just prunes less.
+    string or a Column, applied as an exact row filter unless the
+    manifest bounds of every file left prove it. Files that cannot hold
+    a matching row are skipped first, from the condition as Catalyst
+    resolves it (`_where_predicate`): ``=``, ``<``, ``<=``, ``>``,
+    ``>=``, ``BETWEEN`` and ``IN`` of a column and literals prune on
+    column bounds, ``=`` and ``IN`` also on partition values, ``IS
+    NULL`` on null counts, and ``AND`` and ``OR`` combine them. Any
+    other term filters correctly, it just prunes less. A column the
+    table lacks raises ``AnalysisException``, in every mode. One DEBUG
+    ``where pruning`` event on the ``duckdb_iceberg_spark`` logger
+    reports the condition, its translated leaves, the data files
+    before and after pruning, and whether the row filter was dropped.
 
     ``row_lineage`` (v3 tables) appends the two Iceberg row-lineage
     virtual columns: ``_row_id`` (the data file's ``first_row_id``,
@@ -555,26 +576,26 @@ def iceberg_scan(
     snap = _select_snapshot(meta, snapshot_id, timestamp)
     scan = load_table_scan(meta, snap, _table_root(path), allow_moved_paths)
     data_entries = scan.data_files()
+    schema = meta.schema_for_snapshot(snap)
     where_proven = False
     if where is not None:
-        w_stats, w_part, w_checks = _predicate_to_pruners(
-            meta, where, spark.conf.get("spark.sql.session.timeZone")
-        )
-        if w_stats:
-            data_entries = _prune_by_stats(meta, data_entries, w_stats)
-        if w_part:
-            data_entries = _prune_by_partition(meta, data_entries, w_part, strict=False)
+        cond, pred = _where_predicate(spark, schema, where, time_as_string)
+        n_before = len(data_entries)
+        data_entries = _prune_by_stats(meta, data_entries, pred)
         # After pruning, the bounds of every SURVIVING file often prove
         # the predicate outright (e.g. a partition-aligned date range);
         # then the residual per-row filter is pure overhead on exactly
         # the scans pruning was built for. Deletes re-expose rows only
         # WITHIN surviving files, so the proof is delete-safe.
-        if w_checks and not _keep_position_columns:
-            where_proven = _residual_implied(meta, data_entries, w_checks)
+        where_proven = not _keep_position_columns and _residual_implied(data_entries, pred)
+        if _log.isEnabledFor(logging.DEBUG):
+            event = dict(
+                condition=cond.sql(), leaves=_leaves(pred), files_before=n_before,
+                files_after=len(data_entries), residual_proven=where_proven,
+            )
+            _log.debug("where pruning: %s", event, extra=event)
     if partition_filter is not None:
         data_entries = _prune_by_partition(meta, data_entries, partition_filter)
-    if stats_filter is not None:
-        data_entries = _prune_by_stats(meta, data_entries, stats_filter)
     # Iceberg manifests carry a per-file format; the reference assumes
     # PARQUET silently and would mis-read a foreign ORC/Avro table
     # (file_format parsed then ignored, src/common/iceberg.cpp). Here:
@@ -613,8 +634,6 @@ def iceberg_scan(
         ]
         return _local_df(spark, rows, "file string, type string")
 
-    schema = meta.schema_for_snapshot(snap)
-
     if not data_entries:
         st = T.StructType([]) if skip_schema_inference else schema.to_struct_type()
         if _keep_position_columns:
@@ -652,16 +671,7 @@ def iceberg_scan(
             eq_entries=eq_deletes,
             dv_entries=dv_entries,
         )
-        for c in schema.columns:
-            if c.initial_default is not None:
-                df = df.withColumn(
-                    c.name, F.coalesce(F.col(c.name), F.lit(c.initial_default).cast(c.spark_type))
-                )
-        if time_as_string:
-            df = _render_time_strings(df, schema)
-        if where is not None and not where_proven:
-            df = df.filter(where)
-        return df
+        return _finish_rows(df, schema, time_as_string, None if where_proven else where)
 
     # Field-id based column resolution (the reference pushes a
     # field_id->column map into the parquet reader, iceberg_scan.cpp:103-128;
@@ -724,12 +734,7 @@ def iceberg_scan(
                 schema.to_struct_type().json(),
                 tuple(e.file_path for e in parquet_entries),
             )
-            df = _READ_CACHE.pop(ck, None)
-            if df is None:
-                df = _parquet_relation(spark, parquet_entries, schema.to_struct_type())
-            _READ_CACHE[ck] = df  # (re-)insert: LRU recency
-            while len(_READ_CACHE) > _READ_CACHE_MAX:
-                _READ_CACHE.pop(next(iter(_READ_CACHE)))
+            df = _memo(ck, lambda: _parquet_relation(spark, parquet_entries, schema.to_struct_type()))
         if want_pos:
             df = df.select("*", *pos_cols)
 
@@ -836,24 +841,25 @@ def iceberg_scan(
     if want_pos and not _keep_position_columns:
         df = df.drop("__file", "__pos")
 
-    # initial-default for columns added after some files were written
-    # (Iceberg v2 initial-default; reference passes default_value into the
-    # parquet reader map, iceberg_scan.cpp:103-128). Files lacking the
-    # field yield NULL under field-id resolution -> coalesce.
-    if not skip_schema_inference:
-        for c in schema.columns:
-            if c.initial_default is not None:
-                df = df.withColumn(
-                    c.name, F.coalesce(F.col(c.name), F.lit(c.initial_default).cast(c.spark_type))
-                )
+    return _finish_rows(
+        df, None if skip_schema_inference else schema, time_as_string, None if where_proven else where
+    )
 
-    if time_as_string and not skip_schema_inference:
+
+def _finish_rows(df: DataFrame, schema, time_as_string: bool, where) -> DataFrame:
+    """The last steps of every read path. Unless ``schema`` is None (the
+    files' own schema is read): initial-default for columns added after
+    some files were written (Iceberg v2 initial-default; reference
+    passes default_value into the parquet reader map,
+    iceberg_scan.cpp:103-128; files lacking the field yield NULL under
+    field-id resolution -> coalesce), and ``time_as_string``. Then the
+    ``where`` row filter, if any."""
+    for c in schema.columns if schema is not None else []:
+        if c.initial_default is not None:
+            df = df.withColumn(c.name, F.coalesce(F.col(c.name), F.lit(c.initial_default).cast(c.spark_type)))
+    if time_as_string and schema is not None:
         df = _render_time_strings(df, schema)
-
-    if where is not None and not where_proven:
-        df = df.filter(where)
-
-    return df
+    return df if where is None else df.filter(where)
 
 
 def _render_time_strings(df: DataFrame, schema) -> DataFrame:
@@ -879,295 +885,277 @@ def _render_time_strings(df: DataFrame, schema) -> DataFrame:
     return df
 
 
-def _prune_by_partition(meta: TableMetadata, entries, flt, strict: bool = True):
-    """Driver-side manifest pruning: keep entries whose partition
-    values satisfy ``flt`` (dict of source-col literals, or callable).
-    ``strict=False`` silently ignores non-partition columns (used for
-    pruners auto-derived from a ``where`` predicate)."""
+def _partition_check(meta: TableMetadata):
+    """``check(e, fid, values, dt)``: False iff entry ``e``'s partition
+    values prove no row of ``e`` has column ``fid`` (Spark type ``dt``)
+    equal to one of ``values``; None for a never-partitioned table.
+    Each entry is read with its OWN spec (``spec_id``): after partition
+    evolution one field name can carry two transforms (bucket(4) ->
+    bucket(8)). An entry of an unknown spec, or of one lacking the
+    field, may match (Iceberg's mixed-spec scan rule); a null partition
+    value equals no literal."""
     from ..plans.transforms import PartitionField
 
-    # Resolve each entry's partition fields from its OWN spec
-    # (ManifestEntry.spec_id, carried from the owning manifest's
-    # partition_spec_id). After partition evolution the same field
-    # NAME can exist in two specs with DIFFERENT transforms (dropped
-    # and re-added, e.g. bucket(4) -> bucket(8)); pruning an old-spec
-    # file with the new spec's transform would drop matching files.
-    schema = meta.schemas[meta.current_schema_id]
-    id_to_name = {c.field_id: c.name for c in schema.columns}
-    spec_fields: dict[int, dict[str, list]] = {}
-    any_fields = False
-    for s in meta.partition_specs:
-        by_source: dict[str, list] = {}
-        for f in s.get("fields", []):
-            if f["source-id"] in id_to_name:
-                src = id_to_name[f["source-id"]]
-                by_source.setdefault(src, []).append(PartitionField.from_json(f, src))
-                any_fields = True
-        spec_fields[int(s.get("spec-id", 0))] = by_source
-    if not any_fields:
+    specs = {
+        int(s.get("spec-id", 0)): [
+            (f["source-id"], PartitionField.from_json(f, str(f["source-id"]))) for f in s.get("fields", [])
+        ]
+        for s in meta.partition_specs
+    }
+    if not any(specs.values()):
+        return None
+
+    @functools.lru_cache(maxsize=None)
+    def targets(spec_id, fid, values, dt):
+        out = []
+        for sid, pf in specs[spec_id]:
+            if sid != fid or (pf.transform == "identity" and isinstance(dt, (T.TimestampType, T.TimestampNTZType))):
+                continue  # identity-timestamp partition values aren't canonical: skip pruning
+            try:
+                out.append((pf.name, frozenset(pf.apply(v) for v in values)))
+            except ValueError:
+                pass  # the transform takes no such literal: keep the files
+        return out
+
+    def check(e, fid, values, dt) -> bool:
+        if e.spec_id not in specs:
+            return True
+        return all(k not in e.partition or e.partition[k] in t for k, t in targets(e.spec_id, fid, values, dt))
+
+    return check
+
+
+def _prune_by_partition(meta: TableMetadata, entries, flt):
+    """``partition_filter``: keep the entries whose partition values
+    satisfy ``flt``, a dict of ``{source_column: literal}`` (the
+    column's transform is applied to the literal; a list, tuple or set
+    of literals matches any of them) or a callable over the entry's
+    partition-values dict."""
+    check = _partition_check(meta)
+    if check is None:
         return entries  # never partitioned: nothing to prune
     if callable(flt):
         return [e for e in entries if flt(e.partition)]
-    all_sources = set().union(*(set(m) for m in spec_fields.values()))
-    for col in flt:
-        if col not in all_sources and strict:
-            raise ValueError(
-                f"partition_filter column {col!r} is not a partition source; sources: {sorted(all_sources)}"
-            )
-    src_types = {c.name: c.spark_type.simpleString() for c in schema.columns}
-    # precompute literal->partition-value per spec (transforms differ)
-    targets_by_spec: dict[int, dict[str, Any]] = {}
-    for sid, by_source in spec_fields.items():
-        targets: dict[str, Any] = {}
-        for col, lit in flt.items():
-            st = src_types.get(col, "")
-            for pf in by_source.get(col, []):
-                if pf.transform == "identity" and st.startswith("timestamp"):
-                    continue  # identity-timestamp partition values aren't canonical: skip pruning
-
-                def _conv(x):
-                    if pf.transform == "identity" and st == "date" and isinstance(x, str):
-                        import datetime as _dt
-
-                        return _dt.date.fromisoformat(x)
-                    return x
-
-                try:
-                    if isinstance(lit, (list, tuple, set, frozenset)):
-                        # multi-value (IN-list) filter: keep files whose
-                        # partition value matches ANY of the transformed values
-                        targets[pf.name] = frozenset(pf.apply(_conv(x)) for x in lit)
-                    else:
-                        targets[pf.name] = pf.apply(_conv(lit))
-                except ValueError:
-                    continue  # the transform takes no such literal (bucket of a timestamp): keep the files
-        targets_by_spec[sid] = targets
-
-    # an entry written under a spec that lacks the field entirely (vs
-    # a present-but-null partition value) may still match on rows, so
-    # it must be kept — the Iceberg mixed-spec scan rule after
-    # partition evolution. Null partition values (key present) can
-    # never equal a literal and are pruned. Unknown spec-id: keep
-    # (cannot prune safely).
-    def _match(pv, v) -> bool:
-        return pv in v if isinstance(v, frozenset) else pv == v
-
-    def _keep(e) -> bool:
-        targets = targets_by_spec.get(e.spec_id)
-        if targets is None:
-            return True
-        return all(k not in e.partition or _match(e.partition[k], v) for k, v in targets.items())
-
-    return [e for e in entries if _keep(e)]
+    ids = {f["source-id"] for s in meta.partition_specs for f in s.get("fields", [])}
+    sources = {c.name: c for c in meta.schemas[meta.current_schema_id].columns if c.field_id in ids}
+    conds = []
+    for col, lit in flt.items():
+        if col not in sources:
+            raise ValueError(f"partition_filter column {col!r} is not a partition source; sources: {sorted(sources)}")
+        c = sources[col]
+        vals = tuple(lit) if isinstance(lit, (list, tuple, set, frozenset)) else (lit,)
+        if isinstance(c.spark_type, T.DateType):
+            vals = tuple(datetime.date.fromisoformat(v) if isinstance(v, str) else v for v in vals)
+        conds.append((c.field_id, vals, c.spark_type))
+    return [e for e in entries if all(check(e, *cond) for cond in conds)]
 
 
-# One literal: an optional DATE/TIMESTAMP type word, then a quoted
-# string or a bare token (a number, or a word Spark reads as a column).
-_LIT = r"(?:(DATE|TIMESTAMP)\s+)?('[^']*'|[\w.\-:]+)"
-_CLAUSE_RE = re.compile(rf"\s*(\w+)\s*(>=|<=|==|=|<|>)\s*{_LIT}\s*", re.IGNORECASE)
-_BETWEEN_RE = re.compile(rf"\s*(\w+)\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}\s*", re.IGNORECASE)
-# "col NOT IN (...)" cannot match: NOT breaks \w+\s+IN
-_IN_RE = re.compile(r"\s*(\w+)\s+IN\s*\((.*)\)\s*", re.IGNORECASE)
-_LIT_RE = re.compile(rf"\s*{_LIT}\s*", re.IGNORECASE)
-_NUMBER_RE = re.compile(r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?")
-# what decides a predicate's top-level shape; quoted strings and
-# identifiers match whole, so a keyword inside one splits nothing
-_SQL_TOKEN_RE = re.compile(
-    r"""'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*"|`[^`]*`|--|/\*|[()]|\b(?:AND|OR|BETWEEN|CASE|END)\b""",
-    re.IGNORECASE,
-)
+# The where= predicate over manifest stats (`_where_predicate`). A
+# None node is a term nothing is known of: it keeps every file.
+class _Range(NamedTuple):
+    """Column ``fid`` (Spark type ``dt``) lies in [lo, hi]: None is an
+    open end, a strict flag an excluded one."""
+
+    fid: int
+    dt: T.DataType
+    lo: Any = None
+    hi: Any = None
+    lo_strict: bool = False
+    hi_strict: bool = False
 
 
-def _conjuncts(where: str) -> Optional[list[str]]:
-    """The top-level AND terms of ``where`` (a BETWEEN keeps its own
-    AND), or None when a top-level OR or a comment leaves no term that
-    holds on its own. Parentheses and CASE ... END nest."""
-    terms, start, depth, between = [], 0, 0, False
-    for m in _SQL_TOKEN_RE.finditer(where):
-        tok = m.group(0).upper()
-        if tok in ("--", "/*") or (depth == 0 and tok == "OR"):
-            return None
-        depth += (tok in ("(", "CASE")) - (tok in (")", "END"))
-        if depth == 0 and tok == "BETWEEN":
-            between = True
-        elif depth == 0 and tok == "AND":
-            if not between:
-                terms.append(where[start : m.start()])
-                start = m.end()
-            between = False
-    return terms + [where[start:]]
+class _IsNull(NamedTuple):
+    fid: int
 
 
-def _bind_literal(typed: Optional[str], tok: str, dt, session_tz: str):
-    """The value Spark gives literal ``tok`` (after type word ``typed``)
-    against a column of type ``dt``, in the manifest bounds' domain;
-    None when pruning must not trust it. Spark reads a bare word
-    (``a = b``, ``1_0``) as a column and unescapes backslashes in
-    quotes; a decimal stays exact; a zoneless TIMESTAMP literal is
-    session-zone time, bound as UTC."""
-    quoted, s, typed = tok.startswith("'"), tok[1:-1], (typed or "").upper()
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType)):
-        if typed or quoted or not _NUMBER_RE.fullmatch(tok):
-            return None
-        if isinstance(dt, T.DecimalType):
-            return decimal.Decimal(tok)
-        return int(tok) if re.fullmatch(r"[-+]?\d+", tok) else float(tok)
-    if not quoted or "\\" in s:
-        return None
-    if isinstance(dt, T.StringType):
-        return None if typed else s
-    try:
-        if isinstance(dt, T.DateType) and typed != "TIMESTAMP" and re.fullmatch(r"\d{4}-\d{2}-\d{2}", s):
-            return datetime.date.fromisoformat(s)
-        if not isinstance(dt, (T.TimestampType, T.TimestampNTZType)) or typed == "DATE":
-            return None
-        v = datetime.datetime.fromisoformat(s)
-        if isinstance(dt, T.TimestampNTZType):
-            return None if v.tzinfo or typed else v.replace(tzinfo=datetime.timezone.utc)
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=zoneinfo.ZoneInfo(session_tz))
-        return v.astimezone(datetime.timezone.utc)
-    except (KeyError, OSError, ValueError):  # not a date, or a zone id Python cannot resolve
-        return None
+class _Bool(NamedTuple):
+    op: str  # "and" or "or"
+    kids: tuple
 
 
-def _predicate_to_pruners(
-    meta: TableMetadata, where: str, session_tz: str = "UTC"
-) -> tuple[dict, dict, Optional[list]]:
-    """Best-effort translation of a conjunctive SQL predicate into
-    (stats_filter ranges, partition equality dict, implication checks).
-    Terms that don't parse contribute nothing — the row filter still
-    applies them. ``session_tz`` is the zone of zoneless timestamps.
+_CMP_OPS = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=", "GreaterThan": ">", "GreaterThanOrEqual": ">="}
+_MIRROR = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+_FLOATS = (T.FloatType, T.DoubleType)
 
-    The third element is a list of (col, op, literal) checks usable to
-    PROVE the predicate over a file's manifest bounds (so the residual
-    row filter can be dropped — see _residual_implied), or None when
-    any conjunct failed to translate exactly (then the row filter is
-    mandatory). Unlike the ranges dict, the checks keep </<= strictness."""
-    schema = meta.schemas[meta.current_schema_id]
-    known = {c.name: c.spark_type for c in schema.columns}
-    ranges: dict[str, list] = {}
-    part_eq: dict = {}
-    checks: list = []
-    complete = True
 
-    def add(col: str, lo, hi, lo_strict: bool = False, hi_strict: bool = False):
-        cur = ranges.setdefault(col, [None, None, False, False])
-        if lo is not None:
-            if cur[0] is None or lo > cur[0]:
-                cur[0], cur[2] = lo, lo_strict
-            elif lo == cur[0]:
-                cur[2] = cur[2] or lo_strict
-        if hi is not None:
-            if cur[1] is None or hi < cur[1]:
-                cur[1], cur[3] = hi, hi_strict
-            elif hi == cur[1]:
-                cur[3] = cur[3] or hi_strict
+def _settle(p):
+    """``p``, or None for a float range with no upper end: Spark orders
+    NaN above every number and Iceberg bounds leave NaN out, so such a
+    range could drop a file of NaNs."""
+    return None if isinstance(p, _Range) and p.hi is None and isinstance(p.dt, _FLOATS) else p
 
-    terms = _conjuncts(where)
-    if terms is None:
-        return {}, {}, None
-    for term in terms:
-        items = []
-        if m := _BETWEEN_RE.fullmatch(term):
-            ops, lits = (">=", "<="), [m.group(2, 3), m.group(4, 5)]
-        elif m := _CLAUSE_RE.fullmatch(term):
-            ops, lits = (m.group(2).replace("==", "="),), [m.group(3, 4)]
-        elif m := _IN_RE.fullmatch(term):
-            # split on the commas outside quotes; each item one literal
-            items = [_LIT_RE.fullmatch(t) for t in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", m.group(2))]
-            ops, lits = ("in",), [i.group(1, 2) for i in items if i]
-        vals = [_bind_literal(*lit, known[m.group(1)], session_tz) for lit in lits] if m and m.group(1) in known else []
-        if not vals or None in vals or not all(items):
-            complete = False
-            continue
-        col = m.group(1)
-        if ops == ("in",):
-            if len(vals) > 1:
-                add(col, min(vals), max(vals))
-                part_eq[col] = vals
-                complete = False  # membership not provable from bounds
-                continue
-            ops = ("=",)
-        for op, v in zip(ops, vals):
-            lo, hi = (v if op in ("=", ">", ">=") else None), (v if op in ("=", "<", "<=") else None)
-            add(col, lo, hi, lo_strict=(op == ">"), hi_strict=(op == "<"))
-            checks.append((col, op, v))
-            if op == "=":
-                part_eq[col] = v
-    # Spark orders NaN above every number and Iceberg bounds leave NaN
-    # out: a float range with no upper end could drop a file of NaNs
-    floats = (T.FloatType, T.DoubleType)
-    return (
-        {c: tuple(v) for c, v in ranges.items() if v[1] is not None or not isinstance(known[c], floats)},
-        part_eq,
-        checks if (complete and checks) else None,
+
+def _intersect(a: _Range, b: _Range) -> _Range:
+    lo = max((r for r in (a, b) if r.lo is not None), key=lambda r: (r.lo, r.lo_strict), default=a)
+    hi = min((r for r in (a, b) if r.hi is not None), key=lambda r: (r.hi, not r.hi_strict), default=a)
+    return a._replace(lo=lo.lo, lo_strict=lo.lo_strict, hi=hi.hi, hi_strict=hi.hi_strict)
+
+
+def _where_predicate(spark: SparkSession, schema: IcebergSchema, where, time_as_string: bool = False):
+    """``(condition, predicate)``: the JVM condition Catalyst resolves for
+    ``where`` (a SQL string or a Column) over the rows the scan filters,
+    and its predicate over manifest stats. An unknown column raises
+    ``AnalysisException``, as the row filter would.
+
+    The condition is the ``Filter`` of an empty relation of those rows
+    (memoized in ``_READ_CACHE``), folded by Catalyst's ``ConstantFolding``
+    and ``SimplifyCasts`` and read through one ``toJSON()``, so casts,
+    zones and decimal scale are Spark's. Attributes map to ``schema``
+    columns by name and type. Translated: ``AND``, ``OR``, ``BETWEEN``,
+    ``IS NULL``, and ``=``, ``<``, ``<=``, ``>``, ``>=``, ``IN`` of a
+    bare attribute and literals, comparisons under an ``AND`` merged
+    into one range per column. Anything else (a cast or function around
+    the attribute, a NULL or NaN literal, ``NOT``) is None."""
+    row_type = T.StructType(
+        [T.StructField(c.name, T.StringType()) if time_as_string and c.iceberg_type == "time"
+         else c.to_struct_field() for c in schema.columns]
     )
+    jvm = _relation_jvm(spark)
+    key = ("where", spark.sparkContext.applicationId, row_type.json())
+    empty = _memo(key, lambda: _local_df(spark, [], row_type))
+    plan = empty.filter(where)._jdf.queryExecution().analyzed()
+    try:
+        plan = jvm.simplify_casts.apply(jvm.constant_folding.apply(plan))
+    except (Py4JJavaError, PySparkException):
+        pass  # a literal Spark cannot cast (ANSI) fails the row filter alike; unfolded, it prunes nothing
+    cond = plan.condition()
+    columns = {c.name: c for c in schema.columns}
+    leaf_ids = itertools.count()  # childless nodes in pre-order, as cond.collectLeaves() lists them
+    jleaves = None
+
+    def nest(it):
+        n = next(it)
+        n["children"] = [nest(it) for _ in range(n["num-children"])]
+        n["leaf"] = None if n["children"] else next(leaf_ids)
+        return n
+
+    def kind(n) -> str:
+        return n["class"].rsplit(".", 1)[-1]
+
+    def column(n):
+        c = columns.get(n.get("name")) if kind(n) == "AttributeReference" else None
+        return c if c is not None and n["dataType"] == c.spark_type.jsonValue() else None
+
+    def literal(n):
+        """The literal's value in the bounds' domain, None if it cannot prune."""
+        nonlocal jleaves
+        v, t = n.get("value"), n.get("dataType")
+        if kind(n) != "Literal" or v is None:
+            return None
+        if t in ("date", "timestamp"):
+            # toJSON renders these in the session zone; Spark holds epoch days / UTC micros
+            jleaves = jleaves or cond.collectLeaves()
+            raw = jleaves.apply(n["leaf"]).value()
+            return _EPOCH_DATE + datetime.timedelta(days=raw) if t == "date" else _EPOCH_TS + datetime.timedelta(microseconds=raw)
+        if t == "timestamp_ntz":
+            return _EPOCH_TS + datetime.timedelta(microseconds=int(v))
+        if t in ("byte", "short", "integer", "long"):
+            return int(v)
+        if t in ("float", "double"):
+            f = float(v) if t == "double" else struct.unpack("<f", struct.pack("<f", float(v)))[0]
+            return None if math.isnan(f) else f
+        if t.startswith("decimal"):
+            return decimal.Decimal(v)
+        return {"string": v, "boolean": v == "true"}.get(t)
+
+    def terms(n, op):
+        return [t for k in n["children"] for t in (terms(k, op) if kind(k) == op else [k])]
+
+    def tr(n, ref=None):
+        op, kids = kind(n), [ref if ref is not None and kind(k) == "CommonExpressionRef" else k for k in n["children"]]
+        if op == "Or":
+            parts = tuple(_settle(tr(k, ref)) for k in terms(n, op))
+            return None if None in parts else _Bool("or", parts)
+        if op == "And":
+            ranges, rest = {}, []
+            for p in (tr(k, ref) for k in terms(n, op)):
+                if isinstance(p, _Range):
+                    ranges[p.fid] = _intersect(ranges[p.fid], p) if p.fid in ranges else p
+                else:
+                    rest.append(p)
+            parts = tuple(map(_settle, ranges.values())) + tuple(rest)
+            if all(p is None for p in parts):
+                return None
+            return parts[0] if len(parts) == 1 else _Bool("and", parts)
+        if op == "Between":
+            # its child is what it is replaced by: With(ref >= lower AND ref <= upper, def(input)), folded
+            cnd, *defs = kids[0]["children"]
+            return tr(cnd, defs[0]["children"][0]) if len(defs) == 1 else None
+        if op in _CMP_OPS and len(kids) == 2:
+            (a, b), cmp = kids, _CMP_OPS[op]
+            if column(b) is not None:
+                a, b, cmp = b, a, _MIRROR[cmp]
+            c, v = column(a), literal(b)
+            if c is None or v is None:
+                return None
+            lo, hi = (v if cmp in ("=", ">", ">=") else None), (v if cmp in ("=", "<", "<=") else None)
+            return _Range(c.field_id, c.spark_type, lo, hi, cmp == ">", cmp == "<")
+        if op == "In":
+            c, vals = column(kids[0]), [literal(k) for k in kids[1:]]
+            if c is None or not vals or None in vals:
+                return None
+            eqs = tuple(_Range(c.field_id, c.spark_type, v, v) for v in dict.fromkeys(vals))
+            return eqs[0] if len(eqs) == 1 else _Bool("or", eqs)
+        if op == "IsNull" and column(kids[0]) is not None:
+            return _IsNull(column(kids[0]).field_id)
+        return None
+
+    return cond, _settle(tr(nest(iter(json.loads(cond.toJSON())))))
 
 
-def _residual_implied(meta: TableMetadata, entries, checks: list) -> bool:
-    """True iff the manifest bounds of EVERY surviving data file prove
-    every (col, op, lit) check — then the residual row filter is a
-    no-op and can be dropped (the same reason Hive partition predicates
-    never become row filters). Requires a recorded zero null count for
-    each checked column (bounds say nothing about nulls: a NULL row
-    fails the SQL predicate but survives a bounds-only proof)."""
-    from ..plans.bounds import range_implied
-
-    schema = meta.schemas[meta.current_schema_id]
-    by_name = {c.name: c for c in schema.columns}
-    cols = [(by_name.get(col), op, lit) for col, op, lit in checks]
-    if any(c is None for c, _, _ in cols):
-        return False
-    # NaN is invisible to min/max bounds but fails every SQL comparison:
-    # a float/double proof could wrongly keep NaN rows. Never prove there.
-    if any(isinstance(c.spark_type, (T.FloatType, T.DoubleType)) for c, _, _ in cols):
-        return False
-    for e in entries:
-        for c, op, lit in cols:
-            fid = c.field_id
-            nulls = e.null_value_counts.get(fid)
-            if nulls is None:
-                nulls = e.null_value_counts.get(str(fid))
-            if nulls != 0:
-                return False
-            lower = e.lower_bounds.get(fid) or e.lower_bounds.get(str(fid))
-            upper = e.upper_bounds.get(fid) or e.upper_bounds.get(str(fid))
-            if not range_implied(lower, upper, op, lit, c.spark_type):
-                return False
-    return True
+def _leaves(p) -> int:
+    return sum(map(_leaves, p.kids)) if isinstance(p, _Bool) else int(p is not None)
 
 
-def _prune_by_stats(meta: TableMetadata, entries, flt: dict):
-    """Zone-map skipping: drop files whose [lower, upper] bounds cannot
-    intersect the requested {col: (lo, hi)} ranges (public form) or
-    {col: (lo, hi, lo_strict, hi_strict)} (internal where-derived form
-    — strictness lets ``col < x`` drop a file whose lower bound == x)."""
-    from ..plans.bounds import range_overlaps
+def _stat(stats: dict, fid: int):
+    """A manifest stats map's value for field ``fid`` (int or str keys)."""
+    return stats.get(fid, stats.get(str(fid)))
 
-    schema = meta.schemas[meta.current_schema_id]
-    by_name = {c.name: c for c in schema.columns}
-    checks = []
-    for col, rng in flt.items():
-        c = by_name.get(col)
-        if c is None:
-            raise ValueError(f"stats_filter column {col!r} not in schema")
-        lo, hi, los, his = rng if len(rng) == 4 else (*rng, False, False)
-        checks.append((c.field_id, lo, hi, c.spark_type, los, his))
-    out = []
-    for e in entries:
-        keep = True
-        for fid, lo, hi, dt, los, his in checks:
-            lower = e.lower_bounds.get(fid) or e.lower_bounds.get(str(fid))
-            upper = e.upper_bounds.get(fid) or e.upper_bounds.get(str(fid))
-            if lower is None and upper is None:
-                continue  # no stats for this column: keep
-            if not range_overlaps(lower, upper, lo, hi, dt, los, his):
-                keep = False
-                break
-        if keep:
-            out.append(e)
-    return out
+
+def _prune_by_stats(meta: TableMetadata, entries, pred):
+    """Keep the entries whose manifest stats may hold a row matching the
+    ``where`` predicate ``pred`` (`_where_predicate`): partition values
+    for an equality, column bounds for a range (missing bounds keep the
+    file), the null count for ``IS NULL`` (unknown or > 0 keeps it).
+    ``AND`` keeps a file if every side may match, ``OR`` (and ``IN``)
+    if either side may."""
+    if pred is None:
+        return entries
+    part = _partition_check(meta) or (lambda *a: True)
+
+    def may(p, e) -> bool:
+        if p is None:
+            return True
+        if isinstance(p, _Bool):
+            return (all if p.op == "and" else any)(may(k, e) for k in p.kids)
+        if isinstance(p, _IsNull):
+            n = _stat(e.null_value_counts, p.fid)
+            return n is None or n > 0
+        lower, upper = _stat(e.lower_bounds, p.fid), _stat(e.upper_bounds, p.fid)
+        eq = p.lo is not None and p.lo == p.hi and not (p.lo_strict or p.hi_strict)
+        return (not eq or part(e, p.fid, (p.lo,), p.dt)) and range_overlaps(
+            lower, upper, p.lo, p.hi, p.dt, p.lo_strict, p.hi_strict
+        )
+
+    return [e for e in entries if may(pred, e)]
+
+
+def _residual_implied(entries, pred) -> bool:
+    """True iff the manifest stats of EVERY surviving data file prove
+    each of its rows matches ``pred``, so the residual row filter can
+    be dropped (as Hive partition predicates never become row filters).
+    Only ranges prove, each with a recorded zero null count (a NULL row
+    fails the predicate but survives a bounds-only proof) and never on
+    a float column (NaN is invisible to bounds but fails comparisons)."""
+    def proven(p, e) -> bool:
+        if isinstance(p, _Bool):
+            return (all if p.op == "and" else any)(proven(k, e) for k in p.kids)
+        if not isinstance(p, _Range) or isinstance(p.dt, _FLOATS) or _stat(e.null_value_counts, p.fid) != 0:
+            return False
+        lower, upper = _stat(e.lower_bounds, p.fid), _stat(e.upper_bounds, p.fid)
+        return range_implied(lower, upper, p.lo, p.hi, p.dt, p.lo_strict, p.hi_strict)
+
+    return all(proven(pred, e) for e in entries)
 
 
 def _avro_data_df(

@@ -585,11 +585,7 @@ class IcebergTable:
             else self.meta.latest_snapshot()
         )
         scan = load_table_scan(self.meta, snap, self.path, False)
-        new_files = {
-            e.file_path
-            for e in scan.data_files()
-            if (e.sequence_number or 0) > lo
-        }
+        new_files = [e for e in scan.data_files() if (e.sequence_number or 0) > lo]
         return self._scan_files(snap.snapshot_id, new_files)
 
     def scan_changelog(self, from_snapshot_id: int, to_snapshot_id: Optional[int] = None) -> DataFrame:
@@ -622,8 +618,8 @@ class IcebergTable:
         )
         old_scan = load_table_scan(self.meta, old_snap, self.path, False)
         new_scan = load_table_scan(self.meta, new_snap, self.path, False)
-        old_files = {e.file_path for e in old_scan.data_files()}
-        new_files = {e.file_path for e in new_scan.data_files()}
+        old_files = {e.file_path: e for e in old_scan.data_files()}
+        new_files = {e.file_path: e for e in new_scan.data_files()}
         # equality deletes count too: a delete_where_equality commit adds
         # no data files and no positional deletes, yet removes live rows
         # from common data files — the delete-set diff must see it
@@ -633,17 +629,17 @@ class IcebergTable:
         new_deletes = {e.file_path for e in new_scan.positional_delete_files()} | {
             e.file_path for e in new_scan.equality_delete_files()
         }
-        cand_old = old_files - new_files
-        cand_new = new_files - old_files
+        cand_old = old_files.keys() - new_files.keys()
+        cand_new = new_files.keys() - old_files.keys()
         if old_deletes != new_deletes:
             # common files' live rows may differ through new/removed
             # delete files — pull them into the diff (still only the
             # affected snapshot window, never the whole table)
-            common = old_files & new_files
+            common = old_files.keys() & new_files.keys()
             cand_old |= common
             cand_new |= common
-        rows_old = self._scan_files(old_snap.snapshot_id, cand_old)
-        rows_new = self._scan_files(new_snap.snapshot_id, cand_new)
+        rows_old = self._scan_files(old_snap.snapshot_id, [old_files[p] for p in cand_old])
+        rows_new = self._scan_files(new_snap.snapshot_id, [new_files[p] for p in cand_new])
         inserts = rows_new.exceptAll(rows_old)
         deletes = rows_old.exceptAll(rows_new)
         return inserts.select(F.lit("insert").alias("change_type"), "*").unionAll(
@@ -677,24 +673,25 @@ class IcebergTable:
     def _scan_with_pos(self, snapshot_id: Optional[int] = None, where=None) -> DataFrame:
         """Live rows (default: current snapshot) + (__file, __pos)
         virtual columns, ``__file`` the URI Spark reports (not decoded).
-        ``where`` keeps the matching rows; a SQL string also prunes data
-        files by partition values and column bounds (iceberg_scan)."""
+        ``where``, a SQL string or a Column, keeps the matching rows and
+        prunes the data files by partition values and column bounds
+        (iceberg_scan)."""
         from .sources.iceberg import iceberg_scan
 
-        sql = where if isinstance(where, str) else None
-        df = iceberg_scan(
-            self.spark, self.path, snapshot_id, metadata_compression_codec=self.codec, where=sql,
+        return iceberg_scan(
+            self.spark, self.path, snapshot_id, metadata_compression_codec=self.codec, where=where,
             _keep_position_columns=True,
         )
-        return df if where is None or sql is not None else df.filter(where)
 
-    def _scan_files(self, snapshot_id: int, files: set[str]) -> DataFrame:
+    def _scan_files(self, snapshot_id: int, entries: list) -> DataFrame:
         """Live rows of snapshot ``snapshot_id`` that sit in the data
-        files ``files``."""
-        from .sources.iceberg import _decode_file_uri, _norm_path
+        files of manifest ``entries``: ``__file`` is matched against
+        their URIs as Spark reports them, worked out on the driver, so
+        no row is decoded."""
+        from .sources.iceberg import _file_uris
 
-        df = self._scan_with_pos(snapshot_id)
-        return df.where(_norm_path(_decode_file_uri(F.col("__file"))).isin([*files])).drop("__file", "__pos")
+        uris = list(_file_uris(self.spark, entries).values())
+        return self._scan_with_pos(snapshot_id).where(F.col("__file").isin(uris)).drop("__file", "__pos")
 
     @property
     def schema(self) -> IcebergSchema:
@@ -1479,8 +1476,8 @@ class IcebergTable:
     def delete_where(self, condition) -> None:
         """Merge-on-read DELETE: write position-delete files for matched
         rows (no data-file rewrite). ``condition`` is a Column or a SQL
-        string; a SQL string also prunes the scanned data files by
-        partition values and column bounds."""
+        string; either also prunes the scanned data files by partition
+        values and column bounds, as ``iceberg_scan(where=)`` does."""
         self._row_level_commit("delete", self._scan_with_pos(where=condition))
 
     def update_where(self, condition, assignments: dict) -> None:
@@ -1628,8 +1625,9 @@ class IcebergTable:
         it the default. Metadata-only — existing data files keep their
         old-spec partition structs; only future writes are routed (and
         prunable) by the new field. The read side keeps old-spec files
-        on a new-field partition_filter (their rows may match), which
-        is exactly the Iceberg spec's mixed-spec scan behavior.
+        on a new-field ``partition_filter`` or ``where=`` equality
+        (their rows may match), which is exactly the Iceberg spec's
+        mixed-spec scan behavior.
 
         Accepts the same syntax as ``create(partition_by=...)``:
         ``"col"``, ``"years(col)"``, ``("bucket", 4, "col")`` ...
@@ -1791,7 +1789,7 @@ class IcebergTable:
         ``sort_by`` range-partitions and sorts rows by the given
         columns, so each output file covers a narrow value range —
         this is what makes the manifest column bounds (zone maps)
-        selective: post-sort, a stats_filter point lookup touches one
+        selective: post-sort, a ``where=`` point lookup touches one
         file instead of all of them.
 
         ``zorder_by`` clusters on a Morton (Z-order) curve over 2+

@@ -382,11 +382,7 @@ def test_foreign_table_where_prunes_and_filters_exactly(spark, tmp_path):
     from duckdb_iceberg_spark.plans.foreign_fixture import write_foreign_table
     from duckdb_iceberg_spark.plans.manifests import load_table_scan
     from duckdb_iceberg_spark.plans.table_metadata import load_table_metadata
-    from duckdb_iceberg_spark.sources.iceberg import (
-        _predicate_to_pruners,
-        _prune_by_partition,
-        _prune_by_stats,
-    )
+    from duckdb_iceberg_spark.sources.iceberg import _prune_by_stats, _where_predicate
 
     path = str(tmp_path / "t")
     write_foreign_table("/root/testdata/sf0.01/part.parquet", path)
@@ -402,9 +398,9 @@ def test_foreign_table_where_prunes_and_filters_exactly(spark, tmp_path):
     meta = load_table_metadata(path, unsafe_enable_version_guessing=True)
     scan = load_table_scan(meta, meta.latest_snapshot(), path)
     entries = scan.data_files()
-    stats_f, part_f, _checks = _predicate_to_pruners(meta, pred)
-    kept = _prune_by_stats(meta, entries, stats_f)
-    kept = _prune_by_partition(meta, kept, part_f, strict=False)
+    schema = meta.schema_for_snapshot(meta.latest_snapshot())
+    _, where = _where_predicate(spark, schema, pred)
+    kept = _prune_by_stats(meta, entries, where)
     assert len(kept) < len(entries) // 4, (len(kept), len(entries))
 
 
@@ -1032,41 +1028,62 @@ def test_delete_application_event(spark, tmp_path, caplog):
     assert got["spaced"][0] == 0 and got["spaced"][2:] == (3, True) and got["spaced"][1] >= 1
 
 
-def test_where_pruners_trust_only_true_literals():
-    """Pruning reads a term only when Spark would read the same value
-    from it: a bare word on the right is a column, not a string; a
-    keyword inside a quoted string or a comment splits nothing; a
-    BETWEEN or comparison with more after it, a NOT, a CASE or an OR
-    around a term all stop it pruning alone; decimals stay exact; a
-    float range needs an upper end (NaN sorts above every number); a
-    zoneless timestamp is read in the session time zone."""
+def test_where_pruners_trust_only_true_literals(spark):
+    """Pruning reads a term as Spark resolves it: a bare word on the
+    right is a column, not a string; a NOT, a CASE, a cast around the
+    column, a literal Spark cannot cast, or a float range with no upper
+    end (NaN sorts above every number) prunes nothing; comments, literal concatenation, escapes
+    and constant arithmetic are Spark's own; decimals stay exact; a
+    zoneless timestamp is read in the session time zone; an OR prunes
+    each side. ``ranges`` lists the column ranges of the top-level AND;
+    an unresolvable column raises, as Spark's filter does."""
     import decimal
-    from types import SimpleNamespace
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import types as T
 
-    from duckdb_iceberg_spark.sources.iceberg import _predicate_to_pruners
+    from duckdb_iceberg_spark.plans.table_metadata import IcebergColumn, IcebergSchema
+    from duckdb_iceberg_spark.sources.iceberg import _Bool, _Range, _where_predicate
 
     cols = dict(
         k=T.LongType(), a=T.StringType(), b=T.StringType(), x=T.DoubleType(),
         d=T.DecimalType(10, 2), ts=T.TimestampType(), ntz=T.TimestampNTZType(), day=T.DateType(),
     )
-    meta = SimpleNamespace(
-        current_schema_id=0,
-        schemas={0: SimpleNamespace(columns=[SimpleNamespace(name=n, spark_type=t) for n, t in cols.items()])},
-    )
+    schema = IcebergSchema(0, [IcebergColumn(i, n, t) for i, (n, t) in enumerate(cols.items(), 1)])
+    names = {c.field_id: c.name for c in schema.columns}
+
+    def predicate(where, tz="UTC"):
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        try:
+            return _where_predicate(spark, schema, where)[1]
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def ranges(where, tz="UTC"):
-        return _predicate_to_pruners(meta, where, tz)[0]
+        p = predicate(where, tz)
+        terms = p.kids if isinstance(p, _Bool) and p.op == "and" else (p,)
+        return {names[r.fid]: tuple(r)[2:] for r in terms if isinstance(r, _Range)}
 
     for where in (
-        "a = b", "a IN (b, 'x')", "a IN ('x' 'y')", "a = true", "k = 1_0", "k = 5-3",
-        "a = 'c:\\x'", "k BETWEEN 1 AND 5 + 2", "NOT k BETWEEN 1 AND 5", "NOT k = 5",
-        "CASE WHEN b = 'y' AND k = 5 THEN true END", "k = 5 -- and more", "k = 5 /* AND */",
-        "a = 'y' OR k = 5", "x > 5", "x >= 1e3", "day = '2024-01-01 10:00:00'",
-        "ntz = '2024-01-01T00:00:00+02:00'", "a = TIMESTAMP '2024-01-01'",
+        "a = b", "a IN (b, 'x')", "a = true", "NOT k BETWEEN 1 AND 5", "NOT k = 5",
+        "CASE WHEN b = 'y' AND k = 5 THEN true END", "a = 'y' OR k = 5", "x > 5", "x >= 1e3",
+        "a = TIMESTAMP '2024-01-01'", "k = 'abc'",
     ):
         assert ranges(where) == {}, where
+    # each range is the folded literal Spark filters on
+    for where, want in (
+        ("a IN ('x' 'y')", {"a": ("xy", "xy", False, False)}),
+        ("k = 5-3", {"k": (2, 2, False, False)}),
+        ("a = 'c:\\x'", {"a": ("c:x", "c:x", False, False)}),
+        ("k BETWEEN 1 AND 5 + 2", {"k": (1, 7, False, False)}),
+        ("k = 5 -- and more", {"k": (5, 5, False, False)}),
+        ("k = 5 /* AND */", {"k": (5, 5, False, False)}),
+        ("day = '2024-01-01 10:00:00'", {"day": (datetime.date(2024, 1, 1),) * 2 + (False, False)}),
+        ("ntz = '2024-01-01T00:00:00+02:00'", {"ntz": (datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc),) * 2 + (False, False)}),
+    ):
+        assert ranges(where) == want, where
+    with pytest.raises(AnalysisException):
+        predicate("k = 1_0")
     assert ranges("a = 'x AND k = 5 AND y'") == {"a": ("x AND k = 5 AND y",) * 2 + (False, False)}
     assert ranges("k BETWEEN 1 AND 5 AND a >= 'm'") == {"k": (1, 5, False, False), "a": ("m", None, False, False)}
     assert ranges("k = 1 AND (a = 'x' OR k = 2)") == {"k": (1, 1, False, False)}
@@ -1079,4 +1096,10 @@ def test_where_pruners_trust_only_true_literals():
     assert ranges("ts < TIMESTAMP '2024-01-01 00:00:00+01:00'", "America/Los_Angeles") == {
         "ts": (None, datetime.datetime(2023, 12, 31, 23, tzinfo=utc), False, True)
     }
-    assert ranges("ts < '2024-01-01'", "+02:00") == {}  # a zone Python cannot resolve
+    assert ranges("ts < '2024-01-01'", "+02:00") == {
+        "ts": (None, datetime.datetime(2023, 12, 31, 22, tzinfo=utc), False, True)
+    }
+    # an OR keeps a file if either side may match
+    assert predicate("a = 'y' OR k = 5") == _Bool(
+        "or", (_Range(2, T.StringType(), "y", "y"), _Range(1, T.LongType(), 5, 5))
+    )

@@ -13,6 +13,7 @@ import sys
 from pathlib import Path
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).parent))
@@ -73,6 +74,43 @@ def test_bucket_partition(spark, tmp_path, events):
     assert pruned.count() < events.count()
 
 
+def test_bucket_partition_on_timestamps(spark, tmp_path):
+    """bucket(N) over a timestamp column hashes its epoch micros on the
+    JVM as bucket_value does for the literal pruning sees (a
+    timestamp_ntz its wall-clock micros, whatever the session zone), so
+    a create round-trips and an equality prunes to its bucket."""
+    import datetime
+
+    from duckdb_iceberg_spark import IcebergTable
+    from duckdb_iceberg_spark.plans.transforms import bucket_column, bucket_value
+
+    # not spark.range: its generated code fails beside the bucket hash (IllegalAccessError)
+    df = spark.createDataFrame([(i,) for i in range(40)], "id long").repartition(2).selectExpr(
+        "id AS k", "timestamp_seconds(1710000000 + id * 4000) AS ts",
+        "CAST(timestamp_seconds(1710000000 + id * 4000) AS timestamp_ntz) AS ntz",
+    )
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        rows = df.select(
+            F.unix_micros("ts").alias("us"), "ntz",
+            bucket_column(F.col("ts"), 4, "timestamp").alias("b"),
+            bucket_column(F.col("ntz"), 4, "timestamp_ntz").alias("bn"),
+        ).collect()
+        for r in rows:
+            assert r.b == bucket_value(epoch + datetime.timedelta(microseconds=r.us), 4)
+            assert r.bn == bucket_value(r.ntz, 4)
+        t = IcebergTable.create(spark, str(tmp_path / "t"), df, partition_by=[("bucket", 4, "ts")])
+        assert sorted(r.k for r in t.scan().collect()) == list(range(40))
+        w = "ts = TIMESTAMP '2024-03-09 16:00:00 UTC'"  # row 0
+        n_all = len(t.scan(mode="list_files").collect())
+        n_w = len(t.scan(mode="list_files", where=w).collect())
+        assert n_w < n_all
+        assert [r.k for r in t.scan(where=w).collect()] == [0]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def test_truncate_partition_string(spark, tmp_path):
     from duckdb_iceberg_spark import IcebergTable
 
@@ -114,13 +152,25 @@ def test_partition_filter_callable_and_errors(spark, tmp_path, events):
 
 def test_bucket_value_spec_vectors():
     """Iceberg spec appendix B test vectors for bucket hashing."""
-    from duckdb_iceberg_spark.plans.transforms import murmur3_32
+    import datetime
+
+    from duckdb_iceberg_spark.plans.transforms import bucket_value, murmur3_32
 
     # spec: hashInt(34) = hashLong(34) = 2017239379
     enc = (34).to_bytes(8, "little")
     assert murmur3_32(enc) == 2017239379
     # spec: hash of UTF-8 "iceberg" = 1210000089
     assert murmur3_32(b"iceberg") == 1210000089
+    # spec: timestamps (with or without zone) hash their epoch micros as a long
+    epoch = datetime.datetime(1970, 1, 1)
+    for ts, h in (
+        (datetime.datetime(2017, 11, 16, 22, 31, 8), -2047944441),
+        (datetime.datetime(2017, 11, 16, 22, 31, 8, 1), -1207196810),
+    ):
+        micros = (ts - epoch) // datetime.timedelta(microseconds=1)
+        assert murmur3_32(micros.to_bytes(8, "little", signed=True)) == h & 0xFFFFFFFF
+        utc = ts.replace(tzinfo=datetime.timezone.utc)
+        assert bucket_value(ts, 16) == bucket_value(utc, 16) == (h & 0x7FFFFFFF) % 16
 
 
 def test_stats_file_skipping(spark, tmp_path):
@@ -137,25 +187,21 @@ def test_stats_file_skipping(spark, tmp_path):
     assert all(e.lower_bounds and e.upper_bounds for e in scan.data_files())
 
     n_all = len(t.scan(mode="list_files").collect())
-    pruned = t.scan(mode="list_files", stats_filter={"o_orderkey": (1200, 1300)})
+    pruned = t.scan(mode="list_files", where="o_orderkey BETWEEN 1200 AND 1300")
     assert len(pruned.collect()) < n_all
 
-    got = t.scan(stats_filter={"o_orderkey": (1200, 1300)}).filter(
-        "o_orderkey BETWEEN 1200 AND 1300"
-    ).count()
+    got = t.scan(where="o_orderkey BETWEEN 1200 AND 1300").count()
     expected = o.filter("o_orderkey BETWEEN 1200 AND 1300").count()
     assert got == expected and expected > 0
 
     # timestamp bounds too
     lo = "1996-01-01"
-    got2 = t.scan(stats_filter={"o_orderdate": (lo, None)}).filter(
-        F.col("o_orderdate") >= F.lit(lo).cast("timestamp")
-    ).count()
+    got2 = t.scan(where=F.col("o_orderdate") >= F.lit(lo).cast("timestamp")).count()
     exp2 = o.filter(F.col("o_orderdate") >= F.lit(lo).cast("timestamp")).count()
     assert got2 == exp2
 
-    with pytest.raises(ValueError, match="not in schema"):
-        t.scan(stats_filter={"nope": (1, 2)})
+    with pytest.raises(AnalysisException, match="nope"):
+        t.scan(where="nope BETWEEN 1 AND 2")
 
 
 def test_bound_serialization_roundtrip():
@@ -181,7 +227,7 @@ def test_bound_serialization_roundtrip():
 
 
 def test_sorted_compaction_tightens_zone_maps(spark, tmp_path):
-    """After rewrite_data_files(sort_by=...), a stats_filter point range
+    """After rewrite_data_files(sort_by=...), a ``where=`` point range
     must touch fewer files than the unsorted layout."""
     from duckdb_iceberg_spark import IcebergTable
 
@@ -191,16 +237,15 @@ def test_sorted_compaction_tightens_zone_maps(spark, tmp_path):
     t.rewrite_data_files(target_file_size_bytes=4 * 1024)
     n_files = len(t.scan(mode="list_files").collect())
     lo, hi = 10, 60
-    before = len(t.scan(mode="list_files", stats_filter={"o_orderkey": (lo, hi)}).collect())
+    w = f"o_orderkey BETWEEN {lo} AND {hi}"
+    before = len(t.scan(mode="list_files", where=w).collect())
     assert before == n_files  # random layout: nothing prunable
     t.rewrite_data_files(target_file_size_bytes=4 * 1024, sort_by=["o_orderkey"])
     after_all = len(t.scan(mode="list_files").collect())
-    after = len(t.scan(mode="list_files", stats_filter={"o_orderkey": (lo, hi)}).collect())
+    after = len(t.scan(mode="list_files", where=w).collect())
     assert after < after_all  # sorted layout: range hits few files
-    got = t.scan(stats_filter={"o_orderkey": (lo, hi)}).filter(
-        f"o_orderkey BETWEEN {lo} AND {hi}"
-    ).count()
-    assert got == o.filter(f"o_orderkey BETWEEN {lo} AND {hi}").count()
+    got = t.scan(where=w).count()
+    assert got == o.filter(w).count()
 
 
 def test_commit_conflict_detection(spark, tmp_path):
@@ -370,12 +415,12 @@ def test_zorder_compaction_prunes_both_dims(spark, tmp_path):
     assert n_files >= 4
     pk = li.agg(F.max("l_partkey")).first()[0]
     sk = li.agg(F.max("l_suppkey")).first()[0]
-    pruned_a = t.scan(mode="list_files", stats_filter={"l_partkey": (1, pk // 8)}).count()
-    pruned_b = t.scan(mode="list_files", stats_filter={"l_suppkey": (1, max(sk // 8, 1))}).count()
+    pruned_a = t.scan(mode="list_files", where=F.col("l_partkey") <= pk // 8).count()
+    pruned_b = t.scan(mode="list_files", where=F.col("l_suppkey") <= max(sk // 8, 1)).count()
     assert pruned_a < n_files
     assert pruned_b < n_files
     # correctness of a pruned read
-    got = t.scan(stats_filter={"l_partkey": (1, pk // 8)}).filter(F.col("l_partkey") <= pk // 8)
+    got = t.scan(where=F.col("l_partkey") <= pk // 8)
     assert got.count() == li.filter(F.col("l_partkey") <= pk // 8).count()
 
 
@@ -548,10 +593,13 @@ def test_bucket_jvm_expression_matches_python_vectors(spark):
     assert "BatchEvalPython" not in splan
 
 
-def test_where_in_list_prunes_and_or_disables_pruning(spark, tmp_path, events):
-    """IN-lists prune at file level; any top-level OR disables pruning
-    entirely (a disjunctively-scoped BETWEEN must not drop files);
-    NOT IN is never misparsed as IN."""
+def test_where_in_list_and_or_prune_exactly(spark, tmp_path, events, caplog):
+    """IN-lists prune at file level; a top-level OR keeps a file when
+    either side may match it (a disjunctively-scoped BETWEEN must not
+    drop files another side needs), reported by one ``where pruning``
+    event; NOT IN is never misparsed as IN."""
+    import logging
+
     t = _mk(spark, tmp_path, events, ["event_type"])
     types = sorted(r.event_type for r in events.select("event_type").distinct().collect())
     two = types[:2]
@@ -574,8 +622,20 @@ def test_where_in_list_prunes_and_or_disables_pruning(spark, tmp_path, events):
         ((F.col("user_id") >= lo) & (F.col("user_id") <= hi)) | (F.col("event_type") == types[-1])
     ).count()
     assert got_or == exp_or > 0
-    # and no pruning occurred under OR
-    assert len(t.scan(mode="list_files", where=w_or).collect()) == n_all
+    # an OR of two partition-selective sides prunes to their files
+    w_or = f"(user_id BETWEEN {lo} AND {hi} AND event_type = '{types[0]}') OR event_type = '{types[-1]}'"
+    got_or = t.scan(where=w_or).count()
+    exp_or = events.filter(
+        ((F.col("user_id") >= lo) & (F.col("user_id") <= hi) & (F.col("event_type") == types[0]))
+        | (F.col("event_type") == types[-1])
+    ).count()
+    assert got_or == exp_or > 0
+    caplog.set_level(logging.DEBUG, logger="duckdb_iceberg_spark")
+    n_or = len(t.scan(mode="list_files", where=w_or).collect())
+    assert n_or < n_all
+    (ev,) = [r for r in caplog.records if hasattr(r, "residual_proven")]
+    assert (ev.leaves, ev.files_before, ev.files_after, ev.residual_proven) == (3, n_all, n_or, False)
+    assert " OR " in ev.condition
 
     # NOT IN must not prune as if it were IN
     w_not = f"event_type NOT IN ('{two[0]}')"

@@ -1166,6 +1166,57 @@ def test_sql_delete_prunes_target_files(spark, tmp_path, caplog):
     assert sorted(r.k for r in IcebergTable(spark, path).scan().collect()) == list(range(10, 80))
 
 
+def test_column_or_and_in_deletes_prune_target_files(spark, tmp_path, caplog):
+    """A Column condition, an OR of two ranges and an IN-list prune the
+    delete_where target scan to the data files that hold matching keys,
+    as the SQL ``k < 10`` does, each reported by one ``where pruning``
+    event."""
+    import logging
+
+    from duckdb_iceberg_spark import IcebergTable
+    from duckdb_iceberg_spark.sources import iceberg as SRC
+
+    caplog.set_level(logging.DEBUG, logger="duckdb_iceberg_spark")
+    for i, (condition, keys) in enumerate(
+        [(F.col("k") < 10, range(10)), ("k < 10 OR k >= 70", [*range(10), *range(70, 80)]), ("k IN (5, 75)", [5, 75])]
+    ):
+        path = str(tmp_path / f"t{i}")
+        # 8 slices of 10 consecutive keys: one data file each
+        t = IcebergTable.create(spark, path, spark.range(0, 80, 1, 8).selectExpr("id AS k"))
+        SRC._READ_CACHE.clear()
+        caplog.clear()
+        t.delete_where(condition)
+        files = len({k // 10 for k in keys})
+        assert [r.files for r in caplog.records if hasattr(r, "listed")] == [files], condition
+        (ev,) = [r for r in caplog.records if hasattr(r, "residual_proven")]
+        assert (ev.files_before, ev.files_after, ev.residual_proven) == (8, files, False)
+        left = sorted(r.k for r in IcebergTable(spark, path).scan().collect())
+        assert left == sorted(set(range(80)) - set(keys))
+
+
+def test_scan_appends_matches_raw_uris(spark, tmp_path):
+    """scan_appends and scan_changelog keep the files they name by the
+    URIs Spark reports for them, worked out on the driver: the plan
+    decodes no row, and the rows are the appended ones under a table
+    root whose name Spark percent-encodes (a space, '#', '%', '+')."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "a b#c%d+e" / "t")
+    t = IcebergTable.create(spark, path, spark.range(0, 40, 1, 4).selectExpr("id AS k"))
+    snap0 = t.meta.latest_snapshot().snapshot_id
+    IcebergTable(spark, path).append(spark.range(40, 50, 1, 2).selectExpr("id AS k"))
+    df = IcebergTable(spark, path).scan_appends(snap0)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for fn in ("UrlCodec", "url_decode", "regexp_replace"):
+        assert fn not in plan, plan
+    assert sorted(r.k for r in df.collect()) == list(range(40, 50))
+    IcebergTable(spark, path).delete_where("k IN (3, 45)")
+    t = IcebergTable(spark, path)
+    assert sorted(r.k for r in t.scan_appends(snap0).collect()) == [k for k in range(40, 50) if k != 45]
+    changes = sorted((r.change_type, r.k) for r in t.scan_changelog(snap0).collect())
+    assert changes == [("delete", 3)] + [("insert", k) for k in range(40, 50) if k != 45]
+
+
 def test_sql_row_level_writes_compare_columns(spark, tmp_path):
     """A SQL condition that compares two columns (a bare word on the
     right, not a quoted literal) prunes no target file: update_where
