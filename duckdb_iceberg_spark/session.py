@@ -141,6 +141,9 @@ def get_spark(app_name: str = "duckdb_iceberg_spark", **extra) -> SparkSession:
         .config("spark.sql.parquet.fieldId.read.enabled", "true")
         .config("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
         .config("spark.sql.parquet.fieldId.write.enabled", "true")
+        # INT64 micros, as the Iceberg spec stores timestamps (Spark's
+        # default INT96 carries no column statistics)
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type —
         # read as long and convert (ts div 1000 -> micros) at the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -307,7 +307,7 @@ _MANIFEST_ENTRY_SCHEMA = {
 }
 
 def _metadata_json_bytes(doc: dict, codec: str) -> bytes:
-    data = json.dumps(doc, indent=2).encode()
+    data = json.dumps(doc, separators=(",", ":")).encode()
     if codec == "gzip":
         import gzip
 
@@ -320,6 +320,26 @@ def _dump_metadata_json(mpath: str, doc: dict, codec: str) -> None:
     from .plans.fs import get_fs
 
     get_fs(mpath).write_bytes(mpath, _metadata_json_bytes(doc, codec))
+
+
+# Iceberg's write.parquet.compression-codec names, which Spark's parquet
+# `compression` option takes as they are (brotli, Iceberg's sixth name,
+# has no codec in Spark's distribution)
+_PARQUET_CODECS = ("gzip", "lz4", "snappy", "uncompressed", "zstd")
+# Iceberg's default write.target-file-size-bytes: the size that sizes a
+# driver-held batch and rewrite_data_files' default target
+_TARGET_FILE_SIZE = 512 * 1024 * 1024
+
+
+def _parquet_codec(props: dict) -> str:
+    """Spark's parquet codec for table properties ``props``: their
+    ``write.parquet.compression-codec``, ``zstd`` (Iceberg >= 1.4's
+    default) when unset; an unknown name raises ValueError."""
+    name = props.get("write.parquet.compression-codec", "zstd")
+    codec = str(name).lower()
+    if codec not in _PARQUET_CODECS:
+        raise ValueError(f"unsupported write.parquet.compression-codec {name!r}; expected one of {_PARQUET_CODECS}")
+    return codec
 
 
 def _cmp_lt(a, b) -> bool:
@@ -500,9 +520,19 @@ class IcebergTable:
         ``format_version=3`` writes an Iceberg v3 table: DELETE /
         UPDATE / MERGE emit Puffin deletion vectors instead of
         position-delete parquet (beyond the reference, which has no v3
-        support at all)."""
+        support at all).
+
+        The writer honors the table's ``write.parquet.compression-codec``
+        property, the data and delete file codec: a new table gets
+        ``zstd``, as Iceberg >= 1.4 gives it, unless ``properties`` names
+        another. An unknown codec raises ValueError before anything is
+        written. A frame whose rows are already on the driver is written
+        as one file per 512 MiB (Iceberg's default target file size) of
+        its rows' in-memory bytes."""
         if format_version not in (2, 3):
             raise ValueError(f"format_version must be 2 or 3, got {format_version}")
+        properties = {"write.parquet.compression-codec": "zstd", **(properties or {})}
+        _parquet_codec(properties)
         from .plans.fs import abspath, get_fs
 
         path = abspath(path)
@@ -539,7 +569,7 @@ class IcebergTable:
             "last-partition-id": 999,
             "default-sort-order-id": 0,
             "sort-orders": [{"order-id": 0, "fields": []}],
-            "properties": properties or {},
+            "properties": properties,
             "current-snapshot-id": -1,
             "snapshots": [],
             "snapshot-log": [],
@@ -882,12 +912,31 @@ class IcebergTable:
         exactly one partition (Iceberg invariant); the source columns
         stay in the file (unlike plain hive layout). Partition values
         are recovered from the directory names into typed manifest
-        values used for read-side file pruning."""
+        values used for read-side file pruning.
+
+        The table's ``write.parquet.compression-codec`` (``zstd`` when
+        unset) is Spark's ``compression``, as in Iceberg's own writer. A
+        frame whose optimized plan is a ``LocalRelation`` — rows already
+        on the driver — is coalesced to one task per 512 MiB (Iceberg's
+        default target file size) of the rows' in-memory bytes, and
+        never to more tasks than it had. Every other plan keeps its own
+        partitioning: its size estimate is not the bytes it reads, so a
+        coalesce could collapse a wide scan. Timestamps are written as
+        INT64 microseconds, as the Iceberg spec asks, so they carry
+        column bounds; the session's own ``outputTimestampType`` is
+        restored after the write."""
         import pyarrow.parquet as pq
 
         from .plans.fs import is_local
 
+        codec = _parquet_codec(self.meta.raw.get("properties", {}))
         self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() == "LocalRelation":
+            # the rows' real bytes: the plan's stats() count a fixed size
+            # per type (20 B a string), far too few for wide text or arrays
+            held = self.spark._jvm.org.apache.spark.util.SizeEstimator.estimate(plan.data())
+            df = df.coalesce(max(1, math.ceil(held / _TARGET_FILE_SIZE)))
         pfields = self.partition_fields if partitioned else []
         local = is_local(self.path)
         if local:
@@ -905,7 +954,13 @@ class IcebergTable:
             ).write.partitionBy(*[f"_p_{pf.name}" for pf in pfields])
         else:
             writer = df.write
-        writer.mode("overwrite").parquet(tmp)
+        ts_type = "spark.sql.parquet.outputTimestampType"
+        session_ts_type = self.spark.conf.get(ts_type)
+        self.spark.conf.set(ts_type, "TIMESTAMP_MICROS")
+        try:
+            writer.option("compression", codec).mode("overwrite").parquet(tmp)
+        finally:
+            self.spark.conf.set(ts_type, session_ts_type)
         out = []
         for root, _dirs, names in os.walk(tmp):
             for name in sorted(names):
@@ -1005,11 +1060,12 @@ class IcebergTable:
             entries,
             metadata={
                 "schema": json.dumps(_schema_to_json(self.schema)),
-                "partition-spec": "[]",
+                "partition-spec": json.dumps(spec.get("fields", [])),
                 "partition-spec-id": str(spec_id),
                 "format-version": str(self.format_version),
                 "content": "data" if content == 0 else "deletes",
             },
+            codec="deflate",
         )
         # spec: min over live entries; a fully tombstoned manifest keeps
         # the min over all of them
@@ -1204,6 +1260,7 @@ class IcebergTable:
                 "snapshot-id": str(snap_id),
                 "sequence-number": str(seq),
             },
+            codec="deflate",
         )
 
         summary = {"operation": operation}
@@ -1695,10 +1752,13 @@ class IcebergTable:
         self._write_metadata(doc)
 
     def set_properties(self, props: dict) -> None:
-        """ALTER TABLE SET TBLPROPERTIES — metadata-only version bump."""
+        """ALTER TABLE SET TBLPROPERTIES — metadata-only version bump.
+        An unknown ``write.parquet.compression-codec`` raises ValueError
+        and changes nothing."""
         doc = dict(self.meta.raw)
         merged = dict(doc.get("properties", {}))
         merged.update({str(k): str(v) for k, v in props.items()})
+        _parquet_codec(merged)
         doc["properties"] = merged
         doc["last-updated-ms"] = _now_ms()
         self._write_metadata(doc)
@@ -1777,14 +1837,16 @@ class IcebergTable:
 
     def rewrite_data_files(
         self,
-        target_file_size_bytes: int = 128 * 1024 * 1024,
+        target_file_size_bytes: int = _TARGET_FILE_SIZE,
         sort_by: Optional[list[str]] = None,
         zorder_by: Optional[list[str]] = None,
         collect_statistics: bool = False,
     ) -> None:
         """Compaction: materialize current live rows (deletes applied),
         write right-sized data files, commit a `replace` snapshot that
-        references ONLY the new files.
+        references ONLY the new files. ``target_file_size_bytes``
+        defaults to Iceberg's 512 MiB, the size the writer sizes a
+        driver-held batch by.
 
         ``sort_by`` range-partitions and sorts rows by the given
         columns, so each output file covers a narrow value range —

@@ -1072,8 +1072,8 @@ def test_knn_join_blocked_panel_matches_join_shape(spark):
     two-sided blocked extension). Must be row-identical to the
     bucket-join shape in both modes, with the adversarial rows of the
     single-panel test (NULL / zero vectors on both sides) spread
-    across tile boundaries, and the tile count must show in the plan
-    as one MapInArrow subtree per tile."""
+    across tile boundaries, and the tiles must show in the plan as
+    MapInArrow subtrees."""
     import random
 
     random.seed(11)
@@ -1103,16 +1103,12 @@ def test_knn_join_blocked_panel_matches_join_shape(spark):
             )
         )
         assert new == old, f"exact={exact}"
-        # post-execution AQE toString prints final + initial plans;
-        # count tiles in the final section only
-        plan = (
-            tiled._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        assert plan.count("MapInArrow") == 4  # ceil(25 / 8) tiles
-        assert "Join" not in plan  # no pair-materializing join
+        # the optimized logical plan, free of AQE's final/initial plan
+        # rendering: one kernel pass per tile (ceil(25 / 8) = 4 tiles)
+        # and no pair-materializing join
+        plan = tiled._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInArrow") == 4
+        assert "Join" not in plan
 
 
 def test_salt_autotuning(spark):

@@ -87,15 +87,13 @@ predicates = st.recursive(leaf(), _combine, max_leaves=6)
 
 @pytest.fixture(scope="module")
 def la_session(spark):
-    """A Los Angeles session that writes microsecond timestamps (so the
-    files carry timestamp bounds), restored afterwards."""
+    """A Los Angeles session, restored afterwards. The writer's INT64
+    timestamps give the files timestamp bounds."""
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try:
         yield spark
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.unset("spark.sql.parquet.outputTimestampType")
 
 
 def _frame(spark):

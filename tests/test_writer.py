@@ -1246,15 +1246,14 @@ def test_sql_delete_reads_timestamps_in_session_time_zone(spark, tmp_path):
     session-zone wall-clock time, as in Spark's own filter. In a Los
     Angeles session, ``ts < '2024-01-01 00:00:00'`` holds up to 08:00
     UTC, so pruning must keep the file whose row sits at 07:30 UTC
-    (microsecond timestamps give the files column bounds). A days(ts)
-    partition is the UTC day, whatever the session zone."""
+    (the writer's INT64 timestamps give the files column bounds). A
+    days(ts) partition is the UTC day, whatever the session zone."""
     from duckdb_iceberg_spark import IcebergTable
     from duckdb_iceberg_spark.plans.manifests import load_table_scan
 
     # one row per file: 2024-01-01 07:30 UTC and 09:00 UTC
     df = spark.range(0, 2, 1, 2).selectExpr("id AS k", "timestamp_seconds(1704094200 + id * 5400) AS ts")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try:
         for i, partition_by in enumerate([None, [("days", "ts")]]):
             path = str(tmp_path / f"t{i}")
@@ -1266,4 +1265,3 @@ def test_sql_delete_reads_timestamps_in_session_time_zone(spark, tmp_path):
         assert sorted(e.partition["ts_day"] for e in files) == [19723, 19723]
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.unset("spark.sql.parquet.outputTimestampType")
