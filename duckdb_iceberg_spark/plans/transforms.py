@@ -126,20 +126,22 @@ def truncate_value(v: Any, w: int) -> Any:
     raise ValueError(f"truncate transform unsupported for {type(v)}")
 
 
+# Spark SQL's plural transform functions, and the names tables written
+# by earlier versions of this package carry; the spec names are singular
+_PLURAL = {"days": "day", "months": "month", "years": "year", "hours": "hour"}
+
+
 class PartitionField:
-    """One partition-spec field: `transform(source_column) AS name`."""
+    """One partition-spec field: `transform(source_column) AS name`.
+    ``transform`` is the spec's name (``day``, ``bucket`` ...); a plural
+    ``days``/``months``/``years``/``hours`` is read as the singular."""
 
     def __init__(self, transform: str, source: str, param: int | None = None, field_id: int = 1000):
-        self.transform = transform
+        self.transform = _PLURAL.get(transform, transform)
         self.source = source
         self.param = param
         self.field_id = field_id
-        if transform == "identity":
-            self.name = source
-        elif transform in ("days", "months", "years", "hours"):
-            self.name = f"{source}_{transform[:-1]}"
-        else:
-            self.name = f"{source}_{transform}"
+        self.name = source if self.transform == "identity" else f"{source}_{self.transform}"
 
     # -- spec JSON ---------------------------------------------------------
 
@@ -167,13 +169,13 @@ class PartitionField:
             if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
                 return (v - _EPOCH).days
             return v
-        if self.transform == "days":
+        if self.transform == "day":
             return days_value(v)
-        if self.transform == "months":
+        if self.transform == "month":
             return months_value(v)
-        if self.transform == "years":
+        if self.transform == "year":
             return years_value(v)
-        if self.transform == "hours":
+        if self.transform == "hour":
             return hours_value(v)
         if self.transform == "truncate":
             return truncate_value(v, self.param)
@@ -272,17 +274,17 @@ def spark_partition_column(pf: PartitionField, dtype: str) -> Column:
     c = F.col(pf.source)
     if pf.transform == "identity":
         return c
-    if dtype == "timestamp" and pf.transform in ("days", "months", "years"):
+    if dtype == "timestamp" and pf.transform in ("day", "month", "year"):
         # Iceberg cuts a timestamptz at UTC days; Spark's to_date, year
         # and month would cut it in the session time zone
         c = F.date_from_unix_date(F.floor(F.unix_micros(c) / 86_400_000_000).cast("int"))
-    if pf.transform == "days":
+    if pf.transform == "day":
         return F.to_date(c)
-    if pf.transform == "months":
+    if pf.transform == "month":
         return ((F.year(c) - 1970) * 12 + F.month(c) - 1).cast("int")
-    if pf.transform == "years":
+    if pf.transform == "year":
         return (F.year(c) - 1970).cast("int")
-    if pf.transform == "hours":
+    if pf.transform == "hour":
         return F.floor(F.unix_timestamp(c) / 3600).cast("int")
     if pf.transform == "truncate":
         if dtype in ("string",):

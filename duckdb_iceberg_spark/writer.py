@@ -372,9 +372,9 @@ def _parse_partition_dirs(rel: str, pfields: list[PartitionField], dtypes: dict)
         if raw == "__HIVE_DEFAULT_PARTITION__":
             out[pf.name] = None
             continue
-        if pf.transform == "days" or (pf.transform == "identity" and dtypes.get(pf.source) == "date"):
+        if pf.transform == "day" or (pf.transform == "identity" and dtypes.get(pf.source) == "date"):
             out[pf.name] = (_dt.date.fromisoformat(raw) - _dt.date(1970, 1, 1)).days
-        elif pf.transform in ("months", "years", "hours", "bucket"):
+        elif pf.transform in ("month", "year", "hour", "bucket"):
             out[pf.name] = int(raw)
         elif pf.transform == "truncate":
             out[pf.name] = raw if dtypes.get(pf.source) == "string" else int(raw)
@@ -398,9 +398,9 @@ def _partition_avro_fields(pfields: list[PartitionField], schema: IcebergSchema)
     for pf in pfields:
         src = by_name.get(pf.source)
         st = src.spark_type.simpleString() if src else "string"
-        if pf.transform == "days" or (pf.transform == "identity" and st == "date"):
+        if pf.transform == "day" or (pf.transform == "identity" and st == "date"):
             t: Any = {"type": "int", "logicalType": "date"}
-        elif pf.transform in ("months", "years", "hours", "bucket"):
+        elif pf.transform in ("month", "year", "hour", "bucket"):
             t = "int"
         elif pf.transform == "truncate":
             t = "string" if st == "string" else ("long" if st == "bigint" else "int")
@@ -512,10 +512,12 @@ class IcebergTable:
         format_version: int = 2,
     ) -> "IcebergTable":
         """CTAS. ``partition_by`` entries: ``"col"`` (identity),
-        ``("days"|"months"|"years"|"hours", col)``, or
+        ``("day"|"month"|"year"|"hour", col)`` (Spark SQL's plural
+        ``days`` ... are accepted too), or
         ``("bucket"|"truncate", N, col)`` — Iceberg hidden partitioning
         (the reference's own provisioner uses ``days(dt)``,
-        reference scripts/provision.py:92).
+        reference scripts/provision.py:92). The spec records the
+        singular names, as the Iceberg spec spells them.
 
         ``format_version=3`` writes an Iceberg v3 table: DELETE /
         UPDATE / MERGE emit Puffin deletion vectors instead of
@@ -755,16 +757,20 @@ class IcebergTable:
 
         self._pending_superseded = None
         # the manifest path from Spark's URI on the matched rows only;
-        # hash-partitioned on file_path first, so the dedup on
+        # hash-partitioned on file_path first, so the count per
         # (file_path, pos) finds its rows clustered and needs no
-        # exchange of its own
+        # exchange of its own; a position matched twice is SQL MERGE's
+        # cardinality violation
         dels = (
             matched.select(
                 _norm_path(_decode_file_uri(F.col("__file"))).alias("file_path"),
                 F.col("__pos").cast("long").alias("pos"),
             )
             .repartition("file_path")
-            .dropDuplicates()
+            .groupBy("file_path", "pos")
+            .count()
+            .select("file_path", F.when(F.col("count") == 1, F.col("pos")).otherwise(
+                F.raise_error(F.lit("MERGE cardinality violation: a target row matched two source rows"))).alias("pos"))
             .sortWithinPartitions("file_path", "pos")
         )
         if self.format_version < 3:
@@ -780,7 +786,7 @@ class IcebergTable:
 
     def _write_deletion_vectors(self, dels: DataFrame) -> list[dict]:
         """v3 path of :meth:`_write_position_deletes`: ``dels`` is a
-        deduplicated (file_path, pos) frame."""
+        (file_path, pos) frame holding each position once."""
         from .plans.manifests import load_table_scan
         from .plans.puffin import write_puffin_blobs
         from .sources.iceberg import _dv_deletes_df
@@ -800,7 +806,7 @@ class IcebergTable:
                     _dv_deletes_df(self.spark, prior).join(
                         F.broadcast(affected), "file_path", "left_semi"
                     )
-                ).dropDuplicates()
+                )
 
         def _encode(pdf):
             import pandas as pd
@@ -957,60 +963,61 @@ class IcebergTable:
         ts_type = "spark.sql.parquet.outputTimestampType"
         session_ts_type = self.spark.conf.get(ts_type)
         self.spark.conf.set(ts_type, "TIMESTAMP_MICROS")
+        out = []
         try:
             writer.option("compression", codec).mode("overwrite").parquet(tmp)
-        finally:
-            self.spark.conf.set(ts_type, session_ts_type)
-        out = []
-        for root, _dirs, names in os.walk(tmp):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                try:
-                    md = pq.ParquetFile(src).metadata
-                    n_rows = md.num_rows
-                except OSError:
-                    # footer carries a logical type this pyarrow can't
-                    # parse (e.g. Spark 4 VARIANT): count through Spark
-                    # and skip column bounds for the file —
-                    # correctness-safe (files without stats are never
-                    # pruned), variant columns have no zone maps anyway
-                    md = None
-                    n_rows = self.spark.read.parquet(src).count()
-                if n_rows == 0:
-                    continue
-                if not local:
-                    from .plans.fs import scheme_of
+            for root, _dirs, names in os.walk(tmp):
+                for name in sorted(names):
+                    if not name.endswith(".parquet"):
+                        continue
+                    src = os.path.join(root, name)
+                    try:
+                        md = pq.ParquetFile(src).metadata
+                        n_rows = md.num_rows
+                    except OSError:
+                        # footer carries a logical type this pyarrow can't
+                        # parse (e.g. Spark 4 VARIANT): count through Spark
+                        # and skip column bounds for the file —
+                        # correctness-safe (files without stats are never
+                        # pruned), variant columns have no zone maps anyway
+                        md = None
+                        n_rows = self.spark.read.parquet(src).count()
+                    if n_rows == 0:
+                        continue
+                    if not local:
+                        from .plans.fs import scheme_of
 
-                    raise ValueError(
-                        f"Cannot write data files to a {scheme_of(self.path)}:// table: "
-                        f"Spark itself must be able to write them. Point the table at a "
-                        f"Spark-accessible location, or register existing parquet with "
-                        f"add_files()."
+                        raise ValueError(
+                            f"Cannot write data files to a {scheme_of(self.path)}:// table: "
+                            f"Spark itself must be able to write them. Point the table at a "
+                            f"Spark-accessible location, or register existing parquet with "
+                            f"add_files()."
+                        )
+                    rel = os.path.relpath(root, tmp)
+                    partition = _parse_partition_dirs(rel, pfields, dict(df.dtypes) if pfields else {})
+                    pdir = os.path.join(self.path, subdir, rel) if rel != "." else os.path.join(self.path, subdir)
+                    os.makedirs(pdir, exist_ok=True)
+                    dest = os.path.join(pdir, f"{uuid.uuid4().hex}.parquet")
+                    shutil.move(src, dest)
+                    lowers, uppers, nullcounts = (
+                        self._column_bounds(md) if md is not None else ({}, {}, {})
                     )
-                rel = os.path.relpath(root, tmp)
-                partition = _parse_partition_dirs(rel, pfields, dict(df.dtypes) if pfields else {})
-                pdir = os.path.join(self.path, subdir, rel) if rel != "." else os.path.join(self.path, subdir)
-                os.makedirs(pdir, exist_ok=True)
-                dest = os.path.join(pdir, f"{uuid.uuid4().hex}.parquet")
-                shutil.move(src, dest)
-                lowers, uppers, nullcounts = (
-                    self._column_bounds(md) if md is not None else ({}, {}, {})
-                )
-                out.append(
-                    {
-                        "file_path": dest,
-                        "file_format": "PARQUET",
-                        "record_count": n_rows,
-                        "file_size_in_bytes": os.path.getsize(dest),
-                        "partition": partition,
-                        "lower_bounds": lowers,
-                        "upper_bounds": uppers,
-                        "null_value_counts": nullcounts,
-                    }
-                )
-        shutil.rmtree(tmp, ignore_errors=True)
+                    out.append(
+                        {
+                            "file_path": dest,
+                            "file_format": "PARQUET",
+                            "record_count": n_rows,
+                            "file_size_in_bytes": os.path.getsize(dest),
+                            "partition": partition,
+                            "lower_bounds": lowers,
+                            "upper_bounds": uppers,
+                            "null_value_counts": nullcounts,
+                        }
+                    )
+        finally:
+            # a failed write leaves no staging directory in the table
+            self.spark.conf.set(ts_type, session_ts_type)
+            shutil.rmtree(tmp, ignore_errors=True)
         return out
 
     def _aligned(self, df: DataFrame) -> DataFrame:
@@ -1514,10 +1521,17 @@ class IcebergTable:
         data-file write of the row frames ``parts``, each conformed to
         the table schema first (a merge source may carry other columns
         or types than its updated rows), and one snapshot holding both.
-        No snapshot when both come out empty."""
-        del_files = [] if deleted is None else self._write_position_deletes(deleted)
-        rows = functools.reduce(DataFrame.unionByName, map(self._aligned, parts)) if parts else None
-        new_files = [] if rows is None else self._write_parquet_files(rows, partitioned=True)
+        No snapshot when both come out empty. With both writes,
+        ``deleted`` is cached for their span: the rows built from it
+        read the target rows it found instead of a second scan."""
+        cached = deleted.persist() if deleted is not None and parts else None
+        try:
+            del_files = [] if deleted is None else self._write_position_deletes(deleted)
+            rows = functools.reduce(DataFrame.unionByName, map(self._aligned, parts)) if parts else None
+            new_files = [] if rows is None else self._write_parquet_files(rows, partitioned=True)
+        finally:
+            if cached is not None:
+                cached.unpersist()
         if not del_files and not new_files:
             return
         n = self._added_pos_deletes(del_files)
@@ -1570,18 +1584,23 @@ class IcebergTable:
         - ``when_not_matched_insert``: source rows with no target match
           are appended (source must be schema-compatible).
 
+        Keys match with ``=``, as in SQL MERGE: a NULL key matches
+        nothing, so a NULL-key source row is inserted. A target row
+        matched by two source rows under ``when_matched_update`` raises
+        SQL MERGE's cardinality error and commits nothing.
+
         The classic upsert is ``merge(src, on=key,
         when_matched_update={...}, when_not_matched_insert=True)``.
         """
         if when_matched_update and when_matched_delete:
             raise ValueError("choose either when_matched_update or when_matched_delete")
         keys = [on] if isinstance(on, str) else list(on)
-        tgt = self._scan_with_pos()
         src = source.alias("src")
-        cond = functools.reduce(Column.__and__, [tgt[k].eqNullSafe(F.col(f"src.{k}")) for k in keys])
-        matched = tgt.alias("tgt").join(src, cond, "inner")
-
+        cond = functools.reduce(Column.__and__, [F.col(f"tgt.{k}") == F.col(f"src.{k}") for k in keys])
         upd, parts = when_matched_update, []
+        # the target rows the commit deletes; a semi join when no source
+        # column is read, so a repeated source key cannot repeat a row
+        matched = self._scan_with_pos().alias("tgt").join(src, cond, "inner" if upd else "left_semi")
         if upd:
             cols = [
                 (_as_column(upd[c.name]) if c.name in upd else F.col(f"tgt.{c.name}")).alias(c.name)
@@ -1589,10 +1608,7 @@ class IcebergTable:
             ]
             parts.append(matched.select(*cols))
         if when_not_matched_insert:
-            # anti join source rows against target keys
-            tkeys = tgt.select(*[F.col(k).alias(f"__t_{k}") for k in keys])
-            acond = functools.reduce(Column.__and__, [F.col(f"src.{k}").eqNullSafe(F.col(f"__t_{k}")) for k in keys])
-            parts.append(src.join(tkeys, acond, "left_anti"))
+            parts.append(src.join(matched.select(*[F.col(f"tgt.{k}").alias(k) for k in keys]), keys, "left_anti"))
         self._row_level_commit("overwrite", matched if upd or when_matched_delete else None, parts)
 
     def delete_where_equality(self, keys_df: DataFrame) -> None:

@@ -21,6 +21,10 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # driver heap: half the host's physical memory, within [2g, 24g], so
+    # the suite's JVM fits beside the test process on a small host
+    half_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(24, max(2, half_gb))}g")
     from duckdb_iceberg_spark import get_spark
 
     s = get_spark("tests")

@@ -230,6 +230,7 @@ def test_manifest_header_carries_partition_spec(spark, tmp_path):
     meta, _ = read_avro_file(ml["manifest_path"])
     ts_id = next(c.field_id for c in t.schema.columns if c.name == "ts")
     assert json.loads(meta["partition-spec"]) == [
-        {"name": "ts_day", "transform": "days", "source-id": ts_id, "field-id": 1000}
+        {"name": "ts_day", "transform": "day", "source-id": ts_id, "field-id": 1000}
     ]
     assert meta["partition-spec-id"] == b"0"
+    assert t.meta.raw["partition-specs"] == [{"spec-id": 0, "fields": json.loads(meta["partition-spec"])}]

@@ -62,6 +62,32 @@ def test_days_partition_hidden_prune(spark, tmp_path, events):
     assert expected > 0
 
 
+@pytest.mark.parametrize("spec_name", ["day", "days"])
+def test_day_spec_names_append_and_prune(spark, tmp_path, spec_name):
+    """A table whose spec says ``day``, as the Iceberg spec and Spark-
+    or Java-written tables do, or the ``days`` this package wrote
+    before, takes an append and prunes under ``partition_filter``."""
+    import copy
+    import datetime
+
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "t")
+    # one row per UTC day from 2024-01-01, one file per day
+    df = spark.range(0, 4, 1, 2).selectExpr("id AS k", "timestamp_seconds(1704067200 + id * 86400) AS ts")
+    t = IcebergTable.create(spark, path, df, partition_by=[("days", "ts")])
+    doc = copy.deepcopy(t.meta.raw)
+    doc["partition-specs"][0]["fields"][0]["transform"] = spec_name
+    t._write_metadata(doc)
+    IcebergTable(spark, path).append(df.selectExpr("k + 4 AS k", "ts + INTERVAL 4 DAYS AS ts"))
+    t = IcebergTable(spark, path)
+    assert sorted(r.k for r in t.scan().collect()) == list(range(8))
+    day = {"ts": datetime.datetime(2024, 1, 3)}
+    assert len(t.scan(mode="list_files", partition_filter=day).collect()) == 1
+    assert [r.k for r in t.scan(partition_filter=day).collect()] == [2]
+    assert len(t.scan(mode="list_files").collect()) == 8
+
+
 def test_bucket_partition(spark, tmp_path, events):
     t = _mk(spark, tmp_path, events, [("bucket", 8, "user_id")])
     assert t.scan().count() == events.count()

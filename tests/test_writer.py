@@ -1107,13 +1107,20 @@ def test_row_level_commits_on_table_without_data_files(spark, tmp_path, format_v
     assert sorted(map(tuple, t.scan().collect())) == [(1, "a"), (2, "b")]
 
 
+def _leaf_classes(df):
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
 def test_merge_one_data_write_and_raw_target_uri(spark, tmp_path, monkeypatch):
     """A merge with update and insert makes two parquet writes, one of
     position deletes and one of data files holding both the updated
     and the inserted rows. The matched frame it hands to the
     position-delete write keeps Spark's raw file URI: its plan runs no
     URL decode or regex, which only the deleted rows pay inside the
-    write."""
+    write. The data write of an update_where, of an update-and-insert
+    merge and of a delete-and-insert merge reads the target rows the
+    position-delete write cached, and scans no parquet file."""
     from duckdb_iceberg_spark import IcebergTable
 
     path = str(tmp_path / "t")
@@ -1122,7 +1129,7 @@ def test_merge_one_data_write_and_raw_target_uri(spark, tmp_path, monkeypatch):
     write_files, write_deletes = IcebergTable._write_parquet_files, IcebergTable._write_position_deletes
 
     def spy_files(self, df, *args, **kwargs):
-        writes.append(df)
+        writes.append(_leaf_classes(df))  # planned while the cache is live
         return write_files(self, df, *args, **kwargs)
 
     def spy_deletes(self, matched):
@@ -1141,6 +1148,61 @@ def test_merge_one_data_write_and_raw_target_uri(spark, tmp_path, monkeypatch):
     assert len(writes) == 2
     got = dict(map(tuple, IcebergTable(spark, path).scan().collect()))
     assert got == {**{k: str(k) for k in range(50)}, 3: "x", 4: "y", 77: "z"}
+    data_writes = [writes[1]]
+    gone = spark.createDataFrame([(5, "-"), (5, "-"), (78, "w")], "k long, v string")
+    for op in (
+        lambda t: t.update_where("k < 3", {"v": "'u'"}),
+        lambda t: t.merge(gone, on="k", when_matched_delete=True),
+    ):
+        writes.clear()
+        op(IcebergTable(spark, path))
+        assert len(writes) == 2
+        data_writes.append(writes[1])
+    for leaves in data_writes:
+        assert "FileSourceScanExec" not in leaves and "InMemoryTableScanExec" in leaves, leaves
+    got = dict(map(tuple, IcebergTable(spark, path).scan().collect()))
+    assert got == {**{k: str(k) for k in range(50) if k != 5}, 0: "u", 1: "u", 2: "u", 3: "x", 4: "y", 77: "z", 78: "w"}
+
+
+@pytest.mark.parametrize("format_version", [2, 3])
+def test_merge_duplicate_match_raises_and_commits_nothing(spark, tmp_path, format_version):
+    """Under when_matched_update, a target row matched by two source
+    rows raises SQL MERGE's cardinality error. Nothing is committed: the
+    metadata version, the snapshots and the files under data/ are
+    unchanged, and the failed write leaves no staging directory."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(
+        spark, path, spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), format_version=format_version
+    )
+
+    def state(t):
+        files = {os.path.join(r, n) for r, _d, names in os.walk(os.path.join(path, "data")) for n in names}
+        return t.meta.metadata_path, [s.snapshot_id for s in t.meta.snapshots], files
+
+    before = state(t)
+    src = spark.createDataFrame([(1, "x"), (1, "y"), (3, "z")], "k long, v string")
+    with pytest.raises(Exception, match="(?s)MERGE.*cardinality"):
+        t.merge(src, on="k", when_matched_update={"v": "src.v"})
+    assert state(IcebergTable(spark, path)) == before
+    assert sorted(os.listdir(path)) == ["data", "metadata"]
+
+
+@pytest.mark.parametrize("format_version", [2, 3])
+def test_merge_null_key_is_inserted_not_matched(spark, tmp_path, format_version):
+    """Keys match with ``=``, as in SQL MERGE: a NULL-key source row
+    matches no target row, not even a NULL-key one, and is inserted."""
+    from duckdb_iceberg_spark import IcebergTable
+
+    path = str(tmp_path / "t")
+    t = IcebergTable.create(
+        spark, path, spark.createDataFrame([(None, "t0"), (1, "t1")], "k long, v string"),
+        format_version=format_version,
+    )
+    t.merge(spark.createDataFrame([(None, "s0"), (1, "s1")], "k long, v string"), on="k", when_matched_update={"v": "src.v"})
+    rows = sorted(map(tuple, IcebergTable(spark, path).scan().collect()), key=str)
+    assert rows == [(1, "s1"), (None, "s0"), (None, "t0")]
 
 
 def test_sql_delete_prunes_target_files(spark, tmp_path, caplog):
