@@ -9,6 +9,8 @@ We use them for file-level pruning, an intentional improvement.
 
 from __future__ import annotations
 
+import bisect
+import re
 from dataclasses import dataclass, field
 from enum import IntEnum
 from typing import Optional
@@ -196,25 +198,98 @@ class IcebergTableScan:
         return sum(e.record_count for e in self.positional_delete_files())
 
 
-# LRU over resolved manifest walks. Sound because Iceberg metadata is
-# immutable by spec: every commit writes a NEW manifest-list file, so
-# (path, size, mtime) identifies its full transitive content forever.
-# Callers must treat the shared ManifestEntry objects as read-only
+def stored_path(path: str) -> str:
+    """A data file's path as a manifest or a delete row stores it, with a
+    leading ``file:/+`` made ``/``: the form delete rows match in."""
+    return re.sub(r"^file:/+", "/", path)
+
+
+def _seq(e: ManifestEntry) -> int:
+    return e.sequence_number or 0
+
+
+class DeleteFileIndex:
+    """Which delete files apply to which data file, decided here only, as
+    Iceberg Java's ``DeleteFileIndex`` does after the spec's scan
+    planning (https://iceberg.apache.org/spec/#scan-planning): a
+    position-delete file or deletion vector (DV) applies to a data file
+    of at most its sequence number, and only to its
+    ``referenced_data_file`` (a DV must name one) or, else, to the
+    stored paths within its ``file_path`` bounds; an equality-delete
+    file applies to a data file of a strictly smaller sequence number.
+    The spec's partition condition is not applied: this writer records
+    its delete files with a null partition.
+
+    Built from a snapshot's manifest entries, live ones only. A DV
+    without ``content_size_in_bytes`` or ``referenced_data_file`` raises."""
+
+    def __init__(self, entries):
+        self._positional = []  # (entry, referenced data file, stored-path bounds or None)
+        self._equality = []
+        for e in entries:
+            if e.status == EntryStatus.DELETED or e.content == FileContent.DATA:
+                continue
+            if e.content == FileContent.EQUALITY_DELETES:
+                self._equality.append(e)
+                continue
+            if e.content_offset is not None and not (e.content_size and e.referenced_data_file):
+                raise ValueError(
+                    f"deletion vector entry for {e.referenced_data_file!r} ({e.file_path}) "
+                    "has no content_size_in_bytes or referenced_data_file"
+                )
+            bounds = [b.get(2147483546) for b in (e.lower_bounds, e.upper_bounds)]  # of file_path
+            bounds = None if None in bounds else [stored_path(v.decode()) for v in bounds]
+            self._positional.append((e, e.referenced_data_file, bounds))
+
+    @staticmethod
+    def equality_applies(data_seq, delete_seq):
+        """The sequence rule of equality deletes, on ints or Spark Columns."""
+        return data_seq < delete_seq
+
+    def for_file(self, data: ManifestEntry) -> tuple[list, list, list]:
+        """(position-delete files, DVs, equality-delete files) that apply
+        to ``data``, each in manifest order."""
+        return self.for_files([data])
+
+    def for_files(self, data_entries) -> tuple[list, list, list]:
+        """The union of `for_file` over the list ``data_entries``, each
+        delete file once, in manifest order. No work per (data file,
+        delete file) pair: each delete file meets the smallest sequence
+        number of the files it can name, found by a lookup of its
+        referenced file, a bisection of the sorted stored paths, or else
+        over all the files."""
+        seqs = {e.file_path: _seq(e) for e in data_entries}
+        if not seqs:
+            return [], [], []
+        bounded = any(b is not None for _, _, b in self._positional)
+        ranked = sorted((stored_path(e.raw_file_path or e.file_path), _seq(e)) for e in data_entries) if bounded else []
+        paths = [p for p, _ in ranked]
+        low = min(seqs.values())
+
+        def lowest(ref, bounds):
+            if ref:
+                return seqs.get(ref)
+            if bounds is None:
+                return low
+            i, j = bisect.bisect_left(paths, bounds[0]), bisect.bisect_right(paths, bounds[1])
+            return min((s for _, s in ranked[i:j]), default=None)
+
+        found = [d for d, ref, bounds in self._positional if (s := lowest(ref, bounds)) is not None and s <= _seq(d)]
+        return (
+            [d for d in found if d.content_offset is None],
+            [d for d in found if d.content_offset is not None],
+            [d for d in self._equality if self.equality_applies(low, _seq(d))],
+        )
+
+
+# LRU over resolved manifest walks, keyed on (manifest-list path, table
+# root, moved flag): sound on every filesystem because the spec makes a
+# manifest list immutable and writers give each a unique name. Callers
+# must treat the shared ManifestEntry objects as read-only
 # (load_table_scan performs the one rebase mutation BEFORE caching).
-# Bounded: ~thousands of entries per walk is metadata-sized; 64 walks
-# cover a session's working set of (table, snapshot) pairs.
+# Bounded: 64 walks cover a session's working set of (table, snapshot).
 _SCAN_CACHE: dict = {}
 _SCAN_CACHE_MAX = 64
-
-
-def _stat_key(path: str):
-    import os
-
-    try:
-        st = os.stat(path)
-        return (path, st.st_size, st.st_mtime_ns)
-    except OSError:
-        return None
 
 
 def load_table_scan(
@@ -234,13 +309,11 @@ def load_table_scan(
     Avro decode once per process, the way a long-lived engine caches
     its metastore."""
     ml_path = rebase_path(snapshot.manifest_list, table_path, allow_moved_paths)
-    ck = _stat_key(ml_path)
-    if ck is not None:
-        ck = (ck, table_path, allow_moved_paths)
-        hit = _SCAN_CACHE.pop(ck, None)
-        if hit is not None:
-            _SCAN_CACHE[ck] = hit  # re-insert: LRU recency
-            return IcebergTableScan(snapshot=snapshot, manifests=hit)
+    ck = (ml_path, table_path, allow_moved_paths)
+    hit = _SCAN_CACHE.pop(ck, None)
+    if hit is not None:
+        _SCAN_CACHE[ck] = hit  # re-insert: LRU recency
+        return IcebergTableScan(snapshot=snapshot, manifests=hit)
     manifests = read_manifest_list(ml_path, metadata.format_version)
 
     def _one(mf):
@@ -262,8 +335,7 @@ def load_table_scan(
 
         with ThreadPoolExecutor(max_workers=min(16, len(manifests))) as pool:
             loaded = list(pool.map(_one, manifests))
-    if ck is not None:
-        _SCAN_CACHE[ck] = loaded
-        while len(_SCAN_CACHE) > _SCAN_CACHE_MAX:
-            _SCAN_CACHE.pop(next(iter(_SCAN_CACHE)))
+    _SCAN_CACHE[ck] = loaded
+    while len(_SCAN_CACHE) > _SCAN_CACHE_MAX:
+        _SCAN_CACHE.pop(next(iter(_SCAN_CACHE)))
     return IcebergTableScan(snapshot=snapshot, manifests=loaded)

@@ -23,14 +23,14 @@ Semantics parity with the default path:
   (then ``initial-default`` coalescing applies in iceberg_scan);
 - physical type changes (INT -> BIGINT widening) cast per file to the
   current schema's arrow type;
-- positional deletes apply per file, sequence-scoped (a delete file
-  only affects data files with sequence <= the delete's), matched by
-  normalized path or filename tail under ``allow_moved_paths``;
-- equality deletes apply per file, sequence-scoped like the default
-  path (a delete only affects data files with sequence STRICTLY
-  smaller, matching ``_apply_equality_deletes``): each applicable
-  delete file's key columns are read in-reader and matching rows are
-  masked out with null-safe tuple equality.
+- each file lists the delete files ``DeleteFileIndex.for_file`` finds
+  for it (plans/manifests.py, the rule the default path reads too);
+- positional deletes and deletion vectors apply in-reader: a delete
+  row matches when its ``file_path`` equals the file's path as the
+  manifest stores it, moved table or not;
+- equality deletes apply in-reader: each applicable delete file's key
+  columns are read and matching rows are masked out with null-safe
+  tuple equality.
 
 The plan JSON rides in a data source option — O(#files) strings.
 Fine for the thousands-of-files regime; beyond that use the default
@@ -40,34 +40,27 @@ Fine for the thousands-of-files regime; beyond that use the default
 from __future__ import annotations
 
 import json
-import re
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-
-def _norm(p: str) -> str:
-    return re.sub(r"^file:/+", "/", p)
-
-
-def _tail(p: str) -> str:
-    return p.rsplit("/", 1)[-1]
+from ..plans.manifests import stored_path
 
 
 class _ArrowSlice(InputPartition):
-    """One data file: (path, [(field_id, name, spark_type_json)],
-    applicable positional-delete paths, applicable equality deletes
-    ([{path, cols}]), v3 deletion vectors ([[puffin, off, size]]),
-    moved-path flag, S3 conf)."""
+    """One data file: (path to read, path as the manifest stores it,
+    [(field_id, name, spark_type_json)], applicable positional-delete
+    paths, applicable equality deletes ([{path, cols}]), v3 deletion
+    vectors ([[puffin, off, size]]), S3 conf)."""
 
-    def __init__(self, path, fields, deletes, eq_deletes, dvs, moved, fs_conf):
+    def __init__(self, path, stored, fields, deletes, eq_deletes, dvs, fs_conf):
         self.path = path
+        self.stored = stored
         self.fields = fields
         self.deletes = deletes
         self.eq_deletes = eq_deletes
         self.dvs = dvs
-        self.moved = moved
         self.fs_conf = fs_conf
 
 
@@ -196,19 +189,18 @@ def _read_variant_fallback(partition: _ArrowSlice, apath: str, afs):
 
 def _delete_positions(partition: _ArrowSlice) -> set:
     """Row positions deleted from this file by its applicable
-    positional-delete files."""
+    positional-delete files: rows naming its stored path."""
     import pyarrow.parquet as pq
 
     from ..plans.fs import arrow_fs_path
 
-    key = _tail(partition.path) if partition.moved else _norm(partition.path)
+    key = stored_path(partition.stored)
     drop: set = set()
     for dp in partition.deletes:
         afs, ap = arrow_fs_path(dp, partition.fs_conf)
         dt = pq.read_table(ap, columns=["file_path", "pos"], filesystem=afs)
         for fp, pos in zip(dt.column("file_path").to_pylist(), dt.column("pos").to_pylist()):
-            m = _tail(fp) if partition.moved else _norm(fp)
-            if m == key:
+            if stored_path(fp) == key:
                 drop.add(pos)
     return drop
 
@@ -265,15 +257,7 @@ class _IcebergArrowReader(DataSourceReader):
         p = self.plan
         fields = [tuple(x) for x in p["fields"]]
         return [
-            _ArrowSlice(
-                f["path"],
-                fields,
-                f.get("deletes") or [],
-                f.get("eq") or [],
-                f.get("dvs") or [],
-                p["moved"],
-                p.get("fs_conf"),
-            )
+            _ArrowSlice(f["path"], f["stored"], fields, f["deletes"], f["eq"], f["dvs"], p.get("fs_conf"))
             for f in p["files"]
         ]
 
@@ -325,35 +309,35 @@ class IcebergArrowDataSource(DataSource):
         return _IcebergArrowReader(plan)
 
 
-def arrow_scan_df(
-    spark: SparkSession,
-    schema,
-    data_entries,
-    pos_entries,
-    allow_moved_paths: bool,
-    name_mapping: dict | None = None,
-    eq_entries=None,
-    dv_entries=None,
-):
+def arrow_scan_df(spark: SparkSession, schema, data_entries, deletes, name_mapping: dict | None = None):
     """DataFrame over the resolved scan plan, read through pyarrow.
 
-    ``schema`` is the snapshot's IcebergSchema; ``data_entries`` /
-    ``pos_entries`` / ``eq_entries`` / ``dv_entries`` are the pruned
-    ManifestEntry lists (equality deletes carry ``equality_ids``; v3
-    deletion vectors carry referenced_data_file + content
-    offset/size); ``name_mapping`` is the parsed
-    schema.name-mapping.default ({field_id: [names]}) for id-less
+    ``schema`` is the snapshot's IcebergSchema; ``data_entries`` the
+    pruned data-file ManifestEntry list; ``deletes`` the snapshot's
+    `DeleteFileIndex`, which lists each file's position-delete files,
+    deletion vectors and equality-delete files; ``name_mapping`` is the
+    parsed schema.name-mapping.default ({field_id: [names]}) for id-less
     imported files."""
     from ..plans.fs import s3_env_conf, scheme_of
 
-    eq_entries = eq_entries or []
-    dv_entries = dv_entries or []
-    paths = (
-        [e.file_path for e in data_entries]
-        + [e.file_path for e in pos_entries]
-        + [e.file_path for e in eq_entries]
-        + [e.file_path for e in dv_entries]
-    )
+    id_to_name = {c.field_id: c.name for c in schema.columns}
+    files, paths = [], []
+    for e in data_entries:
+        pos, dvs, eqs = deletes.for_file(e)
+        paths += [d.file_path for d in [e, *pos, *dvs, *eqs]]
+        eq = [
+            {"path": d.file_path, "cols": [id_to_name[i] for i in (d.equality_ids or []) if i in id_to_name]}
+            for d in eqs
+        ]
+        files.append(
+            {
+                "path": e.file_path,
+                "stored": e.raw_file_path or e.file_path,
+                "deletes": [d.file_path for d in pos],
+                "eq": [x for x in eq if x["cols"]],
+                "dvs": [[d.file_path, int(d.content_offset), int(d.content_size)] for d in dvs],
+            }
+        )
     fs_conf = (
         s3_env_conf() if any(scheme_of(p) in ("s3", "s3a") for p in paths) else None
     )
@@ -366,46 +350,6 @@ def arrow_scan_df(
             val = fs_conf.pop(key, None)
             if val:
                 creds[key] = val
-    id_to_name = {c.field_id: c.name for c in schema.columns}
-    # v3 DVs keyed by their referenced data file (tail-matched when
-    # moved paths are in play, same rule as positional deletes)
-    dv_by_ref: dict = {}
-    for d in dv_entries:
-        if not d.content_size:
-            raise ValueError(
-                "deletion vector entry for "
-                f"{d.referenced_data_file!r} ({d.file_path}) has no "
-                "content_size_in_bytes"
-            )
-        ref = d.referenced_data_file or ""
-        key = _tail(ref) if allow_moved_paths else _norm(ref)
-        dv_by_ref.setdefault(key, []).append(
-            [d.file_path, int(d.content_offset), int(d.content_size)]
-        )
-    files = []
-    for e in data_entries:
-        seq = e.sequence_number or 0
-        dels = [d.file_path for d in pos_entries if (d.sequence_number or 0) >= seq]
-        # equality deletes scope STRICTLY after the data file's
-        # sequence — same rule as the default path's
-        # _apply_equality_deletes (sources/iceberg.py)
-        eqs = [
-            {
-                "path": d.file_path,
-                "cols": [id_to_name[i] for i in (d.equality_ids or []) if i in id_to_name],
-            }
-            for d in eq_entries
-            if (d.sequence_number or 0) > seq and (d.equality_ids or [])
-        ]
-        fkey = _tail(e.file_path) if allow_moved_paths else _norm(e.file_path)
-        files.append(
-            {
-                "path": e.file_path,
-                "deletes": dels,
-                "eq": [x for x in eqs if x["cols"]],
-                "dvs": dv_by_ref.get(fkey) or [],
-            }
-        )
     st = schema.to_struct_type()
     plan = {
         "schema": json.loads(st.json()),
@@ -414,7 +358,6 @@ def arrow_scan_df(
             for c, f in zip(schema.columns, st.fields)
         ],
         "files": files,
-        "moved": bool(allow_moved_paths),
         "fs_conf": fs_conf,
     }
     spark.dataSource.register(IcebergArrowDataSource)

@@ -18,8 +18,9 @@ as a broadcast ANTI join keyed on (`_metadata.file_path`,
 ``filename``/``file_row_number`` virtual columns the reference uses
 (iceberg_scan.cpp:177-182), compared as Spark reports them, as the
 reference compares ``filename``. The small side is translated instead:
-delete files name data files by raw path, and `_DataFileUris` turns
-those into the URIs Spark reports, from URIs recorded once per file.
+delete files name data files by the path the manifests store, and
+`_DataFileUris` turns those into the URIs Spark reports, from URIs
+recorded once per file.
 
 Scale notes (100 TB design):
 - Manifest metadata is KB-MB scale even for huge tables; driver-side
@@ -37,11 +38,14 @@ Scale notes (100 TB design):
   recorded once per SparkContext beside its qualified path (3 py4j
   round trips the first time it is needed, none after). The delete
   side, the equality-delete sequence lookup and the row-lineage map are
-  keyed by it on the driver. Position-delete rows are translated with
-  one prefix plus a literal map of the files whose URI percent-encodes
-  their path, so plan size is O(such files): zero on an ordinary
-  table. Only moved-path tables decode per row, for the reference's
-  file-name match.
+  keyed by it on the driver. Position-delete rows name data files by
+  stored path and are translated with one (stored prefix, URI prefix)
+  pair plus a literal map of the files whose own names Spark
+  percent-encodes, so plan size is O(such files): zero on an ordinary
+  or a moved table.
+- Only the delete files that apply to some scanned data file are read:
+  `plans.manifests.DeleteFileIndex` is the one place that decides
+  which apply, for this path, the arrow path and the changelog.
 - One task per parquet file is NOT required: `_metadata.row_index` is
   split-safe (computed by the reader per file), unlike
   monotonically_increasing_id tricks.
@@ -67,7 +71,6 @@ import json
 import logging
 import math
 import os
-import re
 import struct
 import threading
 from collections import Counter, OrderedDict
@@ -82,10 +85,12 @@ from pyspark.sql import types as T
 
 from ..plans.bounds import _EPOCH_DATE, _EPOCH_TS, range_implied, range_overlaps
 from ..plans.manifests import (
+    DeleteFileIndex,
     EntryStatus,
     FileContent,
     ManifestContent,
     load_table_scan,
+    stored_path,
 )
 from ..plans.table_metadata import (
     DEFAULT_TABLE_VERSION_FORMAT,
@@ -150,66 +155,62 @@ def _decode_file_uri(col):
     percent-encoded (a dir literally named ``p_brand=Brand%2333``, as
     Java writers emit for partition value ``Brand#33``, is reported as
     ``...Brand%252333...``), while manifest/delete-file paths are raw
-    filesystem paths. Deletes, equality-delete sequence numbers and row
-    lineage do not decode: they meet the data on the URI as reported
-    (`_DataFileUris`). ``_keep_position_columns`` exposes ``__file`` as
-    reported, too: the writer decodes it only on the deleted rows its
-    position-delete files name. Apart from that, only the moved-path
-    tail match decodes. A literal ``+`` is valid raw in a URI path segment
-    and must NOT become a space, so escape it before url_decode."""
+    filesystem paths. Only the writer decodes, on the deleted rows its
+    position-delete files name; reads meet the data on the URI as
+    reported (`_DataFileUris`). A literal ``+`` is valid raw in a URI
+    path segment and must NOT become a space, so escape it before
+    url_decode."""
     return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
 
 
 class _DataFileUris(NamedTuple):
-    """How a raw data-file path on the delete side names the URI Spark
-    reports as ``_metadata.file_path`` for that file, so the data side
+    """How a data file's stored path, as delete rows name it, becomes the
+    URI Spark reports as its ``_metadata.file_path``, so the data side
     probes with ``_metadata.file_path`` untouched.
 
-    A path ``p`` names ``exceptions.get(n, prefix + n)``, where ``n`` is
-    ``p`` with a leading ``file:/+`` made ``/`` (`_norm_path`).
-    ``prefix`` turns most scanned files' normalized paths into their
-    URIs: ``file:`` locally, empty on object stores. ``exceptions``
-    holds only the files it does not, whose paths have characters Spark
-    percent-encodes (a space, ``#``, ``%``), so it is empty on an
-    ordinary table. For each of them it also maps the path ``prefix``
-    would turn into that file's URI to ``""``, which no file reports:
-    a delete naming a file outside the scan never matches a scanned
-    one."""
+    A path ``n`` (`_norm_path`ed) names ``exceptions.get(n, prefix +
+    n[len(stored):])`` if it starts with ``stored``, else no file.
+    (``stored``, ``prefix``) is what most files' stored path and URI
+    keep once their longest common suffix is cut: ``("", "file:")``
+    locally, the old and the new root of a moved table, the raw and the
+    encoded form of a root Spark percent-encodes. ``exceptions`` holds
+    only the files whose own names Spark percent-encodes (a space,
+    ``#``, ``%``), and maps the path the pair would turn into each of
+    their URIs to ``""``, which no file reports."""
 
+    stored: str
     prefix: str
     exceptions: dict
 
     @classmethod
     def of(cls, uris: dict) -> "_DataFileUris":
-        """From manifest path -> URI of every scanned data file."""
-        norm = {re.sub(_FILE_SCHEME, "/", p): u for p, u in uris.items()}
-        counts = Counter(u[: len(u) - len(n)] for n, u in norm.items() if u.endswith(n))
-        prefix = counts.most_common(1)[0][0] if counts else ""
-        exceptions = {n: u for n, u in norm.items() if u != prefix + n}
-        for u in list(exceptions.values()):
-            if u.startswith(prefix) and u[len(prefix):] not in norm:
-                exceptions.setdefault(u[len(prefix):], "")
-        return cls(prefix, exceptions)
+        """From stored path -> URI of every scanned data file."""
+        norm = {stored_path(p): u for p, u in uris.items()}
 
-    def uri(self, path: str) -> str:
-        n = re.sub(_FILE_SCHEME, "/", path)
-        return self.exceptions.get(n, self.prefix + n)
+        def pair(n, u):
+            k = len(os.path.commonprefix([n[::-1], u[::-1]]))
+            return n[: len(n) - k], u[: len(u) - k]
+
+        counts = Counter(pair(n, u) for n, u in norm.items())
+        stored, prefix = counts.most_common(1)[0][0] if counts else ("", "")
+        exceptions = {
+            n: u for n, u in norm.items() if not n.startswith(stored) or prefix + n[len(stored):] != u
+        }
+        for u in list(exceptions.values()):
+            if u.startswith(prefix) and stored + u[len(prefix):] not in norm:
+                exceptions.setdefault(stored + u[len(prefix):], "")
+        return cls(stored, prefix, exceptions)
 
     def column(self, col):
-        """`uri` as a Column expression over a raw path column."""
+        """The URI a raw path column names, as a Column."""
         n = _norm_path(col)
-        key = F.concat(F.lit(self.prefix), n)
+        rel = F.when(n.startswith(self.stored), F.substring(n, len(self.stored) + 1, 1 << 30)) if self.stored else n
+        key = F.concat(F.lit(self.prefix), rel)
         if self.exceptions:
             ks, vs = zip(*self.exceptions.items())
             lookup = F.map_from_arrays(F.array(*map(F.lit, ks)), F.array(*map(F.lit, vs)))
             key = F.coalesce(F.element_at(lookup, n), key)
         return key
-
-
-def _tail(col):
-    """Last '/'-segment — the reference's moved-path filename match
-    (iceberg_scan.cpp:39-62, string_split + list_extract(-1))."""
-    return F.substring_index(col, "/", -1)
 
 
 @functools.lru_cache(maxsize=None)
@@ -616,21 +617,17 @@ def iceberg_scan(
     orc_data = [e.file_path for e in data_entries if _fmt(e) == "ORC"]
     avro_data = [e.file_path for e in data_entries if _fmt(e) == "AVRO"]
     parquet_entries = [e for e in data_entries if _fmt(e) == "PARQUET"]
-    pos_entries = scan.positional_delete_files()
-    # v3 deletion vectors: content=1 entries whose bytes live at an
-    # offset inside a Puffin file (content_offset discriminates them
-    # from classic positional-delete parquet)
-    dv_entries = [e for e in pos_entries if e.content_offset is not None]
-    pos_delete_entries = [e for e in pos_entries if e.content_offset is None]
-    eq_deletes = scan.equality_delete_files()
 
     if mode == "list_files":
-        dv_files = list(dict.fromkeys(e.file_path for e in dv_entries))
+        # every live delete file of the snapshot, as the reference lists
+        # them; v3 deletion vectors (content_offset set) share one Puffin
+        pos_entries = scan.positional_delete_files()
+        dv_files = list(dict.fromkeys(e.file_path for e in pos_entries if e.content_offset is not None))
         rows = [(e.file_path, "data") for e in data_entries] + [
             (f, "delete")
-            for f in [e.file_path for e in pos_delete_entries]
+            for f in [e.file_path for e in pos_entries if e.content_offset is None]
             + dv_files
-            + [e.file_path for e in eq_deletes]
+            + [e.file_path for e in scan.equality_delete_files()]
         ]
         return _local_df(spark, rows, "file string, type string")
 
@@ -640,6 +637,7 @@ def iceberg_scan(
             st = st.add("__file", T.StringType()).add("__pos", T.LongType())
         return _local_df(spark, [], st)
 
+    deletes = DeleteFileIndex(scan.entries)
     if io == "arrow":
         if orc_data or avro_data:
             raise ValueError(
@@ -661,16 +659,7 @@ def iceberg_scan(
         mapping = (
             {e["field-id"]: e.get("names", []) for e in json.loads(nm)} if nm else None
         )
-        df = arrow_scan_df(
-            spark,
-            schema,
-            data_entries,
-            pos_delete_entries,
-            allow_moved_paths,
-            name_mapping=mapping,
-            eq_entries=eq_deletes,
-            dv_entries=dv_entries,
-        )
+        df = arrow_scan_df(spark, schema, data_entries, deletes, mapping)
         return _finish_rows(df, schema, time_as_string, None if where_proven else where)
 
     # Field-id based column resolution (the reference pushes a
@@ -681,6 +670,7 @@ def iceberg_scan(
     # scan() call is a global side effect on concurrent queries).
     if spark.conf.get("spark.sql.parquet.fieldId.read.enabled", "false") != "true":
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    pos_delete_entries, dv_entries, eq_deletes = deletes.for_files(data_entries)
     want_pos = bool(
         pos_delete_entries or dv_entries or eq_deletes or _keep_position_columns or row_lineage
     )
@@ -755,8 +745,6 @@ def iceberg_scan(
     # sequence numbers and lineage are keyed by that URI on the driver:
     # no data row runs a string function to meet them. The reference
     # compares DuckDB's ``filename`` as is, too (iceberg_scan.cpp:177-182).
-    # Moved-path tables keep the reference's per-row file-name match on
-    # the decoded path.
     uris = _file_uris(spark, [e for e in data_entries if _fmt(e) != "ORC"]) if want_pos else None
     if avro_data:
         if skip_schema_inference:
@@ -765,34 +753,29 @@ def iceberg_scan(
         df = part if df is None else df.unionByName(part)
 
     if pos_delete_entries or dv_entries:
-        keys = None if allow_moved_paths else _DataFileUris.of(uris)
+        # delete rows name data files by stored path, in place or moved
+        keys = _DataFileUris.of({e.raw_file_path or e.file_path: uris[e.file_path] for e in data_entries})
         parts = []
         if pos_delete_entries:
             d = _parquet_relation(spark, pos_delete_entries, _DELETE_SCHEMA)
-            if keys is not None:
-                d = d.select(keys.column(d["file_path"]).alias("file_path"), "pos")
-            parts.append(d)
+            parts.append(d.select(keys.column(d["file_path"]).alias("file_path"), "pos"))
         if dv_entries:
             # v3 deletion vectors decode executor-side into the SAME
             # (file_path, pos) shape, so both delete kinds share one
             # anti-join
-            parts.append(_dv_deletes_df(spark, dv_entries, None if keys is None else keys.uri))
-        deletes = parts[0]
+            parts.append(_dv_deletes_df(spark, dv_entries, uris.get))
+        dels = parts[0]
         for p in parts[1:]:
-            deletes = deletes.unionByName(p)
-        if keys is None:
-            file_cond = _tail(_decode_file_uri(df["__file"])) == _tail(deletes["file_path"])
-        else:
-            file_cond = df["__file"] == deletes["file_path"]
+            dels = dels.unionByName(p)
         # Deletes are small relative to data (manifest record_count sums
         # prove it — same stats the reference injects as cardinality);
         # broadcast -> shuffle-free anti join.
-        deleted_rows = scan.delete_cardinality()
+        deleted_rows = sum(e.record_count for e in pos_delete_entries + dv_entries)
         broadcast = deleted_rows < 50_000_000
         if broadcast:
-            deletes = F.broadcast(deletes)
-        df = df.join(deletes, file_cond & (df["__pos"] == deletes["pos"]), "left_anti")
-        n_exceptions = 0 if keys is None else len(keys.exceptions)
+            dels = F.broadcast(dels)
+        df = df.join(dels, (df["__file"] == dels["file_path"]) & (df["__pos"] == dels["pos"]), "left_anti")
+        n_exceptions = len(keys.exceptions)
         _log.debug(
             "delete application: %d data files, %d position-delete files, %d deletion "
             "vectors, %d deleted rows, %d URI exceptions, %s",
@@ -809,30 +792,17 @@ def iceberg_scan(
         )
 
     if eq_deletes:
-        df = _apply_equality_deletes(
-            spark, df, data_entries, eq_deletes, schema, None if allow_moved_paths else uris
-        )
+        df = _apply_equality_deletes(spark, df, data_entries, eq_deletes, schema, uris)
 
     if row_lineage:
         # inherit _row_id / _last_updated_sequence_number from a
         # broadcast (file -> first_row_id, seq) map: O(#files) driver
         # rows, zero shuffle — matches how every v3 reader assigns
         # lineage at scan time
-        lrows = [
-            (
-                e.file_path if allow_moved_paths else uris[e.file_path],
-                e.first_row_id if e.first_row_id is not None else None,
-                int(e.sequence_number or 0),
-            )
-            for e in data_entries
-        ]
+        lrows = [(uris[e.file_path], e.first_row_id, int(e.sequence_number or 0)) for e in data_entries]
         ldf = _local_df(spark, lrows, "lfile string, lfirst long, lseq long")
-        if allow_moved_paths:
-            lcond = _tail(_decode_file_uri(df["__file"])) == _tail(ldf["lfile"])
-        else:
-            lcond = df["__file"] == ldf["lfile"]
         df = (
-            df.join(F.broadcast(ldf), lcond, "left")
+            df.join(F.broadcast(ldf), df["__file"] == ldf["lfile"], "left")
             .withColumn("_row_id", F.col("lfirst") + F.col("__pos"))
             .withColumn("_last_updated_sequence_number", F.col("lseq"))
             .drop("lfile", "lfirst", "lseq")
@@ -1207,8 +1177,9 @@ def _dv_deletes_df(spark: SparkSession, entries, file_key=None) -> DataFrame:
 
     ``file_path`` is each DV's referenced data file, as
     ``file_key(referenced_data_file)`` when given (iceberg_scan passes
-    `_DataFileUris.uri`, so the rows carry the URI the data side
-    reports).
+    its map of data-file URIs, so the rows carry the URI the data side
+    reports). ``entries`` come from a `DeleteFileIndex`, which has
+    checked that each names its blob's size.
 
     Decode happens EXECUTOR-side: the driver ships only one
     (puffin_path, offset, size, referenced_file) row per DV — one task
@@ -1228,15 +1199,6 @@ def _dv_deletes_df(spark: SparkSession, entries, file_key=None) -> DataFrame:
     """
     from ..plans.fs import s3_env_conf, scheme_of
 
-    for e in entries:
-        # plan-time validation: a malformed entry fails HERE with the
-        # table context, not as an opaque unpack error inside a task
-        if not e.content_size:
-            raise ValueError(
-                "deletion vector entry for "
-                f"{e.referenced_data_file!r} ({e.file_path}) has no "
-                "content_size_in_bytes"
-            )
     rows = [
         (
             e.file_path,
@@ -1283,7 +1245,7 @@ def _apply_equality_deletes(
     data_entries: list,
     eq_entries: list,
     schema: IcebergSchema,
-    uris: Optional[dict],
+    uris: dict,
 ) -> DataFrame:
     """Equality deletes: anti-join on the delete file's equality_ids
     columns, scoped so a delete only applies to rows from data files
@@ -1304,22 +1266,15 @@ def _apply_equality_deletes(
     is size-gated on the manifests' recorded file sizes; an oversized
     group falls back to a shuffled null-safe-equi anti-join.
 
-    ``uris`` maps each data file's manifest path to the URI ``__file``
-    carries for it, so the data rows meet the sequence-number lookup
-    on ``__file`` untouched; ``None`` (moved-path tables) matches the
-    decoded path's file name instead."""
+    ``eq_entries`` are the files `DeleteFileIndex.for_files` keeps, and
+    each row applies the index's sequence rule. ``uris`` maps each data
+    file's manifest path to the URI ``__file`` carries for it, so the
+    data rows meet the sequence-number lookup on ``__file`` untouched."""
     id_to_name = {c.field_id: c.name for c in schema.columns}
     # data-file -> sequence number lookup (tiny; broadcast)
-    seq_rows = [
-        (e.file_path if uris is None else uris[e.file_path], e.sequence_number or 0)
-        for e in data_entries
-    ]
+    seq_rows = [(uris[e.file_path], e.sequence_number or 0) for e in data_entries]
     seq_df = _local_df(spark, seq_rows, "___df_path string, ___data_seq long")
-    if uris is None:
-        cond = _tail(_decode_file_uri(df["__file"])) == _tail(seq_df["___df_path"])
-    else:
-        cond = df["__file"] == seq_df["___df_path"]
-    df = df.join(F.broadcast(seq_df), cond, "left").drop("___df_path")
+    df = df.join(F.broadcast(seq_df), df["__file"] == seq_df["___df_path"], "left").drop("___df_path")
 
     from collections import defaultdict
 
@@ -1351,7 +1306,7 @@ def _apply_equality_deletes(
         for c in cols:
             clause = df[c].eqNullSafe(renamed[f"___eq_{c}"])
             cond = clause if cond is None else (cond & clause)
-        cond = cond & (df["___data_seq"] < renamed["___del_seq"])
+        cond = cond & DeleteFileIndex.equality_applies(df["___data_seq"], renamed["___del_seq"])
         df = df.join(renamed, cond, "left_anti")
     return df.drop("___data_seq")
 

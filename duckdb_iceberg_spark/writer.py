@@ -452,6 +452,32 @@ def _new_snapshot_id() -> int:
     return uuid.uuid4().int >> 65  # 63-bit positive
 
 
+def _unreadable_columns(schema: IcebergSchema, md) -> list[str]:
+    """``name: file type vs table type`` for each table column a parquet
+    footer ``md`` stores as a type the table cannot read it as, as
+    pyiceberg's ``add_files`` checks: integers and floats may widen and
+    decimals gain precision (Iceberg's type promotions), timestamps must
+    be microseconds (or Spark's INT96), nested columns are not checked."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrow = md.schema.to_arrow_schema()
+    int96 = {md.schema.column(i).path for i in range(md.num_columns) if md.schema.column(i).physical_type == "INT96"}
+    bad = []
+    for c in schema.columns:
+        ft = arrow.field(c.name).type if c.name in arrow.names else None
+        ft, tt = {pa.large_string(): pa.string(), pa.large_binary(): pa.binary()}.get(ft, ft), to_arrow_type(c.spark_type)
+        if ft is None or ft == tt or c.name in int96 or pa.types.is_nested(tt):
+            continue
+        if not (
+            any(k(ft) and k(tt) and ft.bit_width <= tt.bit_width for k in (pa.types.is_integer, pa.types.is_floating))
+            or (pa.types.is_decimal(ft) and pa.types.is_decimal(tt) and ft.scale == tt.scale and ft.precision <= tt.precision)
+            or (pa.types.is_timestamp(ft) and pa.types.is_timestamp(tt) and ft.unit == "us")
+        ):
+            bad.append(f"{c.name}: {ft} vs {tt}")
+    return bad
+
+
 def _carried_entries(manifest: dict) -> list[dict]:
     """Entries of the manifest behind manifest-list record ``manifest``,
     with what they inherit from it made explicit. A rewritten manifest
@@ -632,15 +658,16 @@ class IcebergTable:
         manifest diff bounds the work first: a data file live in both
         snapshots and subject to the same delete files contributes
         identical rows to both sides, so it cancels from both EXCEPTs
-        and is never read. Only added/removed files (plus, when the
-        delete-file set changed, the surviving common files) are
-        scanned — O(changed data), not O(table).
+        and is never read. Only added/removed files, plus the common
+        files to which a delete file added or removed in between
+        applies (`DeleteFileIndex`), are scanned — O(changed data), not
+        O(table).
 
         Rewrite-neutrality falls out of the EXCEPT ALL: compaction
         moves rows between files without changing content, and those
         rows cancel.
         """
-        from .plans.manifests import load_table_scan
+        from .plans.manifests import DeleteFileIndex, load_table_scan
 
         old_snap = self.meta.snapshot_by_id(from_snapshot_id)
         new_snap = (
@@ -652,24 +679,20 @@ class IcebergTable:
         new_scan = load_table_scan(self.meta, new_snap, self.path, False)
         old_files = {e.file_path: e for e in old_scan.data_files()}
         new_files = {e.file_path: e for e in new_scan.data_files()}
-        # equality deletes count too: a delete_where_equality commit adds
-        # no data files and no positional deletes, yet removes live rows
-        # from common data files — the delete-set diff must see it
-        old_deletes = {e.file_path for e in old_scan.positional_delete_files()} | {
-            e.file_path for e in old_scan.equality_delete_files()
-        }
-        new_deletes = {e.file_path for e in new_scan.positional_delete_files()} | {
-            e.file_path for e in new_scan.equality_delete_files()
-        }
         cand_old = old_files.keys() - new_files.keys()
         cand_new = new_files.keys() - old_files.keys()
-        if old_deletes != new_deletes:
-            # common files' live rows may differ through new/removed
-            # delete files — pull them into the diff (still only the
-            # affected snapshot window, never the whole table)
-            common = old_files.keys() & new_files.keys()
-            cand_old |= common
-            cand_new |= common
+        # a delete file in one snapshot only (a DV is one blob of a
+        # shared Puffin file) may change a common file's live rows;
+        # a common file has one data sequence number in both
+        old_deletes, new_deletes = (
+            {(e.file_path, e.content_offset): e for e in scan.positional_delete_files() + scan.equality_delete_files()}
+            for scan in (old_scan, new_scan)
+        )
+        either = {**old_deletes, **new_deletes}
+        changed = DeleteFileIndex([either[k] for k in old_deletes.keys() ^ new_deletes.keys()])
+        touched = {p for p in old_files.keys() & new_files.keys() if any(changed.for_file(new_files[p]))}
+        cand_old |= touched
+        cand_new |= touched
         rows_old = self._scan_files(old_snap.snapshot_id, [old_files[p] for p in cand_old])
         rows_new = self._scan_files(new_snap.snapshot_id, [new_files[p] for p in cand_new])
         inserts = rows_new.exceptAll(rows_old)
@@ -787,7 +810,7 @@ class IcebergTable:
     def _write_deletion_vectors(self, dels: DataFrame) -> list[dict]:
         """v3 path of :meth:`_write_position_deletes`: ``dels`` is a
         (file_path, pos) frame holding each position once."""
-        from .plans.manifests import load_table_scan
+        from .plans.manifests import DeleteFileIndex, load_table_scan
         from .plans.puffin import write_puffin_blobs
         from .sources.iceberg import _dv_deletes_df
 
@@ -795,11 +818,7 @@ class IcebergTable:
         prior = []
         if snap is not None:
             scan = load_table_scan(self.meta, snap, self.path, False)
-            prior = [
-                e
-                for e in scan.positional_delete_files()
-                if e.content_offset is not None
-            ]
+            prior = DeleteFileIndex(scan.entries).for_files(scan.data_files())[1]
             if prior:
                 affected = dels.select("file_path").distinct()
                 dels = dels.unionByName(
@@ -1367,9 +1386,11 @@ class IcebergTable:
         the reference parses file_format but assumes PARQUET
         (src/common/iceberg.cpp), mis-reading such tables.
 
-        Files must match the table schema (verified against footer
-        column names) and the table must be unpartitioned (partition
-        values can't be derived from externally-laid-out files)."""
+        Files must match the table schema (footer column names, and for
+        parquet each column's type, `_unreadable_columns`) and the table
+        must be unpartitioned (partition values can't be derived from
+        externally-laid-out files). A file that fails raises
+        ``ValueError`` and nothing is committed."""
         import pyarrow.parquet as pq
 
         if self.partition_fields:
@@ -1400,6 +1421,9 @@ class IcebergTable:
                 md = pq.ParquetFile(ap, filesystem=afs).metadata
                 arrow_schema = md.schema.to_arrow_schema()
                 got = set(arrow_schema.names)
+                bad = _unreadable_columns(self.schema, md)
+                if bad:
+                    raise ValueError(f"File {p} stores columns the table cannot read: {'; '.join(bad)}")
                 if not any(
                     (f.metadata or {}).get(b"PARQUET:field_id") is not None
                     for f in arrow_schema

@@ -1,4 +1,5 @@
 import os
+import shutil
 import sys
 
 import pytest
@@ -34,3 +35,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+@pytest.fixture
+def moved_table(tmp_path_factory):
+    """``move(path)``: moves a table this engine wrote to a fresh root and
+    returns the new path. Its metadata and manifests still name the old
+    root, which no longer exists, so only ``allow_moved_paths=True``
+    reads it: the shape of the reference's checked-in tables."""
+
+    def move(path: str) -> str:
+        dst = str(tmp_path_factory.mktemp("moved") / os.path.basename(path))
+        shutil.move(path, dst)
+        return dst
+
+    return move

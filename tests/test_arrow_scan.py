@@ -124,6 +124,7 @@ def test_arrow_io_credentials_never_in_plan(spark, monkeypatch):
     the reader."""
     from pyspark.sql import types as T
 
+    from duckdb_iceberg_spark.plans.manifests import DeleteFileIndex, EntryStatus, FileContent, ManifestEntry
     from duckdb_iceberg_spark.sources.arrow_scan import (
         IcebergArrowDataSource,
         arrow_scan_df,
@@ -143,11 +144,8 @@ def test_arrow_io_credentials_never_in_plan(spark, monkeypatch):
         def to_struct_type(self):
             return T.StructType([T.StructField("x", T.LongType())])
 
-    class Entry:
-        def __init__(self, p):
-            self.file_path, self.sequence_number = p, 1
-
-    df = arrow_scan_df(spark, Sch(), [Entry("s3://bkt/a.parquet")], [], False)
+    data = ManifestEntry(EntryStatus.ADDED, FileContent.DATA, "s3://bkt/a.parquet", "PARQUET", 1, sequence_number=1)
+    df = arrow_scan_df(spark, Sch(), [data], DeleteFileIndex([]))
     qe = df._jdf.queryExecution().toString()
     assert "SUPERSECRETVALUE123" not in qe
     assert "TOKENTOKEN456" not in qe

@@ -996,8 +996,9 @@ def test_delete_application_event(spark, tmp_path, caplog):
     """Each delete application logs one DEBUG event on the package
     logger with what it applied: data files, position-delete files,
     deletion vectors, manifest delete cardinality, the URI exception
-    map's size and whether the delete side is broadcast. Files under a
-    root Spark percent-encodes are exceptions; ordinary ones are not."""
+    map's size and whether the delete side is broadcast. A root Spark
+    percent-encodes makes no exceptions: it is the one (stored prefix,
+    URI prefix) pair every file shares."""
     import logging
 
     from duckdb_iceberg_spark.writer import IcebergTable
@@ -1019,10 +1020,7 @@ def test_delete_application_event(spark, tmp_path, caplog):
         got[name] = (e.position_delete_files, e.deletion_vectors, e.deleted_rows, e.broadcast)
         scan = _live_files(path)
         assert e.data_files == len(scan.data_files())
-        if name == "plain":
-            assert e.uri_exceptions == 0
-        else:
-            assert e.uri_exceptions >= e.data_files > 0
+        assert e.uri_exceptions == 0 and e.data_files > 0
         assert df.count() == 40 - e.deleted_rows
     assert got["plain"][1:] == (0, 5, True) and got["plain"][0] >= 1
     assert got["spaced"][0] == 0 and got["spaced"][2:] == (3, True) and got["spaced"][1] >= 1

@@ -383,6 +383,33 @@ def test_add_files_imports_in_place(spark, tmp_path):
         t.add_files([f"{SF}/orders.parquet"])
 
 
+def test_add_files_rejects_unreadable_column_types(spark, tmp_path):
+    """A parquet file whose timestamp column holds INT64 nanoseconds
+    cannot be read as the table's microsecond timestamps: add_files
+    raises and adds no snapshot. The same rows in microseconds add."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_iceberg_spark import IcebergTable
+
+    t = IcebergTable.create(spark, str(tmp_path / "t"), spark.createDataFrame([], "k long, ts timestamp"))
+    snapshots = len(t.meta.snapshots)
+    ts = [datetime.datetime(2024, 1, d, tzinfo=datetime.timezone.utc) for d in (1, 2)]
+    for unit in ("ns", "us"):
+        pq.write_table(
+            pa.table({"k": pa.array([1, 2], pa.int64()), "ts": pa.array(ts, pa.timestamp(unit, tz="UTC"))}),
+            str(tmp_path / f"{unit}.parquet"),
+        )
+    with pytest.raises(ValueError, match=r"ts: timestamp\[ns, tz=UTC\] vs timestamp\[us, tz=UTC\]"):
+        t.add_files([str(tmp_path / "ns.parquet")])
+    assert len(IcebergTable(spark, str(tmp_path / "t")).meta.snapshots) == snapshots
+    t = IcebergTable(spark, str(tmp_path / "t"))
+    t.add_files([str(tmp_path / "us.parquet")])
+    assert sorted(r.ts.day for r in t.scan().collect()) == [1, 2]
+
+
 def test_rewrite_manifests_merges_metadata_only(spark, tmp_path):
     """rewrite_manifests collapses N manifests -> 1 per content type,
     preserves entry sequence numbers (delete scoping), touches zero
@@ -708,6 +735,32 @@ def test_memory_fs_scan_write_commit_cas(spark, tmp_path):
     t2.add_column("other", "int")
     with pytest.raises(CommitConflictError):
         t.add_column("clash", "int")  # stale handle: version already taken
+    MemoryFS.clear()
+
+
+def test_memory_fs_scans_hit_the_manifest_walk_cache(spark, tmp_path, monkeypatch):
+    """The manifest-walk cache keys on the manifest-list path, so a
+    table whose metadata lives on memory:// decodes its manifest list
+    and manifests on the first scan of a snapshot and none after."""
+    from duckdb_iceberg_spark import IcebergTable, iceberg_scan
+    from duckdb_iceberg_spark.plans import manifests
+    from duckdb_iceberg_spark.plans.fs import MemoryFS
+
+    MemoryFS.clear()
+    n = spark.read.parquet(f"{SF}/nation.parquet")
+    t = IcebergTable.create(spark, "memory://tables/cached", n.limit(0))
+    for i, part in enumerate(("n_nationkey < 10", "n_nationkey >= 10")):
+        n.filter(part).coalesce(1).write.parquet(str(tmp_path / f"d{i}"))
+        IcebergTable(spark, "memory://tables/cached").add_files([str(p) for p in (tmp_path / f"d{i}").glob("*.parquet")])
+    decoded = []
+    read = manifests.read_avro_file
+    monkeypatch.setattr(manifests, "read_avro_file", lambda p: decoded.append(p) or read(p))
+    counts = []
+    for _ in range(3):
+        before = len(decoded)
+        assert iceberg_scan(spark, "memory://tables/cached").count() == n.count()
+        counts.append(len(decoded) - before)
+    assert counts[0] == 3 and counts[1:] == [0, 0]  # the list and two manifests, once
     MemoryFS.clear()
 
 
