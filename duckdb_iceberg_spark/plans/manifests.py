@@ -10,13 +10,18 @@ We use them for file-level pruning, an intentional improvement.
 from __future__ import annotations
 
 import bisect
+import logging
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from enum import IntEnum
 from typing import Optional
 
 from .avro import read_avro_file
 from .table_metadata import IcebergSnapshot, TableMetadata, rebase_path
+
+_log = logging.getLogger("duckdb_iceberg_spark")
 
 
 class ManifestContent(IntEnum):
@@ -42,6 +47,7 @@ class ManifestFile:
     sequence_number: int
     content: ManifestContent
     partition_spec_id: int = 0
+    manifest_length: int = 0
     added_rows_count: int = 0
     existing_rows_count: int = 0
     # v3 row lineage (spec field 520): start of the _row_id space
@@ -87,6 +93,7 @@ def read_manifest_list(path: str, format_version: int) -> list[ManifestFile]:
         out.append(
             ManifestFile(
                 manifest_path=r["manifest_path"],
+                manifest_length=r.get("manifest_length") or 0,
                 # v1 manifest lists lack content/sequence_number -> DATA/0
                 sequence_number=r.get("sequence_number", 0) or 0,
                 content=ManifestContent(r.get("content", 0) or 0),
@@ -282,14 +289,50 @@ class DeleteFileIndex:
         )
 
 
-# LRU over resolved manifest walks, keyed on (manifest-list path, table
-# root, moved flag): sound on every filesystem because the spec makes a
-# manifest list immutable and writers give each a unique name. Callers
-# must treat the shared ManifestEntry objects as read-only
-# (load_table_scan performs the one rebase mutation BEFORE caching).
-# Bounded: 64 walks cover a session's working set of (table, snapshot).
-_SCAN_CACHE: dict = {}
-_SCAN_CACHE_MAX = 64
+# Bound of _METADATA_CACHE, in decoded entries (manifest-list records
+# and manifest entries alike). tracemalloc measured the bytes a cold
+# walk retains: 1.25 KB per entry on an 80-commit, 5-column table (160
+# entries, 199 KB). Sized at 4.3 KB per entry, a margin for tables with
+# more columns (more bounds per entry), 60,000 entries hold at most
+# ~256 MiB.
+_METADATA_CACHE_MAX_ENTRIES = 60_000
+
+
+class _MetadataCache:
+    """LRU of decoded metadata files, weighted by their entry count and
+    bounded by ``_METADATA_CACHE_MAX_ENTRIES``. Values are shared between
+    walks, so callers treat them as read-only."""
+
+    def __init__(self):
+        self._items = OrderedDict()  # key -> (entries, value)
+        self.entries = 0
+        self._lock = threading.Lock()
+
+    def get(self, key):
+        with self._lock:
+            hit = self._items.get(key)
+            if hit is None:
+                return None
+            self._items.move_to_end(key)
+            return hit[1]
+
+    def put(self, key, value, entries: int) -> None:
+        entries = max(1, entries)
+        with self._lock:
+            old = self._items.pop(key, None)
+            self.entries += entries - (old[0] if old else 0)
+            self._items[key] = (entries, value)
+            while self.entries > _METADATA_CACHE_MAX_ENTRIES and self._items:
+                self.entries -= self._items.popitem(last=False)[1][0]
+
+    def clear(self) -> None:
+        """Forget every file: for callers that rewrite metadata in place."""
+        with self._lock:
+            self._items.clear()
+            self.entries = 0
+
+
+_METADATA_CACHE = _MetadataCache()
 
 
 def load_table_scan(
@@ -300,25 +343,48 @@ def load_table_scan(
 ) -> IcebergTableScan:
     """Walk snapshot → manifest list → manifests, rebasing moved paths.
 
-    Manifests are decoded CONCURRENTLY (IO-bound Avro reads, thread
-    pool) — the reference walks them single-threaded
-    (iceberg.cpp:15-36); at thousands of manifests on object storage,
-    sequential metadata latency dominates scan planning. Order is
-    preserved. Walks are memoized on the manifest-list file identity
-    (see _SCAN_CACHE) so repeated scans of the same snapshot pay the
-    Avro decode once per process, the way a long-lived engine caches
-    its metastore."""
+    Every decoded file is kept in one LRU, ``_METADATA_CACHE``, keyed on
+    its immutable identity, so a walk decodes only the files no earlier
+    walk decoded: a repeated walk decodes nothing, and the first walk
+    after a commit decodes the new manifest list and the manifests that
+    commit wrote (the reference decodes every manifest on every scan,
+    iceberg.cpp:15-91). A manifest list is keyed on (rebased path, table
+    root, moved flag). A manifest is keyed on (rebased path,
+    ``manifest_length``, and the list record's ``sequence_number``,
+    ``first_row_id`` and ``partition_spec_id``, table root, moved flag):
+    its entries carry the sequence numbers and row ids inherited from
+    that record and paths rebased onto that root. Both kinds are
+    immutable by the spec and uniquely named by writers, on every
+    filesystem. Missing manifests are decoded in a thread pool when
+    there are several (IO-bound reads; at thousands of manifests on
+    object storage, sequential latency dominates planning), in manifest
+    order either way. Each walk logs one DEBUG "scan planning" event
+    with the manifests, files decoded, files served from the cache and
+    entries."""
+    root = (table_path, allow_moved_paths)
     ml_path = rebase_path(snapshot.manifest_list, table_path, allow_moved_paths)
-    ck = (ml_path, table_path, allow_moved_paths)
-    hit = _SCAN_CACHE.pop(ck, None)
-    if hit is not None:
-        _SCAN_CACHE[ck] = hit  # re-insert: LRU recency
-        return IcebergTableScan(snapshot=snapshot, manifests=hit)
-    manifests = read_manifest_list(ml_path, metadata.format_version)
+    manifests = _METADATA_CACHE.get((ml_path, *root))
+    decoded = 0
+    if manifests is None:
+        manifests = read_manifest_list(ml_path, metadata.format_version)
+        _METADATA_CACHE.put((ml_path, *root), manifests, len(manifests))
+        decoded = 1
+    keys = [
+        (
+            rebase_path(mf.manifest_path, table_path, allow_moved_paths),
+            mf.manifest_length,
+            mf.sequence_number,
+            mf.first_row_id,
+            mf.partition_spec_id,
+            *root,
+        )
+        for mf in manifests
+    ]
+    found = [_METADATA_CACHE.get(k) for k in keys]
+    missing = [i for i, es in enumerate(found) if es is None]
 
-    def _one(mf):
-        mpath = rebase_path(mf.manifest_path, table_path, allow_moved_paths)
-        entries = read_manifest_entries(mpath, metadata.format_version, mf)
+    def _one(i):
+        entries = read_manifest_entries(keys[i][0], metadata.format_version, manifests[i])
         for e in entries:
             e.raw_file_path = e.file_path
             e.file_path = rebase_path(e.file_path, table_path, allow_moved_paths)
@@ -326,16 +392,23 @@ def load_table_scan(
                 e.referenced_data_file = rebase_path(
                     e.referenced_data_file, table_path, allow_moved_paths
                 )
-        return (mf, entries)
+        return entries
 
-    if len(manifests) <= 1:
-        loaded = [_one(mf) for mf in manifests]
+    if len(missing) <= 1:
+        loaded = [_one(i) for i in missing]
     else:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(16, len(manifests))) as pool:
-            loaded = list(pool.map(_one, manifests))
-    _SCAN_CACHE[ck] = loaded
-    while len(_SCAN_CACHE) > _SCAN_CACHE_MAX:
-        _SCAN_CACHE.pop(next(iter(_SCAN_CACHE)))
-    return IcebergTableScan(snapshot=snapshot, manifests=loaded)
+        with ThreadPoolExecutor(max_workers=min(16, len(missing))) as pool:
+            loaded = list(pool.map(_one, missing))
+    for i, entries in zip(missing, loaded):
+        found[i] = entries
+        _METADATA_CACHE.put(keys[i], entries, len(entries))
+    decoded += len(missing)
+    if _log.isEnabledFor(logging.DEBUG):
+        event = dict(
+            manifests=len(manifests), decoded=decoded,
+            cached=1 + len(manifests) - decoded, entries=sum(len(es) for es in found),
+        )
+        _log.debug("scan planning: %s", event, extra=event)
+    return IcebergTableScan(snapshot=snapshot, manifests=list(zip(manifests, found)))

@@ -24,10 +24,10 @@ recorded once per file.
 
 Scale notes (100 TB design):
 - Manifest metadata is KB-MB scale even for huge tables; driver-side
-  parse is what every Iceberg runtime does. If a table had 100k+
-  manifests, `read_manifest_entries` calls could be fanned out with a
-  thread pool or a Spark job over avro bytes — structured so that's a
-  drop-in change.
+  parse is what every Iceberg runtime does. `load_table_scan` decodes
+  each manifest list and manifest once per process (an LRU bounded by
+  decoded entries), so a read after a commit decodes only what the
+  commit wrote, and the misses of one walk decode in a thread pool.
 - Delete files are a small fraction of data (cardinality known from
   manifest `record_count` sums — same numbers the reference injects
   as `explicit_cardinality`); we broadcast them for a shuffle-free
@@ -224,9 +224,11 @@ def _local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     """The one builder of driver-side DataFrames in this package.
 
     ``rows`` are tuples in ``schema`` order; ``schema`` is a StructType
-    or a DDL string. The rows go to the JVM as one Arrow table typed by
-    ``to_arrow_schema(schema)`` and become a ``LocalRelation`` — no
-    RDD, no Python worker — so Catalyst folds projections, filters and
+    or a DDL string. The rows become one Arrow table typed by
+    ``to_arrow_schema(schema)``, whose IPC stream goes to the JVM as one
+    bytes argument and becomes a ``LocalRelation`` — no RDD, no Python
+    worker, no temp file and no session-conf read: 4 py4j round trips
+    whatever the row count. Catalyst folds projections, filters and
     limits into it and ``collect()`` runs no Spark job, as the
     reference's in-process DataChunk listings do
     (iceberg_snapshots.cpp:100-124). ``TimestampType`` maps to Arrow
@@ -243,7 +245,15 @@ def _local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
         [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, arrow_schema) as writer:
+        writer.write_table(table)
+    jvm = _relation_jvm(spark)
+    stream = jvm.newChannel(jvm.ByteArrayInputStream(sink.getvalue().to_pybytes()))
+    jdf = jvm.toDataFrame(jvm.arrow.getBatchesFromStream(stream), schema.json(), spark._jsparkSession)
+    df = DataFrame(jdf, spark)
+    df._schema = schema
+    return df
 
 
 _DELETE_SCHEMA = T.StructType(
@@ -255,7 +265,7 @@ _DELETE_SCHEMA = T.StructType(
 
 # Memo of DataFrames the scan rebuilds often: iceberg_scan's base
 # relations (see the inline comment there) and `_where_predicate`'s
-# empty relations. Keyed by session applicationId so a restarted
+# empty relations. Keyed by the application id so a restarted
 # session never serves plans bound to a dead JVM.
 _READ_CACHE: dict = {}
 _READ_CACHE_MAX = 128
@@ -280,12 +290,12 @@ _log = logging.getLogger("duckdb_iceberg_spark")
 
 
 def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
-    """Per-SparkContext state of _parquet_relation and
-    _where_predicate: the JVM handles they call (each package hop of
-    ``spark._jvm.a.b.C`` is a py4j round trip), the FileStatusCache
-    client, and the LRU of manifest path ->
-    (qualified JVM Path, file URI or None until asked for) of the files
-    already resolved, sized ones fed to that client. Lives on the
+    """Per-SparkContext state of _parquet_relation, _local_df and
+    _where_predicate: the application id, the JVM handles they call
+    (each package hop of ``spark._jvm.a.b.C`` is a py4j round trip), the
+    FileStatusCache client, and the LRU of manifest path ->
+    (qualified path string, file URI or None until asked for) of the
+    files already resolved, sized ones fed to that client. Lives on the
     SparkContext instance, like session.py's JVM function cache, so a
     restarted context starts empty and never reuses references from a
     dead gateway."""
@@ -299,6 +309,7 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
         state = sc.__dict__.setdefault(
             "_graft_parquet_relation",
             SimpleNamespace(
+                app=sc.applicationId,
                 cache=ds.FileStatusCache.getOrCreate(spark._jsparkSession),
                 files=OrderedDict(),
                 lock=threading.Lock(),
@@ -312,9 +323,18 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
                     getattr(jvm.org.apache.spark.sql.catalyst.util, "CaseInsensitiveMap$"),
                     "MODULE$",
                 ),
-                Option=jvm.scala.Option,
+                option=jvm.scala.Option.apply,
                 none=jvm.scala.Option.empty(),
-                utils=jvm.PythonUtils,
+                toScalaMap=jvm.PythonUtils.toScalaMap,
+                # roots cross as one NUL-joined string (no path holds a
+                # NUL) and become a Seq[Path] JVM-side
+                nul=jvm.java.util.regex.Pattern.compile("\0"),
+                stringToPath=jvm.org.apache.hadoop.util.StringUtils.stringToPath,
+                wrapArray=jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray,
+                ByteArrayInputStream=jvm.java.io.ByteArrayInputStream,
+                newChannel=jvm.java.nio.channels.Channels.newChannel,
+                arrow=getattr(getattr(jvm.org.apache.spark.sql.execution.arrow, "ArrowConverters$"), "MODULE$"),
+                toDataFrame=jvm.org.apache.spark.sql.api.python.PythonSQLUtils.toDataFrame,
                 constant_folding=getattr(getattr(opt, "ConstantFolding$"), "MODULE$"),
                 simplify_casts=getattr(getattr(opt, "SimplifyCasts$"), "MODULE$"),
             ),
@@ -323,7 +343,7 @@ def _relation_jvm(spark: SparkSession) -> SimpleNamespace:
 
 
 def _resolve_files(spark: SparkSession, entries: list) -> dict:
-    """Manifest path -> (qualified JVM Path, URI or None) for each
+    """Manifest path -> (qualified path string, URI or None) for each
     entry's file, from the per-SparkContext LRU. A file seen for the
     first time costs a few py4j round trips to qualify and, when its
     manifest size is known, is put into the session's FileStatusCache;
@@ -340,7 +360,7 @@ def _resolve_files(spark: SparkSession, entries: list) -> dict:
         for p in new:
             jp = jvm.Path(p)
             jp = jp.getFileSystem(hconf).makeQualified(jp)
-            known[p] = (jp, None)
+            known[p] = (jp.toString(), None)
             if sizes[p]:
                 leaf = spark.sparkContext._gateway.new_array(jvm.FileStatus, 1)
                 leaf[0] = jvm.FileStatus(sizes[p], False, 1, 0, 0, jp)
@@ -357,16 +377,16 @@ def _file_uris(spark: SparkSession, entries: list) -> dict:
     for each entry's file: the qualified path re-parsed from its string
     form, as Spark's own ``SparkPath`` does (``qualified.toUri()`` would
     give ``file:///`` where Spark reports ``file:/``). Computed the first
-    time a file's URI is asked for (3 py4j round trips) and kept in the
+    time a file's URI is asked for (2 py4j round trips) and kept in the
     LRU beside its qualified path."""
     jvm = _relation_jvm(spark)
     uris = {}
-    for p, (jp, uri) in _resolve_files(spark, entries).items():
+    for p, (qualified, uri) in _resolve_files(spark, entries).items():
         if uri is None:
-            uri = jvm.SparkPath.fromPathString(jp.toString()).urlEncoded()
+            uri = jvm.SparkPath.fromPathString(qualified).urlEncoded()
             with jvm.lock:
                 if p in jvm.files:
-                    jvm.files[p] = (jp, uri)
+                    jvm.files[p] = (qualified, uri)
         uris[p] = uri
     return uris
 
@@ -396,6 +416,11 @@ def _parquet_relation(
     cache lacks (a no-op cache, an evicted entry). A file deleted from
     storage is therefore reported when the query runs, not here.
 
+    Once its files are resolved, a build makes a fixed number of py4j
+    round trips (about 15), however many files: the qualified roots
+    cross as one NUL-joined string, and ``new Path`` of each qualified
+    string JVM-side gives back the Path `_resolve_files` qualified.
+
     ``schema=None`` infers the data schema from the footers, as the
     reader does without a schema."""
     js = spark._jsparkSession
@@ -405,11 +430,11 @@ def _parquet_relation(
     opts = dict(options or {})
     if len(paths) == 1:
         opts["path"] = paths[0]  # the reader's single-path form
-    jopts = jvm.CaseInsensitiveMap.apply(jvm.utils.toScalaMap(opts))
+    jopts = jvm.CaseInsensitiveMap.apply(jvm.toScalaMap(opts))
     jschema = None if schema is None else js.parseDataType(schema.json())
+    jroots = jvm.stringToPath(jvm.nul.split("\0".join(roots[p][0] for p in paths)))
     index = jvm.InMemoryFileIndex(
-        js, jvm.utils.toSeq([roots[p][0] for p in paths]), jopts,
-        jvm.Option.apply(jschema), jvm.cache, jvm.none, jvm.none,
+        js, jvm.wrapArray(jroots), jopts, jvm.option(jschema), jvm.cache, jvm.none, jvm.none,
     )
     if jschema is None:
         jschema = jvm.parquet.inferSchema(js, jopts, index.allFiles()).get()
@@ -713,14 +738,11 @@ def iceberg_scan(
             # Memoize the base relation per (session, file set, schema):
             # Iceberg data files are immutable, so the list + pinned
             # schema fully identify the relation, and repeated scans of
-            # the same snapshot skip the relation build. With no
-            # listing left in it, the build still costs one py4j round
-            # trip per file plus the index's JVM work: on a 75-file
-            # table, a whole iceberg_scan() construction took 23-37 ms
-            # and 101 round trips rebuilt against 3-5 ms and 11 round
-            # trips from the memo (4-core x86 VM).
+            # the same snapshot skip the relation build (about 15 py4j
+            # round trips plus the index's JVM work, and a few more per
+            # file never resolved before).
             ck = (
-                spark.sparkContext.applicationId,
+                _relation_jvm(spark).app,
                 schema.to_struct_type().json(),
                 tuple(e.file_path for e in parquet_entries),
             )
@@ -757,7 +779,10 @@ def iceberg_scan(
         keys = _DataFileUris.of({e.raw_file_path or e.file_path: uris[e.file_path] for e in data_entries})
         parts = []
         if pos_delete_entries:
-            d = _parquet_relation(spark, pos_delete_entries, _DELETE_SCHEMA)
+            # memoized like the data relation: an append leaves the
+            # delete files, and so this relation, unchanged
+            ck = (_relation_jvm(spark).app, "position deletes", tuple(e.file_path for e in pos_delete_entries))
+            d = _memo(ck, lambda: _parquet_relation(spark, pos_delete_entries, _DELETE_SCHEMA))
             parts.append(d.select(keys.column(d["file_path"]).alias("file_path"), "pos"))
         if dv_entries:
             # v3 deletion vectors decode executor-side into the SAME
@@ -981,7 +1006,7 @@ def _where_predicate(spark: SparkSession, schema: IcebergSchema, where, time_as_
          else c.to_struct_field() for c in schema.columns]
     )
     jvm = _relation_jvm(spark)
-    key = ("where", spark.sparkContext.applicationId, row_type.json())
+    key = ("where", jvm.app, row_type.json())
     empty = _memo(key, lambda: _local_df(spark, [], row_type))
     plan = empty.filter(where)._jdf.queryExecution().analyzed()
     try:

@@ -891,8 +891,23 @@ class IcebergTable:
         already read for the row count). These become Iceberg manifest
         lower_bounds/upper_bounds (zone-map file skipping) and
         null_value_counts (residual-filter elimination needs a proven
-        zero null count — see sources/iceberg._residual_implied)."""
-        name_to_id = {c.name: c.field_id for c in self.schema.columns}
+        zero null count — see sources/iceberg._residual_implied).
+
+        A column's id is the footer's own field id, so a position-delete
+        file's ``file_path``/``pos`` stats land under the reserved ids
+        2147483546/2147483545 (what lets `DeleteFileIndex` scope the
+        file), never under a table column of the same name. A footer
+        without field ids (``add_files`` of foreign parquet) is keyed by
+        the table's column names, as the name mapping reads it."""
+        try:
+            name_to_id = {
+                f.name: int(f.metadata[b"PARQUET:field_id"])
+                for f in pqmeta.schema.to_arrow_schema()
+                if f.metadata and b"PARQUET:field_id" in f.metadata
+            }
+        except (ValueError, NotImplementedError, TypeError):  # a type pyarrow cannot map, a malformed id
+            name_to_id = {}
+        name_to_id = name_to_id or {c.name: c.field_id for c in self.schema.columns}
         lowers: dict[int, Any] = {}
         uppers: dict[int, Any] = {}
         nulls: dict[int, int] = {}
@@ -1198,7 +1213,12 @@ class IcebergTable:
 
         from .plans.bounds import serialize_bound
 
-        id_to_type = {c.field_id: c.spark_type for c in self.schema.columns}
+        # the table's columns and a position-delete file's file_path/pos
+        id_to_type = {
+            **{c.field_id: c.spark_type for c in self.schema.columns},
+            2147483546: T.StringType(),
+            2147483545: T.LongType(),
+        }
 
         def kv_bounds(bounds: dict | None) -> list | None:
             if not bounds:

@@ -175,15 +175,18 @@ def test_moved_table_matches_stored_path_not_file_name(spark, tmp_path, moved_ta
         assert [k for k, in _rows(iceberg_scan(spark, moved, allow_moved_paths=True, io=io))] == want, io
 
 
-def _four_file_v3(spark, path):
+def _four_file_v3(spark, path, format_version=3, deleted="k % 3 = 0"):
     """A v3 table of four data files holding keys 0-9, 10-19, 20-29 and
-    30-39, with deletion vectors on each."""
+    30-39, with deletion vectors on each (with ``format_version=2``,
+    position-delete files)."""
     from duckdb_iceberg_spark.writer import IcebergTable
 
-    t = IcebergTable.create(spark, path, spark.range(0, 10).selectExpr("id AS k").coalesce(1), format_version=3)
+    t = IcebergTable.create(
+        spark, path, spark.range(0, 10).selectExpr("id AS k").coalesce(1), format_version=format_version
+    )
     for lo in (10, 20, 30):
         IcebergTable(spark, path).append(spark.range(lo, lo + 10).selectExpr("id AS k").coalesce(1))
-    IcebergTable(spark, path).delete_where("k % 3 = 0")
+    IcebergTable(spark, path).delete_where(deleted)
     return t
 
 
@@ -221,3 +224,68 @@ def test_changelog_scans_only_files_a_changed_delete_touches(spark, tmp_path, mo
     rows = t.scan_changelog(before).collect()
     assert scanned == [1, 1]
     assert [(r.change_type, r.k) for r in rows] == [("delete", 11)]
+
+
+def _position_delete_events(caplog, df):
+    rows = _rows(df)
+    return [r.position_delete_files for r in caplog.records if hasattr(r, "position_delete_files")], rows
+
+
+def test_v2_where_scan_reads_no_delete_file_of_an_untouched_file(spark, tmp_path, caplog):
+    """v2 position-delete files carry ``file_path`` bounds, so a
+    ``where=`` scan that prunes to a file no delete touched reads no
+    position-delete file, and one that keeps the touched file reads it."""
+    path = str(tmp_path / "t")
+    _four_file_v3(spark, path, format_version=2, deleted="k >= 30 AND k % 3 = 0")
+    caplog.set_level(logging.DEBUG, logger="duckdb_iceberg_spark")
+    events, rows = _position_delete_events(caplog, iceberg_scan(spark, path, where="k < 10"))
+    assert (events, [k for k, in rows]) == ([], list(range(10)))
+    caplog.clear()
+    events, rows = _position_delete_events(caplog, iceberg_scan(spark, path, where="k >= 30"))
+    assert (events, [k for k, in rows]) == ([1], [31, 32, 34, 35, 37, 38])
+
+
+def test_v2_changelog_scans_only_the_file_a_delete_touches(spark, tmp_path, monkeypatch):
+    """After a v2 delete of one row of one file, the changelog reads that
+    common file on each side, not all four."""
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    _four_file_v3(spark, path, format_version=2)
+    t = IcebergTable(spark, path)
+    before = t.meta.latest_snapshot().snapshot_id
+    t.delete_where("k = 11")
+    t = IcebergTable(spark, path)
+    scanned = []
+    scan_files = IcebergTable._scan_files
+
+    def spy(self, snapshot_id, entries):
+        scanned.append(len(entries))
+        return scan_files(self, snapshot_id, entries)
+
+    monkeypatch.setattr(IcebergTable, "_scan_files", spy)
+    rows = t.scan_changelog(before).collect()
+    assert scanned == [1, 1]
+    assert [(r.change_type, r.k) for r in rows] == [("delete", 11)]
+
+
+def test_position_delete_stats_never_land_on_a_table_column(spark, tmp_path):
+    """A table with columns named ``pos`` and ``file_path``: its
+    position-delete file records bounds under the reserved ids only,
+    and its ``file_path`` bounds name the data file it deletes from."""
+    from duckdb_iceberg_spark.plans.manifests import load_table_scan
+    from duckdb_iceberg_spark.writer import IcebergTable
+
+    path = str(tmp_path / "t")
+    src = spark.createDataFrame([(i, f"f{i}") for i in range(10)], "pos long, file_path string").coalesce(1)
+    t = IcebergTable.create(spark, path, src)
+    IcebergTable(spark, path).delete_where("pos = 3")
+    t = IcebergTable(spark, path)
+    scan = load_table_scan(t.meta, t.meta.latest_snapshot(), path, False)
+    (d,) = scan.positional_delete_files()
+    (data,) = scan.data_files()
+    reserved = {PATH_ID, PATH_ID - 1}
+    assert set(d.lower_bounds) == set(d.upper_bounds) == reserved
+    assert not {c.field_id for c in t.schema.columns} & reserved
+    assert d.lower_bounds[PATH_ID].decode() == d.upper_bounds[PATH_ID].decode() == data.raw_file_path
+    assert sorted(p for p, _ in _rows(iceberg_scan(spark, path))) == [0, 1, 2, 4, 5, 6, 7, 8, 9]

@@ -813,14 +813,16 @@ def test_local_df_edge_cases(spark, tmp_path):
     assert (jobs, [tuple(r) for r in got]) == ([], [(1, "k", "ndv-long-v1", None)])
 
 
-def test_every_driver_built_dataframe_goes_through_local_df():
+def test_every_driver_built_dataframe_goes_through_local_df(spark):
     """The package builds driver-side DataFrames in one place:
-    sources.iceberg._local_df. Any other createDataFrame call would
-    bring back the pickled-RDD path whose actions each run a job."""
+    sources.iceberg._local_df, whose frames are LocalRelations. Any
+    createDataFrame call outside it would bring back the pickled-RDD
+    path whose actions each run a job."""
     import ast
     import pathlib
 
     import duckdb_iceberg_spark
+    from duckdb_iceberg_spark.sources.iceberg import _local_df
 
     root = pathlib.Path(duckdb_iceberg_spark.__file__).parent
     builders, others = [], []
@@ -841,7 +843,8 @@ def test_every_driver_built_dataframe_goes_through_local_df():
                 where = f"{f.relative_to(root)}:{node.lineno}"
                 (builders if id(node) in inside else others).append(where)
     assert others == []
-    assert [b.split(":")[0] for b in builders] == ["sources/iceberg.py"]
+    plan = _local_df(spark, [(1, "a")], "k long, v string")._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def _live_files(path):

@@ -966,9 +966,9 @@ def test_v3_lineage_manifest_level_inheritance(spark, tmp_path):
         )
         touched += 1
     assert touched == 2
-    from duckdb_iceberg_spark.plans.manifests import _SCAN_CACHE
+    from duckdb_iceberg_spark.plans.manifests import _METADATA_CACHE
 
-    _SCAN_CACHE.clear()  # files rewritten in place
+    _METADATA_CACHE.clear()  # files rewritten in place
     got = {
         r.n_nationkey: r._row_id
         for r in iceberg_scan(spark, path, row_lineage=True).collect()
